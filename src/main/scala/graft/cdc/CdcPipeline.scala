@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.sources.CdcDataSource
+
 /** End-to-end CDC pipeline wiring (SURVEY.md §3.1 stages 3–7 as ONE Spark
   * query): source → parse → enrich → sink.
   *
@@ -108,9 +110,13 @@ object CdcPipeline {
       availableNow: Boolean = true,
       fanOutByTable: Boolean = false,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+    // value-only schema: Enrich parses the raw line itself, and a
+    // micro-batch scan is never column-pruned, so the full table schema
+    // would parse every line into a typed envelope nothing reads
     var reader = spark.readStream.format("graft-cdc")
+      .schema(CdcDataSource.ValueOnlySchema)
     maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val in = reader.load(inDir).select("value")
+    val in = reader.load(inDir)
     val values =
       if (fanOutByTable) routedValues(in, cfg) else enrichedValues(in, cfg)
     var writer = values.writeStream

@@ -1,5 +1,7 @@
 package graft.cdc
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -110,7 +112,13 @@ final class VersionedState(spark: SparkSession, store: String,
     * leaves some non-anchor directories written with the previous
     * anchor version current — exactly the states the sequential form
     * could leave. Any publish failure propagates after all complete,
-    * failing the batch for re-delivery like the sequential form.
+    * failing the batch for re-delivery like the sequential form: the
+    * first one thrown, every other attached with `addSuppressed`.
+    *
+    * An interrupt of the caller (a stopping query) interrupts the other
+    * publishes too, but every thread is still joined before this returns
+    * — a writer left running could race the re-delivered batch's rewrite
+    * of its kind — and the caller's interrupt flag is restored.
     */
   def publishConcurrently(id: Long, kinds: (String, DataFrame)*): Unit = {
     require(kinds.forall(_._1 != anchor),
@@ -125,9 +133,29 @@ final class VersionedState(spark: SparkSession, store: String,
       t.start(); t
     }
     kinds.headOption.foreach { case (k, df) => run(k, df) }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    // the caller's own publish may have consumed its interrupt
+    var interrupted = errs.asScala.exists(isInterrupt)
+    if (interrupted) threads.foreach(_.interrupt())
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException =>
+          interrupted = true
+          threads.foreach(_.interrupt())
+        }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val failures = errs.asScala.toSeq
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
+
+  /** An interrupt, also one wrapped by Spark's job failure. */
+  private def isInterrupt(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[InterruptedException])
 
   /** RETENTION: delete all but the newest `keepLast` versions of every
     * kind under the store (time-travel reads — `readLatestBefore` /

@@ -33,10 +33,15 @@ import graft.cdc.CdcEnvelope
   *  - the TYPED envelope schema is the table schema — consumers see
   *    `before`/`after`/`source`/`op`/`ts_ms` columns directly, plus the
   *    raw `value` line for the P18 byte-faithful passthrough contract;
-  *  - column pruning reaches the parser ([[SupportsPushDownRequiredColumns]]
-  *    + Spark's nested-schema pruning): `select(op)` parses ONLY `op` out
-  *    of each line — at 100 TB the difference between tokenizing a field
-  *    and materializing the full nested envelope per row;
+  *  - in BATCH scans, column pruning reaches the parser
+  *    ([[SupportsPushDownRequiredColumns]] + Spark's nested-schema
+  *    pruning): `select(op)` parses ONLY `op` out of each line — at 100 TB
+  *    the difference between tokenizing a field and materializing the full
+  *    nested envelope per row. Micro-batch scans are NOT pruned: Spark
+  *    builds them from the full table schema, so a streaming reader that
+  *    needs only the raw line passes [[CdcDataSource.ValueOnlySchema]] as
+  *    its schema (as [[graft.cdc.CdcPipeline.startV2]] does) and no line
+  *    is parsed at all;
   *  - one [[InputPartition]] per log file: scan parallelism = file count,
   *    the natural parallel unit of a rolled change log;
   *  - a [[MicroBatchStream]] whose offset is the committed prefix of the
@@ -62,6 +67,12 @@ class CdcTableProvider extends TableProvider with DataSourceRegister {
 }
 
 object CdcDataSource {
+  /** Raw-line-only table schema: a scan over it splits lines and parses
+    * nothing. The way a streaming reader opts out of the typed envelope,
+    * since micro-batch scans get no column pruning.
+    */
+  val ValueOnlySchema: StructType = StructType(Seq(StructField("value", StringType)))
+
   /** Table schema = raw line + flattened envelope fields. */
   def schemaFor(options: CaseInsensitiveStringMap): StructType = {
     val payload = Option(options.get("payloadDdl"))
@@ -262,39 +273,14 @@ class CdcPartitionReader(file: String, required: StructType, timeZoneId: String,
     // them via the Hadoop codec factory, so parity requires we do too
     val codec =
       new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(p)
-    val in: java.io.InputStream =
-      if (codec == null) raw else codec.createInputStream(raw)
-    new java.io.BufferedInputStream(in, 64 * 1024)
+    if (codec == null) raw else codec.createInputStream(raw)
   }
-  private val lineBuf = new java.io.ByteArrayOutputStream(256)
+  private val lines = new LineSplitter(stream)
   private var current: InternalRow = _
-
-  /** Next line as RAW BYTES (terminator stripped), or null at EOF.
-    * Terminators match Hadoop's default LineReader — the `read.text`
-    * baseline the parity contract cites — exactly: `\n`, `\r\n`, AND a
-    * lone `\r` all end a line (a CR-terminated payload must split the
-    * same way in both readers). No String round-trip: decoding to java
-    * String would substitute U+FFFD for invalid UTF-8 — silent payload
-    * corruption under the P18 byte-faithful contract, which read.text
-    * (UTF8String straight over the bytes) does not do.
-    */
-  private def readLineBytes(): Array[Byte] = {
-    lineBuf.reset()
-    var b = stream.read()
-    if (b == -1) return null
-    while (b != -1 && b != '\n' && b != '\r') { lineBuf.write(b); b = stream.read() }
-    if (b == '\r') {
-      // swallow the LF of a CRLF pair; a lone CR terminates by itself
-      stream.mark(1)
-      val nxt = stream.read()
-      if (nxt != '\n' && nxt != -1) stream.reset()
-    }
-    lineBuf.toByteArray
-  }
 
   @scala.annotation.tailrec
   final override def next(): Boolean = {
-    val line = readLineBytes()
+    val line = lines.next()
     if (line == null) false
     // blank lines flow through like any other: the read.text +
     // CdcEnvelope.parse baseline emits them as empty-value/null-envelope
@@ -333,6 +319,80 @@ class CdcPartitionReader(file: String, required: StructType, timeZoneId: String,
 
   override def get(): InternalRow = current
   override def close(): Unit = stream.close()
+}
+
+/** Splits a byte stream into lines as RAW BYTES (terminator stripped),
+  * scanning a reused buffer in bulk. Terminators match Hadoop's default
+  * LineReader — the `read.text` baseline the parity contract cites —
+  * exactly: `\n`, `\r\n`, AND a lone `\r` all end a line (a CR-terminated
+  * payload must split the same way in both readers), including a `\r`
+  * that ends one buffer fill and an `\n` that starts the next. Blank lines
+  * come through as empty arrays, an unterminated last line as itself.
+  * No String round-trip: decoding to java String would substitute U+FFFD
+  * for invalid UTF-8 — silent payload corruption under the P18
+  * byte-faithful contract, which read.text (UTF8String straight over the
+  * bytes) does not do.
+  */
+private[sources] final class LineSplitter(in: java.io.InputStream,
+    bufferBytes: Int = LineSplitter.BufferBytes) {
+  require(bufferBytes > 0, s"bufferBytes must be positive, got $bufferBytes")
+  private val buf = new Array[Byte](bufferBytes)
+  private var pos = 0
+  private var end = 0
+  // the head of a line that spans buffer fills
+  private var carry = new Array[Byte](256)
+  private var carryLen = 0
+
+  /** Refills the buffer completely unless the stream ends first, so fill
+    * boundaries sit at fixed multiples of the buffer size whatever read
+    * sizes the stream returns. False at end of stream.
+    */
+  private def fill(): Boolean = {
+    pos = 0
+    end = in.readNBytes(buf, 0, buf.length)
+    end > 0
+  }
+
+  private def append(until: Int): Unit = {
+    val n = until - pos
+    if (carryLen + n > carry.length)
+      carry = java.util.Arrays.copyOf(carry, math.max(2 * carry.length, carryLen + n))
+    System.arraycopy(buf, pos, carry, carryLen, n)
+    carryLen += n
+  }
+
+  /** Index of the first terminator at or after `pos`, else `end`. */
+  private def terminator(): Int = {
+    var i = pos
+    while (i < end && buf(i) != '\n' && buf(i) != '\r') i += 1
+    i
+  }
+
+  /** Next line, or null at end of stream. */
+  def next(): Array[Byte] = {
+    if (pos == end && !fill()) return null
+    carryLen = 0
+    var i = terminator()
+    while (i == end) {
+      append(end)
+      // an unterminated last line
+      if (!fill()) return java.util.Arrays.copyOf(carry, carryLen)
+      i = terminator()
+    }
+    val cr = buf(i) == '\r'
+    val line =
+      if (carryLen == 0) java.util.Arrays.copyOfRange(buf, pos, i)
+      else { append(i); java.util.Arrays.copyOf(carry, carryLen) }
+    pos = i + 1
+    // swallow the LF of a CRLF pair, also across a refill; a lone CR
+    // terminates by itself
+    if (cr && (pos < end || fill()) && buf(pos) == '\n') pos += 1
+    line
+  }
+}
+
+private[sources] object LineSplitter {
+  val BufferBytes: Int = 64 * 1024
 }
 
 /** Stream position = committed prefix of the name-sorted file list. Two

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** V2 write path for the `graft-cdc` table: envelope JSON lines out, with
   * committed file names chosen to satisfy the SOURCE's contract.
@@ -402,6 +403,11 @@ class CdcLineWriter(dir: String, finalBase: String,
     }
   }
 
+  /** [[sanitize]] per distinct raw key: a task sees few routing keys but
+    * one per row.
+    */
+  private val safeKeys = new java.util.HashMap[UTF8String, String]()
+
   override def write(record: InternalRow): Unit = {
     // a JSON-lines log cannot represent a null payload, and silently
     // dropping CDC records is the worst failure mode — fail the task
@@ -417,7 +423,17 @@ class CdcLineWriter(dir: String, finalBase: String,
         // (what routedValues emits for unroutable records); that name is
         // reserved — see sanitize
         if (record.isNullAt(i)) "_unrouted"
-        else sanitize(record.getUTF8String(i).toString)
+        else {
+          val raw = record.getUTF8String(i)
+          val hit = safeKeys.get(raw)
+          if (hit != null) hit
+          else {
+            val safe = sanitize(raw.toString)
+            // copy: the key may point into a row buffer the caller reuses
+            safeKeys.put(raw.copy(), safe)
+            safe
+          }
+        }
     }
     val p = parts.getOrElseUpdate(key,
       new Part(if (partIdx.isEmpty) None else Some(key)))

@@ -108,6 +108,58 @@ class CdcPipelineSpec extends SparkSpec {
     assert(raw.sameElements(Array("garbage{{{")))
   }
 
+  test("startV2 scans the raw line only (readSchema struct<value:string>) " +
+      "and writes the same bytes per table as the text-transport start") {
+    val in = tmpDir("cdc-v2scan-in")
+    val orders = event.replace("\"table\":\"customers\"", "\"table\":\"orders\"")
+    Files.write(Paths.get(in, "00000.jsonl"),
+      Seq(event.format(1, 1, 1, 1), orders.format(2, 2, 2, 2), "garbage{{{",
+        event.format(3, 3, 3, 3), "", "").mkString("\n").getBytes("UTF-8") ++
+        Array(0xFF.toByte, '{'.toByte, '\n'.toByte))
+    val cfg = EnrichConfig(processingTimeIso = Some("2026-01-01T00:00:00"))
+    val outText = tmpDir("cdc-v2scan-text")
+    CdcPipeline.start(spark, in, outText, tmpDir("cdc-v2scan-text-ck"), cfg,
+      fanOutByTable = true).awaitTermination()
+    val outV2 = tmpDir("cdc-v2scan-v2")
+    val q = CdcPipeline.startV2(spark, in, outV2, tmpDir("cdc-v2scan-v2-ck"),
+      cfg, fanOutByTable = true)
+    q.awaitTermination()
+
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val scans = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan.collect {
+        case s: MicroBatchScanExec => s.scan.readSchema().simpleString
+      }
+    assert(scans == Seq("struct<value:string>"), scans)
+
+    // both sinks end every line, the last one too, with '\n'
+    def splitLines(bytes: Array[Byte]): Seq[Seq[Byte]] = {
+      val lines = Seq.newBuilder[Seq[Byte]]
+      var start = 0
+      bytes.indices.foreach { i =>
+        if (bytes(i) == '\n') { lines += bytes.slice(start, i).toSeq; start = i + 1 }
+      }
+      lines.result().sortBy(_.mkString(","))
+    }
+    // table -> its output lines as raw bytes, sorted
+    def tables(out: String, dirPrefix: String): Map[String, Seq[Seq[Byte]]] =
+      new java.io.File(out).listFiles().toSeq
+        .filter(d => d.isDirectory && d.getName != "_spark_metadata")
+        .map { d =>
+          val bytes = d.listFiles().toSeq
+            .filter(f => f.isFile && !f.getName.startsWith(".") &&
+              !f.getName.startsWith("_"))
+            .flatMap(f => Files.readAllBytes(f.toPath))
+          d.getName.stripPrefix(dirPrefix) -> splitLines(bytes.toArray)
+        }.toMap
+    val text = tables(outText, "source_table=")
+    val v2 = tables(outV2, "")
+    assert(text.keySet == Set("customers", "orders", "_unrouted"), text.keySet)
+    assert(v2 == text)
+    assert(text("customers").length == 2 && text("_unrouted").length == 3)
+  }
+
   test("snapshot() wraps batch rows as op=r envelopes through enrichment") {
     import spark.implicits._
     val table = Seq((1, "Ann", "ann@x.org"), (2, "Bob", "bob@y.io"))

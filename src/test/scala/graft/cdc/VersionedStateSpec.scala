@@ -190,4 +190,67 @@ class VersionedStateSpec extends SparkSpec {
       vs.publishConcurrently(2L, "agg" -> df(Seq(("x", 9L))))
     }
   }
+
+  /** A frame whose write job fails at run time with `msg`. */
+  private def failing(msg: String) = {
+    import org.apache.spark.sql.functions.{coalesce, lit, raise_error}
+    spark.range(1).select(
+      coalesce(raise_error(lit(msg)).cast("long"), lit(1L)).as("x"))
+  }
+
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).toSeq
+
+  test("publishConcurrently: when two kinds fail, both errors surface " +
+      "(one thrown, the other suppressed on it)") {
+    val vs = new VersionedState(spark, s"$store-conc-fail", "agg")
+    val e = intercept[Throwable] {
+      vs.publishConcurrently(1L, "aState" -> failing("boom-aState"),
+        "bState" -> failing("boom-bState"), "cState" -> df(Seq(("c", 1L))))
+    }
+    def failed(t: Throwable) = Seq("aState", "bState")
+      .filter(k => messages(t).exists(_.contains(s"boom-$k")))
+    // Spark may attach suppressed traces of its own; ours is the other kind
+    assert(failed(e).length == 1 &&
+      e.getSuppressed.toSeq.flatMap(failed).toSet ==
+        Set("aState", "bState") -- failed(e),
+      (e +: e.getSuppressed.toSeq).flatMap(messages).mkString("\n"))
+    assert(vs.latestVersion.isEmpty)
+  }
+
+  test("publishConcurrently: a caller interrupted while it waits keeps " +
+      "its interrupt flag, and every publish is joined before it returns") {
+    import org.apache.spark.sql.functions.udf
+    val vs = new VersionedState(spark, s"$store-conc-intr", "agg")
+    val slowOne = udf { () => Thread.sleep(8000); 1L }.asNondeterministic()
+    val caller = Thread.currentThread()
+    // interrupt the caller once its own publish is done and it is joining
+    // the other one's thread (an interrupt during a Spark job may be
+    // consumed inside Spark or Hadoop, which is not this contract)
+    def joiningPublisher: Boolean = {
+      val st = caller.getStackTrace
+      st.indices.dropRight(1).exists(i =>
+        st(i).getClassName == "java.lang.Thread" &&
+          st(i).getMethodName == "join" &&
+          st(i + 1).getClassName.startsWith(classOf[VersionedState].getName))
+    }
+    val interrupter = new Thread(() => {
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!joiningPublisher && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      caller.interrupt()
+    })
+    interrupter.start()
+    try vs.publishConcurrently(1L, "aState" -> df(Seq(("a", 1L))),
+      "bState" -> spark.range(1).select(slowOne().as("x")))
+    catch { case _: Throwable => () } // the interrupted publish may fail
+    finally {
+      interrupter.join()
+      assert(Thread.interrupted(), "interrupt flag was swallowed")
+    }
+    assert(!Thread.getAllStackTraces.keySet.toArray.exists(
+      _.asInstanceOf[Thread].getName == "graft-publish-bState-v1"),
+      "a publisher thread outlived the call")
+  }
 }

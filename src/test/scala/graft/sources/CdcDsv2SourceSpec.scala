@@ -60,6 +60,112 @@ class CdcDsv2SourceSpec extends SparkSpec {
     assert(v2.length == 4, s"lone CR must terminate a line: $v2")
   }
 
+  /** Writes `bytes` as one log file and checks that the V2 scan yields
+    * exactly `expected`, byte for byte and in order, and that `read.text`
+    * yields the same.
+    */
+  private def assertSplitParity(name: String, bytes: Array[Byte],
+      expected: Seq[Array[Byte]]): Unit = {
+    val dir = tmpDir(name)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "00000.jsonl"), bytes)
+    def lines(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("value").cast("binary")).collect()
+        .map(_.getAs[Array[Byte]](0).toSeq).toSeq
+    val v2 = lines(spark.read.format("graft-cdc").load(dir))
+    val text = lines(spark.read.text(dir))
+    def show(ls: Seq[Seq[Byte]]) = ls.map(l => s"${l.length}B").mkString(",")
+    assert(v2 == text, s"v2=${show(v2)} read.text=${show(text)}")
+    assert(v2 == expected.map(_.toSeq), s"v2=${show(v2)}")
+  }
+
+  private val B = LineSplitter.BufferBytes
+  private def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+  private def pad(c: Char, n: Int): Array[Byte] = Array.fill(n)(c.toByte)
+
+  test("split across read buffers: a line longer than the buffer") {
+    val long = pad('x', 2 * B + 17)
+    assertSplitParity("dsv2_split_long",
+      utf8(s"$good\n") ++ long ++ utf8(s"\n$del\n"),
+      Seq(utf8(good), long, utf8(del)))
+  }
+
+  test("split across read buffers: \\r ends one buffer, its \\n starts the " +
+      "next; a lone \\r at a buffer end terminates by itself") {
+    val head = pad('p', B - 1) // its \r is the buffer's last byte
+    assertSplitParity("dsv2_split_crlf",
+      head ++ utf8(s"\r\n$del\n"), Seq(head, utf8(del)))
+    assertSplitParity("dsv2_split_cr",
+      head ++ utf8(s"\r$del\n"), Seq(head, utf8(del)))
+  }
+
+  test("split across read buffers: an unterminated last line") {
+    val tail = pad('y', B + 5) // spans a refill, then the stream ends
+    assertSplitParity("dsv2_split_tail",
+      utf8(s"$good\n") ++ tail, Seq(utf8(good), tail))
+    assertSplitParity("dsv2_split_tail_short",
+      utf8(s"$good\n$del"), Seq(utf8(good), utf8(del)))
+  }
+
+  test("split across read buffers: consecutive blank lines") {
+    val head = pad('b', B - 2) // the two \n sit on both sides of a refill
+    assertSplitParity("dsv2_split_blank",
+      head ++ utf8(s"\n\n\n$good\n\r\n\r\r$del\n"),
+      Seq(head, Array.empty[Byte], Array.empty[Byte], utf8(good),
+        Array.empty[Byte], Array.empty[Byte], Array.empty[Byte], utf8(del)))
+  }
+
+  test("split across read buffers: an invalid UTF-8 byte comes through " +
+      "unchanged") {
+    // 0xFF is never valid UTF-8; 0xE2 0x82 is a truncated 3-byte sequence.
+    // The line straddles a refill so the bytes are copied from the carry.
+    val invalid = pad('u', B - 3) ++ Array(0xFF.toByte, 'v'.toByte,
+      0xE2.toByte, 0x82.toByte, 'w'.toByte)
+    assertSplitParity("dsv2_split_utf8",
+      invalid ++ utf8(s"\n$bad\n"), Seq(invalid, utf8(bad)))
+  }
+
+  test("LineSplitter with tiny buffers and short reads splits like a " +
+      "whole-input reference") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // the reference: Hadoop LineReader's rules over the whole input
+    def reference(in: Array[Byte]): Seq[Seq[Byte]] = {
+      val out = Seq.newBuilder[Seq[Byte]]
+      var i = 0
+      var start = 0
+      while (i < in.length) {
+        if (in(i) == '\n' || in(i) == '\r') {
+          out += in.slice(start, i).toSeq
+          if (in(i) == '\r' && i + 1 < in.length && in(i + 1) == '\n') i += 1
+          start = i + 1
+        }
+        i += 1
+      }
+      if (start < in.length) out += in.slice(start, in.length).toSeq
+      out.result()
+    }
+    // a stream that hands out at most `chunk` bytes per read
+    def trickle(in: Array[Byte], chunk: Int) =
+      new java.io.ByteArrayInputStream(in) {
+        override def read(b: Array[Byte], off: Int, len: Int): Int =
+          super.read(b, off, math.min(len, chunk))
+      }
+    val byteGen = Gen.frequency(4 -> Gen.choose('a', 'c').map(_.toByte),
+      2 -> Gen.const('\n'.toByte), 2 -> Gen.const('\r'.toByte),
+      1 -> Gen.const(0xFF.toByte))
+    (0 until 200).foreach { i =>
+      val in = Gen.listOf(byteGen)
+        .apply(Gen.Parameters.default.withSize(40), Seed(9100L + i)).get.toArray
+      for (bufferBytes <- Seq(1, 2, 3, 7); chunk <- Seq(1, 5)) {
+        val split = new LineSplitter(trickle(in, chunk), bufferBytes)
+        val got = Iterator.continually(split.next()).takeWhile(_ != null)
+          .map(_.toSeq).toSeq
+        assert(got == reference(in),
+          s"seed ${9100L + i}, buffer $bufferBytes, chunk $chunk")
+      }
+    }
+  }
+
   test("malformed line: raw value preserved, typed fields all null") {
     val dir = tmpDir("dsv2_bad")
     writeFile(dir, "00000.jsonl", bad)
