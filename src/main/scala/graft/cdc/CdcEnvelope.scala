@@ -61,11 +61,15 @@ object CdcEnvelope {
     * records the reference's try/except passes through unmodified. This is a
     * narrow per-row transform: no shuffle, whole-stage-codegen friendly.
     *
-    * Exactly two JSON walks per row: [[graft.functions.EnvelopeStats]]
-    * extracts every *dynamic* fact the enrichment needs (root-is-object,
+    * Two JSON walks per row: [[graft.functions.EnvelopeStats]] extracts
+    * every *dynamic* fact the enrichment needs (root-is-object,
     * before/after null-ness, `after` key count, email key/value/JSON-type,
     * `source` dict truthiness) in one Jackson streaming pass, and `from_json`
     * builds the typed envelope — gated on validity so invalid rows skip it.
+    * This is the reference formulation (`Enrich.apply`, and every reader of
+    * typed envelope columns); the streaming pipeline itself
+    * (`CdcPipeline`) makes ONE pass per envelope, through
+    * [[graft.functions.EnrichKernel]], which runs the same walk.
     */
   def parse(df: DataFrame, payload: StructType = customersPayload): DataFrame =
     df.withColumn("stats", graft.functions.EnvelopeStats(col("value")))

@@ -38,7 +38,11 @@ object CdcMaterialize {
     * non-null instead, exactly `desc`'s nulls-last). Full-ordering ties
     * carry an identical fingerprint, hence an identical payload, so
     * `min_by`'s keep-first-buffer tie behavior cannot surface
-    * nondeterminism. Semantics pinned in `CdcMaterializeSpec` (supersede
+    * nondeterminism. Negation reverses the order of every `Long` except
+    * `Long.MinValue`, so negative `lsn`/`ts_ms` values rank correctly;
+    * the one condition is that neither is `Long.MinValue`, whose
+    * negation throws under ANSI (Spark 4's default) instead of ranking
+    * silently wrong. Semantics pinned in `CdcMaterializeSpec` (supersede
     * / delete-wins / null-lsn snapshot vs live lsn / re-snapshot tie),
     * with a plan witness that no Window node remains.
     */

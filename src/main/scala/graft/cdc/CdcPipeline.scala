@@ -21,28 +21,43 @@ import graft.sources.CdcDataSource
   */
 object CdcPipeline {
 
-  /** P19 (reference py:100 per-record audit log) as Spark observable
+  /** The whole per-record chain — parse, enrich, serialize, route — as one
+    * [[graft.functions.EnrichKernel]] pass per envelope, byte-identical to
+    * `Enrich.apply` plus the routing below (`EnrichKernelParitySpec`).
+    * The P16 context columns are used when the source provides them, as
+    * in [[Enrich.processingMetadataStruct]].
+    *
+    * P19 (reference py:100 per-record audit log) as Spark observable
     * metrics: per-micro-batch enriched/passthrough counts surfaced through
     * `StreamingQueryProgress.observedMetrics("cdc_enrich")` — zero-cost
-    * accumulator aggregation instead of a per-record log line.
+    * accumulator aggregation instead of a per-record log line. Passthrough
+    * = output bytes are the input bytes (invalid JSON or one of the
+    * reference's raise paths — see Enrich.apply); null input (e.g. a Kafka
+    * tombstone) is passthrough too, so n_enriched + n_passthrough ==
+    * n_total. `n_fallback` counts the rows whose typed fields the kernel
+    * took from Spark's own JSON parser instead of its fast path.
     */
-  // passthrough = output bytes are the input bytes (invalid JSON or the
-  // reference's email-TypeError fallback — see Enrich.apply). Null input
-  // (e.g. a Kafka tombstone) is passthrough too: coalesce keeps the
-  // n_enriched + n_passthrough == n_total invariant, which a bare
-  // null === null comparison would break.
-  private def isPassthrough =
-    coalesce(col("value_out") === col("value"), lit(true))
-
-  private def enriched(in: DataFrame, cfg: EnrichConfig): DataFrame =
-    Enrich(in, cfg)
+  private def enriched(in: DataFrame, cfg: EnrichConfig): DataFrame = {
+    // the session's to_json null-field policy, which the enrichment's
+    // serialization followed
+    val ignoreNullFields = in.sparkSession.conf
+      .get("spark.sql.jsonGenerator.ignoreNullFields", "true").toBoolean
+    val k = graft.functions.EnrichKernel(col("value"),
+      cfg.processingTimeIso.map(lit).getOrElse(current_timestamp()),
+      Enrich.context(in, "message_id"), Enrich.context(in, "topic"),
+      Enrich.context(in, "partition"),
+      cfg.functionName, cfg.functionVersion, ignoreNullFields)
+    val passthrough = col("enriched.passthrough")
+    in.select(k.as("enriched"))
       .observe("cdc_enrich",
         count(lit(1)).as("n_total"),
-        count(when(!isPassthrough, 1)).as("n_enriched"),
-        count(when(isPassthrough, 1)).as("n_passthrough"))
+        count(when(!passthrough, 1)).as("n_enriched"),
+        count(when(passthrough, 1)).as("n_passthrough"),
+        count(when(col("enriched.fallback"), 1)).as("n_fallback"))
+  }
 
   private def enrichedValues(in: DataFrame, cfg: EnrichConfig): DataFrame =
-    enriched(in, cfg).select(col("value_out").as("value"))
+    enriched(in, cfg).select(col("enriched.value").as("value"))
 
   /** Per-table output routing column — the sink analogue of the reference's
     * one-topic-per-table layout (`docs/setup-guide.md:33-35`). Passthrough
@@ -56,17 +71,10 @@ object CdcPipeline {
     * can never shadow a reserved bucket and silently interleave enriched
     * records with passthrough bytes.
     */
-  def routedValues(in: DataFrame, cfg: EnrichConfig): DataFrame = {
-    val table = col("envelope.source.table")
-    val safeTable = when(table.startsWith("_"),
-      concat(lit("t"), table, lit("-"), substring(md5(table), 1, 8)))
-      .otherwise(table)
+  def routedValues(in: DataFrame, cfg: EnrichConfig): DataFrame =
     enriched(in, cfg).select(
-      when(isPassthrough, lit("_unrouted"))
-        .otherwise(coalesce(safeTable, lit("_unknown")))
-        .as("source_table"),
-      col("value_out").as("value"))
-  }
+      col("enriched.source_table").as("source_table"),
+      col("enriched.value").as("value"))
 
   /** Streaming pipeline: JSON-lines dir → enrich → JSON-lines dir.
     * `Trigger.AvailableNow` drains what exists then stops (deterministic for

@@ -1,6 +1,7 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.DateFormatClass
 import org.apache.spark.sql.functions._
 
 /** Configuration for the enrichment transform.
@@ -33,15 +34,43 @@ case class EnrichConfig(
   *   - non-JSON-object input passes through unchanged (py:104-107)
   *   - an `email` key with any non-string value passes through unchanged
   *     (py:85 `"@" in email` TypeError → outer except, py:104-107)
+  *   - a truthy `ts_ms` outside years 1–9999 passes through unchanged
+  *     (py:50 `datetime.fromtimestamp` raises → outer except)
+  *
+  * The streaming pipeline (`CdcPipeline`) runs this transform as one fused
+  * expression, [[graft.functions.EnrichKernel]], proven byte-identical to
+  * it; this formulation stays the reference and serves the callers that
+  * read its typed `envelope`/`enrichment` columns.
   */
 object Enrich {
+
+  /** `date_format` pinned to UTC whatever `spark.sql.session.timeZone`
+    * says: the output is defined as UTC (SURVEY.md §7.3#1).
+    */
+  private def utcFormat(t: Column, pattern: String): Column =
+    GraftSqlBridge.column(DateFormatClass(GraftSqlBridge.expression(t),
+      GraftSqlBridge.expression(lit(pattern)), Some("UTC")))
 
   /** Python `datetime.isoformat()` of an epoch-millis column, UTC. */
   def isoFromMillis(tsMs: Column): Column = {
     val t = timestamp_millis(tsMs)
-    when(tsMs % 1000 === 0, date_format(t, "yyyy-MM-dd'T'HH:mm:ss"))
-      .otherwise(date_format(t, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+    when(tsMs % 1000 === 0, utcFormat(t, "yyyy-MM-dd'T'HH:mm:ss"))
+      .otherwise(utcFormat(t, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
   }
+
+  /** Python `ts_ms` truthiness (py:50): the `timestamps` struct exists. */
+  private def tsTruthy(tsMs: Column): Column = tsMs.isNotNull && tsMs =!= 0
+
+  /** `datetime`'s years 1–9999 in epoch millis, UTC. A truthy `ts_ms`
+    * outside them makes `datetime.fromtimestamp` raise (py:50), and the
+    * outer `except` passes the raw line through (py:104-107);
+    * `timestamp_millis` would instead overflow past about ±9.2e15 and fail
+    * the query.
+    */
+  val MinTsMs: Long = -62135596800000L
+  val MaxTsMs: Long = 253402300799999L
+
+  private def tsInRange(tsMs: Column): Column = tsMs.between(MinTsMs, MaxTsMs)
 
   /** P3/P4: op code → (code, label, is_mutation). */
   def operationStruct(op: Column): Column = struct(
@@ -58,8 +87,8 @@ object Enrich {
   def timestampsStruct(tsMs: Column, cfg: EnrichConfig): Column = {
     val processing = cfg.processingTimeIso
       .map(lit)
-      .getOrElse(date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-    when(tsMs.isNotNull && tsMs =!= 0, struct(
+      .getOrElse(utcFormat(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+    when(tsTruthy(tsMs) && tsInRange(tsMs), struct(
       tsMs.as("event_time_ms"),
       isoFromMillis(tsMs).as("event_time_iso"),
       processing.as("processing_time_iso")))
@@ -110,16 +139,17 @@ object Enrich {
   /** P16: runtime/context metadata. `topic`/`partition` columns are used when
     * the source provides them (Kafka metadata columns), else null literals.
     */
-  def processingMetadataStruct(df: DataFrame, cfg: EnrichConfig): Column = {
-    def opt(name: String): Column =
-      if (df.columns.contains(name)) col(name).cast("string") else lit(null).cast("string")
+  def processingMetadataStruct(df: DataFrame, cfg: EnrichConfig): Column =
     struct(
       lit(cfg.functionName).as("function_name"),
       lit(cfg.functionVersion).as("function_version"),
-      opt("message_id").as("message_id"),
-      opt("topic").as("topic"),
-      opt("partition").as("partition_id"))
-  }
+      context(df, "message_id").as("message_id"),
+      context(df, "topic").as("topic"),
+      context(df, "partition").as("partition_id"))
+
+  /** A P16 context column as a string: `df`'s own when present, else null. */
+  private[cdc] def context(df: DataFrame, name: String): Column =
+    if (df.columns.contains(name)) col(name).cast("string") else lit(null).cast("string")
 
   /** Full enrichment over a parsed stream (output of [[CdcEnvelope.parse]]):
     * adds an `enrichment` struct column (P2–P16).
@@ -156,9 +186,13 @@ object Enrich {
     //    `stats.after_raises`;
     //  - `source` present as anything but an object, null included
     //    (source.get AttributeError at the final log line, py:101) —
-    //    `stats.source_raises`.
+    //    `stats.source_raises`;
+    //  - a truthy `ts_ms` outside years 1–9999 (datetime.fromtimestamp
+    //    ValueError/OverflowError, py:50).
+    val tsMs = col("envelope.ts_ms")
     val pyRaises = coalesce(col("stats.email_nonstring"), lit(false)) ||
-      col("stats.after_raises") || col("stats.source_raises")
+      col("stats.after_raises") || col("stats.source_raises") ||
+      (tsTruthy(tsMs) && !tsInRange(tsMs))
     parsed.withColumn("value_out",
       when(col("envelope").isNull || pyRaises,
         col("value"))

@@ -138,8 +138,7 @@ final class FeedConsumer(
           // distinct upstream versions this trigger carried: a
           // constant-size driver boundary (generations per trigger),
           // never data-sized
-          val versions = b.select(col("feed_version")).distinct()
-            .collect().map(_.getLong(0)).sorted.toSeq
+          val versions = FeedConsumer.feedVersions(b, cid)
           val prev = state.readLatestBefore("down", cid)
             .getOrElse(emptyDown(b))
           // resolve the frontier: a retention gap either re-seeds from
@@ -233,6 +232,23 @@ object FeedConsumer {
   private[cdc] def appliedBefore(state: VersionedState, cid: Long): Long =
     state.readLatestBefore("applied", cid)
       .map(_.head().getLong(0)).getOrElse(-1L)
+
+  /** The distinct `feed_version`s of consumer batch `batchId`, sorted —
+    * the same one `collect` the consumers always made. Every feed row
+    * names the producer generation that wrote it; a null would otherwise
+    * surface as a bare NPE here, or be dropped silently by the
+    * `feed_version > applied` filter and skipped by `max_by`, so it fails
+    * loudly instead.
+    */
+  private[graft] def feedVersions(batch: DataFrame, batchId: Long): Seq[Long] = {
+    val rows = batch.select(col("feed_version")).distinct().collect()
+    if (rows.exists(_.isNullAt(0)))
+      throw new IllegalStateException(
+        s"feed consumer batch $batchId carries a null feed_version: every " +
+          "feed row must name the producer generation that published it " +
+          "(invariant: feed_version is non-null)")
+    rows.map(_.getLong(0)).sorted.toSeq
+  }
 
   /** The retention-gap test: Some(missing) iff the batch carries a
     * version above `applied` while some generation in between is

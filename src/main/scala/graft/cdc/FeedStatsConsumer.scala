@@ -82,8 +82,7 @@ final class FeedStatsConsumer(
         val b = batch.cache()
         try {
           val applied = FeedConsumer.appliedBefore(state, cid)
-          val versions = b.select(col("feed_version")).distinct()
-            .collect().map(_.getLong(0)).sorted.toSeq
+          val versions = FeedConsumer.feedVersions(b, cid)
           FeedConsumer.gap(applied, versions).foreach(missing =>
             throw new IllegalStateException(
               s"feed retention outran this consumer: upstream " +
@@ -106,8 +105,10 @@ final class FeedStatsConsumer(
           // feed_version (optimization guide §2.3), not a row_number
           // window: it partial-aggregates map-side and skips the sort.
           // Deterministic because (key, feed_version) is unique — one
-          // image per key per generation — so ties cannot occur; the
-          // original column order is preserved on the way out.
+          // image per key per generation — and never null (feedVersions
+          // above fails the batch on a null, which max_by would skip), so
+          // ties cannot occur; the original column order is preserved on
+          // the way out.
           val nonKey = freshRows.columns.filterNot(upstreamKeys.contains)
           val latest = freshRows
             .groupBy(upstreamKeys.map(col): _*)

@@ -3337,9 +3337,10 @@ object Cdc {
       col("c_name").as("name"))
     // deterministic ¼ subset: the gate checks routing + payload
     // integrity, not volume (q_cdc_enrich already runs the full-table
-    // envelope round-trip); each record pays 5 JSON passes, so the
-    // subset keeps the bench honest about per-record cost without
-    // making this the suite's slowest query
+    // envelope round-trip); each record pays the enrich pass plus a
+    // get_json_object re-extraction, so the subset keeps the bench
+    // honest about per-record cost without making this the suite's
+    // slowest query
     val ords = Tables.orders(s, d)
       .filter(col("o_orderkey") % 4 === 1)
       .select(

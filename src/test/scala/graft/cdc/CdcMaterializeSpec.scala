@@ -86,4 +86,25 @@ class CdcMaterializeSpec extends SparkSpec {
       assert(got.map(_.getString(1)).toSeq == Seq(expect))
     }
   }
+
+  test("latestState: negative lsn/ts_ms rank DESC like any other value; " +
+      "Long.MinValue fails loudly") {
+    val state = CdcMaterialize.latestState(parsed(Seq(
+      // id 1: lsn -5 beats -7 (DESC), whatever the op order says
+      env.format("null", pay(1, "A"), "-7", "c", 1),
+      env.format("null", pay(1, "B"), "-5", "u", 1),
+      // id 2: equal lsn and op; ts_ms -1 beats -9 (DESC)
+      env.format("null", pay(2, "C"), "3", "u", -9),
+      env.format("null", pay(2, "D"), "3", "u", -1))))
+    val names = state.orderBy(col("id")).collect().map(r => r.getInt(0) -> r.getString(1))
+    assert(names.toSeq == Seq(1 -> "B", 2 -> "D"), names.toSeq)
+    for (line <- Seq(
+        env.format("null", pay(3, "E"), Long.MinValue.toString, "c", 1),
+        env.format("null", pay(3, "E"), "1", "c", Long.MinValue))) {
+      val e = intercept[Exception](
+        CdcMaterialize.latestState(parsed(Seq(line))).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    }
+  }
 }

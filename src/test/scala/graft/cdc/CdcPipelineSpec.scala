@@ -177,4 +177,23 @@ class CdcPipelineSpec extends SparkSpec {
       && r.getBoolean(2) && r.getInt(3) == 3))
     assert(rows.map(_.getString(4)).toSet == Set("x.org", "y.io"))
   }
+
+  test("a ts_ms past timestamp_millis' range passes through: the drain " +
+      "completes with the line under _unrouted") {
+    val in = tmpDir("cdc-poison-in")
+    val out = tmpDir("cdc-poison-out")
+    val poison = """{"op":"c","ts_ms":9300000000000000,"source":{"table":"customers"}}"""
+    Files.write(Paths.get(in, "00000.jsonl"),
+      (Seq(event.format(1, 1, 1, 1), poison, event.format(2, 2, 2, 2))
+        .mkString("\n") + "\n").getBytes("UTF-8"))
+    val q = CdcPipeline.startV2(spark, in, out, tmpDir("cdc-poison-ck"),
+      EnrichConfig(processingTimeIso = Some("t")), fanOutByTable = true)
+    q.awaitTermination()
+    assert(q.exception.isEmpty)
+    import spark.implicits._
+    def log(t: String) = spark.read.format("graft-cdc").load(s"$out/$t")
+      .select("value").as[String].collect().toSeq
+    assert(log("_unrouted") == Seq(poison))
+    assert(log("customers").length == 2)
+  }
 }

@@ -245,4 +245,38 @@ class EnrichSpec extends SparkSpec {
       assert(r.getString(r.fieldIndex("value_out")).contains("\"enrichment\""), in)
     }
   }
+
+  test("ts_ms at the datetime range edges enriches; one past either edge " +
+      "passes the raw line through") {
+    def out(ts: Long) = {
+      val in = s"""{"op":"c","ts_ms":$ts,"source":{"table":"t"}}"""
+      (in, one(in).getString(one(in).fieldIndex("value_out")))
+    }
+    val (loIn, lo) = out(-62135596800000L)
+    assert(lo != loIn && lo.contains("\"event_time_iso\":\"0001-01-01T00:00:00\""), lo)
+    val (hiIn, hi) = out(253402300799999L)
+    assert(hi != hiIn && hi.contains("\"event_time_iso\":\"9999-12-31T23:59:59.999000\""), hi)
+    for (ts <- Seq(-62135596800001L, 253402300800000L, 9300000000000000L,
+        Long.MaxValue, Long.MinValue)) {
+      val (in, o) = out(ts)
+      assert(o == in, s"ts_ms=$ts must pass through")
+    }
+  }
+
+  test("event and processing times are UTC under any session time zone") {
+    val conf = spark.conf
+    conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val row = one(cEvent)
+      val ts = row.getStruct(row.fieldIndex("enrichment"))
+        .getStruct(row.getStruct(row.fieldIndex("enrichment")).fieldIndex("timestamps"))
+      assert(ts.getString(1) == "2025-11-21T16:18:04.346000")
+      import spark.implicits._
+      val clock = Enrich(Seq(cEvent).toDF("value"))
+        .select("enrichment.timestamps.processing_time_iso").head().getString(0)
+      val utcNow = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
+      val gap = java.time.Duration.between(java.time.LocalDateTime.parse(clock), utcNow)
+      assert(gap.abs.toMinutes < 30, s"processing_time_iso $clock vs UTC $utcNow")
+    } finally conf.set("spark.sql.session.timeZone", "UTC")
+  }
 }

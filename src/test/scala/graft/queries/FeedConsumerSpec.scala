@@ -245,4 +245,16 @@ class FeedConsumerSpec extends SparkSpec {
     assert(messages.exists(_.contains("retention outran")),
       s"expected the stage-2 retention-gap failure, got: $messages")
   }
+
+  test("a null feed_version fails the consumer batch loudly, naming the " +
+      "batch and the invariant") {
+    import spark.implicits._
+    val ok = Seq((Some(3L), "a"), (Some(1L), "b"), (Some(3L), "c"))
+      .toDF("feed_version", "k")
+    assert(FeedConsumer.feedVersions(ok, 4L) == Seq(1L, 3L))
+    val bad = Seq((Some(2L), "a"), (None, "b")).toDF("feed_version", "k")
+    val e = intercept[IllegalStateException](FeedConsumer.feedVersions(bad, 9L))
+    assert(e.getMessage.contains("batch 9") &&
+      e.getMessage.contains("feed_version is non-null"), e.getMessage)
+  }
 }
