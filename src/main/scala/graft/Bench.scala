@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, executing each plan fully via the noop sink
@@ -9,20 +8,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner reclaims broadcast/shuffle blocks via WEAK refs, so
-      // in a suite-length JVM with little heap pressure the default 30min
-      // periodic GC never fires and ~342 gates' broadcast blocks pile up
-      // in storage memory. 1min bounds that accumulation.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    EngineTuning.verify(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    // ContextCleaner reclaims broadcast/shuffle blocks via WEAK refs, so
+    // in a suite-length JVM with little heap pressure the default 30min
+    // periodic GC never fires and ~342 gates' broadcast blocks pile up
+    // in storage memory. 1min bounds that accumulation.
+    val spark = EngineTuning.session(defaultCpus = "32",
+      "spark.cleaner.periodicGC.interval" -> "1min")
     // suite mode: lets deterministic derived values (the PQ trained
     // codebook) flow from their producer query to same-pass consumers;
     // Verify never enters it, so gates stay independent

@@ -43,7 +43,7 @@ object EngineTuning {
     * `spark.sql.codegen.cache.maxEntries` is a static SQL conf — it only
     * takes effect when set BEFORE the first SparkSession in the JVM, and
     * builder-supplied values are silently ignored once a session exists.
-    * All four mains call this on their builder before `getOrCreate`; an
+    * All four mains call this (through [[session]]) before `getOrCreate`; an
     * embedder that already created a session should call [[verify]] to
     * fail loudly instead of running with the 100-entry default.
     */
@@ -52,6 +52,26 @@ object EngineTuning {
       sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
     .config("spark.sql.codegen.cache.maxEntries",
       sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
+
+  /** The driver-contract mains' one session: [[apply]]'s tuning on
+    * `local[SPARK_GRAFT_CPUS]` (the caller's default when unset), as many
+    * shuffle partitions as cores, UTC, no UI, plus the caller's `extra`
+    * confs; then [[verify]] and WARN logging.
+    */
+  def session(defaultCpus: String, extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val spark = extra.foldLeft(apply(SparkSession.builder())
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")) { case (b, (k, v)) =>
+        b.config(k, v)
+      }
+      .getOrCreate()
+    verify(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Assert the active session actually runs with the tuning [[apply]]
     * requested — catches the static-conf silent-ignore case above.

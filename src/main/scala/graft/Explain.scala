@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: prints the formatted physical plan and timed noop-write
   * for the named queries (all queries if none named).
@@ -12,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = EngineTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    EngineTuning.verify(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineTuning.session(defaultCpus = "8")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val showPlan = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN", "1") == "1"
     val showFinal = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN", "1") == "2"

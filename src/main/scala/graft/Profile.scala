@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Intra-gate attribution tool (optimization guide §1: measure first;
   * §7.3: when nothing runs, the driver is doing something single-
@@ -21,16 +20,8 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt
-    val spark = EngineTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    EngineTuning.verify(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineTuning.session(defaultCpus = "32")
 
     final case class Job(id: Int, t0: Long, var t1: Long = 0L,
         var nTasks: Int = 0, site: String)

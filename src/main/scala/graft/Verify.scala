@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,15 +11,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    EngineTuning.verify(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineTuning.session(defaultCpus = "4")
     // SPARK_GRAFT_CHECKPOINT_DIR: run the whole suite on the CLUSTER
     // materialization posture — every Materialize.barrier becomes a
     // reliable checkpoint instead of the local[] fallback. Used for the
@@ -37,7 +28,10 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // the gate name, then the full trace and cause chain: a bare
+        // getMessage prints `null` for an NPE and drops every cause
+        System.err.println(s"[verify] $name failed:")
+        e.printStackTrace()
       }
       // drop Materialize.stage persists (cache entries + blocks) and any
       // localCheckpoint blocks between queries — every gate stands alone

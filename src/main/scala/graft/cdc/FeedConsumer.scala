@@ -2,7 +2,8 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+
+import graft.streaming.Drive
 
 /** A DECOUPLED change-feed consumer: a second, separately-checkpointed
   * streaming query that TAILS the feed generations a producer publishes
@@ -127,59 +128,59 @@ final class FeedConsumer(
     * query with a continuous trigger).
     */
   def runOnce(): Unit =
-    spark.readStream.schema(feedSchema).parquet(feedGlob)
+    Drive.await(spark.readStream.schema(feedSchema).parquet(feedGlob)
       .writeStream
-      .foreachBatch { (batch: DataFrame, cid: Long) =>
-        val b = batch.cache()
-        try {
-          // bounded reads: a replayed consumer batch folds into the
-          // state BEFORE its own publish (see VersionedState)
-          val applied = FeedConsumer.appliedBefore(state, cid)
-          // distinct upstream versions this trigger carried: a
-          // constant-size driver boundary (generations per trigger),
-          // never data-sized
-          val versions = FeedConsumer.feedVersions(b, cid)
-          val prev = state.readLatestBefore("down", cid)
-            .getOrElse(emptyDown(b))
-          // resolve the frontier: a retention gap either re-seeds from
-          // the configured snapshot source or fails loudly
-          val (down0, frontier0, via) =
-            FeedConsumer.gap(applied, versions) match {
-              case Some(missing) => reseed match {
-                case Some(snap) =>
-                  val (sv, rows) = snap()
-                  (rollup(rows), sv, "reseed")
-                case None => throw new IllegalStateException(
-                  s"feed retention outran this consumer: upstream " +
-                    s"generation(s) ${missing.mkString(", ")} were swept " +
-                    s"before it saw them (applied frontier $applied, " +
-                    s"incoming ${versions.mkString(", ")}); configure a " +
-                    "reseed snapshot source to recover, or re-seed the " +
-                    "consumer from a fresh bootstrap feed")
-              }
-              case None => (prev, applied, "feed")
+      .foreachBatch(Drive.versioned(state, keepLast = Some(2)) { batch =>
+        val (b, cid) = (batch.df, batch.id)
+        // bounded reads: a replayed consumer batch folds into the
+        // state BEFORE its own publish (see VersionedState)
+        val applied = FeedConsumer.appliedBefore(state, cid)
+        // distinct upstream versions this trigger carried: a
+        // constant-size driver boundary (generations per trigger),
+        // never data-sized
+        val versions = FeedConsumer.feedVersions(b, cid)
+        val prev = batch.before("down").getOrElse(emptyDown(b))
+        // resolve the frontier: a retention gap either re-seeds from
+        // the configured snapshot source or fails loudly
+        val (down0, frontier0, via) =
+          FeedConsumer.gap(applied, versions) match {
+            case Some(missing) => reseed match {
+              case Some(snap) =>
+                val (sv, rows) = snap()
+                (rollup(rows), sv, "reseed")
+              case None => throw new IllegalStateException(
+                s"feed retention outran this consumer: upstream " +
+                  s"generation(s) ${missing.mkString(", ")} were swept " +
+                  s"before it saw them (applied frontier $applied, " +
+                  s"incoming ${versions.mkString(", ")}); configure a " +
+                  "reseed snapshot source to recover, or re-seed the " +
+                  "consumer from a fresh bootstrap feed")
             }
-          // defensive: the snapshot must close the gap it re-seeded
-          // over (contiguous producer batch ids make this unreachable,
-          // but silently folding across a second gap would corrupt)
-          val beyond = versions.filter(_ > frontier0)
-          FeedConsumer.gap(frontier0, beyond).foreach(m =>
-            throw new IllegalStateException(
-              s"feed retention gap survived the reseed snapshot " +
-                s"(frontier $frontier0, still missing ${m.mkString(", ")})"))
-          // producer replays (and any already-applied generation) drop
-          // out here — the at-least-once idempotence rail; watermark
-          // rows advance the frontier but never reach a fold
-          val freshRows = b.filter(col("feed_version") > lit(frontier0))
-            .filter(col("op") =!= FeedConsumer.WatermarkOp)
-          val down2 = graft.operators.ViewDelta.cascadeAgg(
-            down0, freshRows, groupOf, groupName, valueCols)
-          val frontier = if (beyond.nonEmpty) beyond.max else frontier0
-          val s2 = spark
-          import s2.implicits._
-          // non-anchor first, anchor last: a crash between publishes
-          // leaves the previous (feed, applied, down) triple current
-          if (publishFeed) {
+            case None => (prev, applied, "feed")
+          }
+        // defensive: the snapshot must close the gap it re-seeded
+        // over (contiguous producer batch ids make this unreachable,
+        // but silently folding across a second gap would corrupt)
+        val beyond = versions.filter(_ > frontier0)
+        FeedConsumer.gap(frontier0, beyond).foreach(m =>
+          throw new IllegalStateException(
+            s"feed retention gap survived the reseed snapshot " +
+              s"(frontier $frontier0, still missing ${m.mkString(", ")})"))
+        // producer replays (and any already-applied generation) drop
+        // out here — the at-least-once idempotence rail; watermark
+        // rows advance the frontier but never reach a fold
+        val freshRows = b.filter(col("feed_version") > lit(frontier0))
+          .filter(col("op") =!= FeedConsumer.WatermarkOp)
+        val down2 = graft.operators.ViewDelta.cascadeAgg(
+          down0, freshRows, groupOf, groupName, valueCols)
+        val frontier = if (beyond.nonEmpty) beyond.max else frontier0
+        val s2 = spark
+        import s2.implicits._
+        // non-anchor first, anchor last: a crash between publishes
+        // leaves the previous (feed, applied, down) triple current
+        val feed =
+          if (!publishFeed) Nil
+          else {
             val statCols = "n_rows" +: valueCols.map(v => s"sum_$v")
             // after a reseed `down0` is the rebase, not the published
             // state — diff vs what downstream actually saw (`prev`);
@@ -193,19 +194,15 @@ final class FeedConsumer(
                 graft.operators.ViewDelta.diffTouched(prev, down2,
                   freshRows.select(groupOf.as(groupName)).distinct(),
                   Seq(groupName), statCols)
-            state.publish("feed", cid,
+            Seq(Drive.Kinds("feed" ->
               f.unionByName(FeedConsumer.watermarkRow(f))
-                .withColumn("feed_version", lit(cid)))
+                .withColumn("feed_version", lit(cid))))
           }
-          state.publish("applied", cid,
-            Seq((frontier, via)).toDF("upstream_version", "via"))
-          state.publish("down", cid, down2)
-          state.prune(keepLast = 2)
-        } finally b.unpersist(): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
+        feed ++ Seq(
+          Drive.Kinds("applied" ->
+            Seq((frontier, via)).toDF("upstream_version", "via")),
+          Drive.Kinds("down" -> down2))
+      }), checkpoint)
 }
 
 object FeedConsumer {

@@ -2,7 +2,8 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+
+import graft.streaming.Drive
 
 /** The DECOUPLED consumer for the aggregate algebra's
   * NON-self-maintainable half: a separately-checkpointed streaming
@@ -76,66 +77,57 @@ final class FeedStatsConsumer(
     * own checkpoint.
     */
   def runOnce(): Unit =
-    spark.readStream.schema(feedSchema).parquet(feedGlob)
+    Drive.await(spark.readStream.schema(feedSchema).parquet(feedGlob)
       .writeStream
-      .foreachBatch { (batch: DataFrame, cid: Long) =>
-        val b = batch.cache()
-        try {
-          val applied = FeedConsumer.appliedBefore(state, cid)
-          val versions = FeedConsumer.feedVersions(b, cid)
-          FeedConsumer.gap(applied, versions).foreach(missing =>
-            throw new IllegalStateException(
-              s"feed retention outran this consumer: upstream " +
-                s"generation(s) ${missing.mkString(", ")} were swept " +
-                s"before it saw them (applied frontier $applied, " +
-                s"incoming ${versions.mkString(", ")})"))
-          val freshRows = b.filter(col("feed_version") > lit(applied))
-            .filter(col("op") =!= FeedConsumer.WatermarkOp)
-          val up0 = state.readLatestBefore("up", cid)
-            .getOrElse(emptyUp(b))
-          val down0 = state.readLatestBefore("down", cid)
-            .getOrElse(emptyDown(b))
-          // applyDelta's contract is ONE generation (every key at most
-          // once); a multi-generation catch-up batch can mention a key
-          // in several feeds, so collapse to each key's LAST image
-          // first — intermediate images telescope away for a replace-
-          // by-key apply. (cascadeAggStats below keeps the FULL rows:
-          // its signed fold needs every generation's images and
-          // telescopes on its own.) The collapse is a max_by ARGMAX on
-          // feed_version (optimization guide §2.3), not a row_number
-          // window: it partial-aggregates map-side and skips the sort.
-          // Deterministic because (key, feed_version) is unique — one
-          // image per key per generation — and never null (feedVersions
-          // above fails the batch on a null, which max_by would skip), so
-          // ties cannot occur; the original column order is preserved on
-          // the way out.
-          val nonKey = freshRows.columns.filterNot(upstreamKeys.contains)
-          val latest = freshRows
-            .groupBy(upstreamKeys.map(col): _*)
-            .agg(max_by(struct(nonKey.map(col): _*), col("feed_version"))
-              .as("__top"))
-            .select(freshRows.columns.map(c =>
-              if (upstreamKeys.contains(c)) col(c)
-              else col(s"__top.$c").as(c)).toSeq: _*)
-          // replica first: publish, then read the parquet back as the
-          // threat path's recompute source (one materialized pass)
-          state.publish("up", cid, graft.operators.ViewDelta
-            .applyDelta(up0, latest, upstreamKeys, valueCols))
-          val up2 = state.readAt("up", cid)
-          val down2 = graft.operators.ViewDelta.cascadeAggStats(
-            down0, freshRows, up2, groupOf, groupName, valueCols,
-            extremumCol)
-          val frontier =
-            versions.filter(_ > applied).maxOption.getOrElse(applied)
-          val s2 = spark
-          import s2.implicits._
-          state.publish("applied", cid,
-            Seq((frontier, "feed")).toDF("upstream_version", "via"))
-          state.publish("down", cid, down2)
-          state.prune(keepLast = 2)
-        } finally b.unpersist(): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
+      .foreachBatch(Drive.versioned(state, keepLast = Some(2)) { batch =>
+        val (b, cid) = (batch.df, batch.id)
+        val applied = FeedConsumer.appliedBefore(state, cid)
+        val versions = FeedConsumer.feedVersions(b, cid)
+        FeedConsumer.gap(applied, versions).foreach(missing =>
+          throw new IllegalStateException(
+            s"feed retention outran this consumer: upstream " +
+              s"generation(s) ${missing.mkString(", ")} were swept " +
+              s"before it saw them (applied frontier $applied, " +
+              s"incoming ${versions.mkString(", ")})"))
+        val freshRows = b.filter(col("feed_version") > lit(applied))
+          .filter(col("op") =!= FeedConsumer.WatermarkOp)
+        val up0 = batch.before("up").getOrElse(emptyUp(b))
+        val down0 = batch.before("down").getOrElse(emptyDown(b))
+        // applyDelta's contract is ONE generation (every key at most
+        // once); a multi-generation catch-up batch can mention a key
+        // in several feeds, so collapse to each key's LAST image
+        // first — intermediate images telescope away for a replace-
+        // by-key apply. (cascadeAggStats below keeps the FULL rows:
+        // its signed fold needs every generation's images and
+        // telescopes on its own.) The collapse is a max_by ARGMAX on
+        // feed_version (optimization guide §2.3), not a row_number
+        // window: it partial-aggregates map-side and skips the sort.
+        // Deterministic because (key, feed_version) is unique — one
+        // image per key per generation — and never null (feedVersions
+        // above fails the batch on a null, which max_by would skip), so
+        // ties cannot occur; the original column order is preserved on
+        // the way out.
+        val nonKey = freshRows.columns.filterNot(upstreamKeys.contains)
+        val latest = freshRows
+          .groupBy(upstreamKeys.map(col): _*)
+          .agg(max_by(struct(nonKey.map(col): _*), col("feed_version"))
+            .as("__top"))
+          .select(freshRows.columns.map(c =>
+            if (upstreamKeys.contains(c)) col(c)
+            else col(s"__top.$c").as(c)).toSeq: _*)
+        val frontier =
+          versions.filter(_ > applied).maxOption.getOrElse(applied)
+        val s2 = spark
+        import s2.implicits._
+        // replica first, then read the parquet back as the threat
+        // path's recompute source (one materialized pass)
+        Seq(
+          Drive.Kinds("up" -> graft.operators.ViewDelta
+            .applyDelta(up0, latest, upstreamKeys, valueCols)),
+          Drive.Kinds("applied" ->
+            Seq((frontier, "feed")).toDF("upstream_version", "via")),
+          Drive.After("down", () => graft.operators.ViewDelta
+            .cascadeAggStats(down0, freshRows, batch.published("up"),
+              groupOf, groupName, valueCols, extremumCol)))
+      }), checkpoint)
 }

@@ -302,7 +302,7 @@ object Cdc {
     * unique prefix (the tail source needs distinct names across
     * generations). Pure filesystem copies — no Spark job.
     */
-  private[queries] def copyStaged(s: SparkSession, from: String, to: String,
+  private[graft] def copyStaged(s: SparkSession, from: String, to: String,
       prefix: String): Unit = {
     val conf = s.sessionState.newHadoopConf()
     val src = new org.apache.hadoop.fs.Path(from)
@@ -433,12 +433,10 @@ object Cdc {
     * would drop the 'u'/'d' rows; either mismatches the oracle.
     */
   def qCdcDsv2Tail(s: SparkSession, d: String): DataFrame = {
-    val base = gateTmpDir("graft_dsv2_tail", d)
-    val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
     // every invocation re-runs the full staged tail from scratch
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.streaming.Drive.fresh(s,
+      gateTmpDir("graft_dsv2_tail", d))
+    val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
     val (snaps, upds, dels) = changeMixParts(s, d)
     val cfg = EnrichConfig(processingTimeIso = Some("2026-01-01T00:00:00"))
     // stage 1: snapshots only, drained by the first checkpointed run
@@ -1018,98 +1016,78 @@ object Cdc {
     *
     * Scale shape: per micro-batch cost is the batch step's
     * O(|Δ| + |touched groups|) plus one state read/write — the
-    * standard streaming-MV posture (Delta/iceberg MERGE targets);
-    * state partition count is a config sized to state volume.
+    * standard streaming-MV posture (Delta/iceberg MERGE targets); state
+    * partitions as in [[graft.streaming.Drive]].
     */
   def qCdcStreamIvm(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.cdc.{IncrementalAggView, IncrementalJoinView}
-    val base = gateTmpDir("graft_stream_ivm", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val (inDir, store, ck) = (s"$base/in", s"$base/store", s"$base/ck")
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, gateTmpDir("graft_stream_ivm", d))
     // side-tagged delta stream: one source carries both sides, split
     // per batch (the one-topic-per-view transport layout)
     val staged = stageOnce(s, "graft_stream_ivm_staged", d) { st =>
       val (a1, a2, b1, b2) = aggViewFixture(s, d)
-      def tag(df: DataFrame, side: String, hasG: Boolean): DataFrame =
-        df.select(lit(side).as("side"), col("id"), col("op"), col("lsn"),
-          (if (hasG) col("g") else lit(null).cast("string")).as("g"),
-          (if (hasG) lit(null).cast("long") else col("balance")).as("bal"))
-      tag(a1, "a", hasG = true).unionByName(tag(b1, "b", hasG = false))
+      sideTag(a1, "a").unionByName(sideTag(b1, "b"))
         .coalesce(1).write.parquet(s"$st/gen1")
       // gen 2 MUST land as one file → one micro-batch, so the final
       // markers are the single-step touched set the oracle folds
-      tag(a2, "a", hasG = true).unionByName(tag(b2, "b", hasG = false))
+      sideTag(a2, "a").unionByName(sideTag(b2, "b"))
         .coalesce(1).write.parquet(s"$st/gen2")
     }
-    // Versioned state publishing through the Hadoop FileSystem API (the
-    // round-8 java.io.File listing was a cluster-portability bug: on a
-    // non-local store it silently re-bootstrapped every batch). The agg
-    // kind anchors version discovery and is published LAST per batch.
-    val state = new graft.cdc.VersionedState(s, store, "agg")
-    def readLatest(kind: String): Option[DataFrame] = state.readLatest(kind)
-    def publish(kind: String, id: Long, df: DataFrame): Unit =
-      state.publish(kind, id, df)
-    def run(): Unit =
-      s.readStream
-        .schema("side STRING, id INT, op STRING, lsn LONG, g STRING, bal LONG")
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val b = batch.cache()
-          val aDelta = b.filter(col("side") === "a")
-            .select(col("id"), col("op"), col("lsn"), col("g"))
-          val bDelta = b.filter(col("side") === "b")
-            .select(col("id"), col("op"), col("lsn"),
-              col("bal").as("balance"))
-          // bounded read (< id): a replayed batch must fold into the
-          // state BEFORE its own publish, or the delta double-applies
-          val next =
-            (state.readLatestBefore("aState", id),
-              state.readLatestBefore("bState", id),
-              state.readLatestBefore("agg", id))
-              match {
-              case (Some(aS), Some(bS), Some(agg)) =>
-                IncrementalAggView.step(agg.drop("via"), aS, bS,
-                  aDelta, bDelta, "id", "g", "balance", "via")
-              case _ =>
-                val aS = IncrementalJoinView.sideState(aDelta, "id")
-                val bS = IncrementalJoinView.sideState(bDelta, "id")
-                (IncrementalAggView
-                  .bootstrap(aS, bS, "id", "g", "balance")
-                  .withColumn("via", lit("bootstrap")), aS, bS)
-            }
-          // side states first, the version-anchoring agg LAST: a crash
-          // between publishes leaves the previous version current
-          // instead of exposing a torn one. The two side states are
-          // mutually independent, so they publish CONCURRENTLY
-          // (guide §2.6) — the anchor still strictly after both
-          state.publishConcurrently(id,
-            "aState" -> next._2, "bState" -> next._3)
-          publish("agg", id, next._1)
-          b.unpersist(): Unit
+    // generation 1 bootstraps the maintained state; generation 2 lands
+    // while the stream is DOWN, and the restarted run must resume from
+    // the checkpoint and APPLY it as one step. The agg kind anchors
+    // version discovery and is published LAST per batch.
+    val drive = Drive.maintain(s, base, "agg",
+        Seq(Seq(s"$staged/gen1" -> "g1"), Seq(s"$staged/gen2" -> "g2")),
+        sideTaggedStream(s)) { batch =>
+      val (aDelta, bDelta) = sideDeltas(batch.df)
+      val (agg, aS, bS) =
+        (batch.before("aState"), batch.before("bState"),
+          batch.before("agg")) match {
+          case (Some(aS), Some(bS), Some(agg)) =>
+            IncrementalAggView.step(agg.drop("via"), aS, bS,
+              aDelta, bDelta, "id", "g", "balance", "via")
+          case _ =>
+            val aS = IncrementalJoinView.sideState(aDelta, "id")
+            val bS = IncrementalJoinView.sideState(bDelta, "id")
+            (IncrementalAggView
+              .bootstrap(aS, bS, "id", "g", "balance")
+              .withColumn("via", lit("bootstrap")), aS, bS)
         }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-    // state/store partitions sized to state volume (see qCdcTxnStream)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      copyStaged(s, s"$staged/gen1", inDir, "g1")
-      run() // generation 1 bootstraps the maintained state
-      // generation 2 lands while the stream is DOWN; the restarted run
-      // must resume from the checkpoint and APPLY it as one step
-      copyStaged(s, s"$staged/gen2", inDir, "g2")
-      run()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    readLatest("agg").get
+      // the two side states are mutually independent: concurrent
+      Seq(Drive.Kinds("aState" -> aS, "bState" -> bS),
+        Drive.Kinds("agg" -> agg))
+    }
+    drive.state.readLatest("agg").get
       .select(col("g"), col("n_members"), col("total").as("total_balance"),
         col("via").as("maintained_via"))
       .orderBy(col("g"))
   }
+
+  /** One side of the side-tagged delta layout the two agg-view stream
+    * drives share: one source carries both sides, A rows (`side` a)
+    * with their group `g`, B rows (`side` b) with their balance `bal`.
+    */
+  private def sideTag(df: DataFrame, side: String): DataFrame = {
+    val hasG = side == "a"
+    df.select(lit(side).as("side"), col("id"), col("op"), col("lsn"),
+      (if (hasG) col("g") else lit(null).cast("string")).as("g"),
+      (if (hasG) lit(null).cast("long") else col("balance")).as("bal"))
+  }
+
+  /** The side-tagged stream over a drive's input dir. */
+  private def sideTaggedStream(s: SparkSession): String => DataFrame =
+    in => s.readStream
+      .schema("side STRING, id INT, op STRING, lsn LONG, g STRING, bal LONG")
+      .parquet(in)
+
+  /** A side-tagged batch split into its (A, B) deltas. */
+  private def sideDeltas(b: DataFrame): (DataFrame, DataFrame) =
+    (b.filter(col("side") === "a")
+      .select(col("id"), col("op"), col("lsn"), col("g")),
+      b.filter(col("side") === "b")
+        .select(col("id"), col("op"), col("lsn"), col("bal").as("balance")))
 
   /** Handle the stream-changefeed drive returns: the maintained
     * [[graft.cdc.VersionedState]], plus the checkpoint path and a
@@ -1117,8 +1095,7 @@ object Cdc {
     * un-commit the last batch and force a REAL re-delivery (the
     * replay-idempotence proof the gate's hash can't express).
     */
-  private[queries] final case class ChangefeedDrive(
-      state: graft.cdc.VersionedState, ck: String, runOnce: () => Unit)
+  private[queries] type ChangefeedDrive = graft.streaming.Drive.Maintained
 
   /** The IN-LOOP change-feed drive (round-11 verdict item #1): the
     * [[qCdcStreamIvm]] maintenance loop, now ALSO publishing the
@@ -1171,25 +1148,18 @@ object Cdc {
       base: String, cascade: Boolean = false,
       afterRun: Long => Unit = _ => (),
       extraGen: Boolean = false): ChangefeedDrive = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.cdc.{IncrementalAggView, IncrementalJoinView}
     import graft.operators.ViewDelta
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val (inDir, store, ck) = (s"$base/in", s"$base/store", s"$base/ck")
+    import graft.streaming.Drive
+    Drive.fresh(s, base)
     val staged = stageOnce(s, "graft_stream_changefeed_staged", d) { st =>
       val (a1, a2, b1, b2) = aggViewFixture(s, d)
-      def tag(df: DataFrame, side: String, hasG: Boolean): DataFrame =
-        df.select(lit(side).as("side"), col("id"), col("op"), col("lsn"),
-          (if (hasG) col("g") else lit(null).cast("string")).as("g"),
-          (if (hasG) lit(null).cast("long") else col("balance")).as("bal"))
       // one file per generation → one micro-batch each, so every feed
       // version has a closed-form twin the oracle can compute
-      tag(a1, "a", hasG = true).unionByName(tag(b1, "b", hasG = false))
+      sideTag(a1, "a").unionByName(sideTag(b1, "b"))
         .coalesce(1).write.parquet(s"$st/gen1")
-      tag(a2, "a", hasG = true).coalesce(1).write.parquet(s"$st/gen2")
-      tag(b2, "b", hasG = false).coalesce(1).write.parquet(s"$st/gen3")
+      sideTag(a2, "a").coalesce(1).write.parquet(s"$st/gen2")
+      sideTag(b2, "b").coalesce(1).write.parquet(s"$st/gen3")
     }
     // the OPTIONAL fourth generation (`extraGen`, the reseed gate's
     // post-recovery increment): a second wave of A-side group moves —
@@ -1214,7 +1184,6 @@ object Cdc {
             lit(null).cast("long").as("bal"))
           .coalesce(1).write.parquet(s"$st/gen4")
       })
-    val state = new graft.cdc.VersionedState(s, store, "agg")
     val feedCols = Seq("n_members", "total_balance")
     def view(agg: DataFrame): DataFrame =
       agg.select(col("g"), col("n_members"),
@@ -1228,125 +1197,82 @@ object Cdc {
       feed.select(segOf.as("seg"), lit(0L).as("n_rows"),
         lit(0L).as("sum_n_members"), lit(0L).as("sum_total_balance"))
         .filter(lit(false))
-    def run(): Unit =
-      s.readStream
-        .schema("side STRING, id INT, op STRING, lsn LONG, g STRING, bal LONG")
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val b = batch.cache()
-          val aDelta = b.filter(col("side") === "a")
-            .select(col("id"), col("op"), col("lsn"), col("g"))
-          val bDelta = b.filter(col("side") === "b")
-            .select(col("id"), col("op"), col("lsn"),
-              col("bal").as("balance"))
-          // bounded reads (< id): a replayed batch folds into the state
-          // BEFORE its own publish — which also makes its FEED replay
-          // byte-identical (same before, same after, same diff)
-          val (agg2, aS2, bS2, feed) =
-            (state.readLatestBefore("aState", id),
-              state.readLatestBefore("bState", id),
-              state.readLatestBefore("agg", id)) match {
-              case (Some(aS), Some(bS), Some(agg)) =>
-                val (a2, s1, s2, touched) = IncrementalAggView
-                  .stepWithTouched(agg.drop("via"), aS, bS,
-                    aDelta, bDelta, "id", "g", "balance", "via")
-                val f = ViewDelta.diffTouched(view(agg), view(a2),
-                  touched, Seq("g"), feedCols)
-                // loud witness of the O(touched) shape: BOTH versions
-                // must be semi-join-pruned before the full-outer diff
-                val semis = f.queryExecution.optimizedPlan.collect {
-                  case j: org.apache.spark.sql.catalyst.plans.logical.Join
-                      if j.joinType ==
-                        org.apache.spark.sql.catalyst.plans.LeftSemi => j
-                }
-                require(semis.size >= 2,
-                  s"stream changefeed: expected both diff sides " +
-                    s"semi-pruned to the touched set, got ${semis.size}")
-                (a2, s1, s2, f)
-              case _ =>
-                val aS = IncrementalJoinView.sideState(aDelta, "id")
-                val bS = IncrementalJoinView.sideState(bDelta, "id")
-                val boot = IncrementalAggView
-                  .bootstrap(aS, bS, "id", "g", "balance")
-                  .withColumn("via", lit("bootstrap"))
-                // the CDF bootstrap snapshot: everything is a create
-                (boot, aS, bS, ViewDelta.diff(
-                  view(boot).filter(lit(false)), view(boot),
-                  Seq("g"), feedCols))
+    // batch 0 bootstraps (and emits the all-'c' snapshot feed), batch 1
+    // applies the A-side moves/deletes, batch 2 the B-side updates/
+    // deletes (prune now drops gen 0), the optional batch 3 the 'late'
+    // relocations (prune drops gen 1) — each restart-resumed. afterRun
+    // fires between producer generations: the decoupled consumer gate
+    // ([[qCdcFeedConsumer]]) drives ITS OWN streaming query there,
+    // tailing what the producer published so far. LIVE retention:
+    // keepLast = 2, so a batch's own replay (crash before the
+    // checkpoint commit) still finds its fold version.
+    val gens = (Seq("gen1" -> "g1", "gen2" -> "g2", "gen3" -> "g3")
+        .map { case (g, p) => s"$staged/$g" -> p } ++
+      staged4.map(s4 => s"$s4/gen4" -> "g4")).map(Seq(_))
+    Drive.maintain(s, base, "agg", gens, sideTaggedStream(s),
+        keepLast = Some(2), afterRun = i => afterRun(i.toLong)) { batch =>
+      val id = batch.id
+      val (aDelta, bDelta) = sideDeltas(batch.df)
+      // bounded reads (< id): a replayed batch folds into the state
+      // BEFORE its own publish — which also makes its FEED replay
+      // byte-identical (same before, same after, same diff)
+      val (agg2, aS2, bS2, feed) =
+        (batch.before("aState"), batch.before("bState"),
+          batch.before("agg")) match {
+          case (Some(aS), Some(bS), Some(agg)) =>
+            val (a2, s1, s2, touched) = IncrementalAggView
+              .stepWithTouched(agg.drop("via"), aS, bS,
+                aDelta, bDelta, "id", "g", "balance", "via")
+            val f = ViewDelta.diffTouched(view(agg), view(a2),
+              touched, Seq("g"), feedCols)
+            // loud witness of the O(touched) shape: BOTH versions
+            // must be semi-join-pruned before the full-outer diff
+            val semis = f.queryExecution.optimizedPlan.collect {
+              case j: org.apache.spark.sql.catalyst.plans.logical.Join
+                  if j.joinType ==
+                    org.apache.spark.sql.catalyst.plans.LeftSemi => j
             }
-          // non-anchor kinds first (feed and cascade included), the
-          // version-anchoring agg LAST: a crash between publishes
-          // leaves the previous version current, feed and all. The
-          // feed rides its generation id as a COLUMN, not just a path
-          // segment: a decoupled consumer tailing the published files
-          // ([[graft.cdc.FeedConsumer]]) needs it in-band to dedup
-          // at-least-once re-deliveries and detect retention gaps
-          state.publish("feed", id,
-            feed.withColumn("feed_version", lit(id)))
-          // the CASCADE stage (when the caller gates it), maintained IN
-          // the loop purely from this batch's feed
-          // (graft.operators.ViewDelta.cascadeAgg) — read back from the
-          // feed's OWN just-published parquet, exactly the wire a
-          // downstream consumer tails (and one materialized pass
-          // instead of re-executing the diff lineage per publish). The
-          // bounded read keeps its replay byte-identical exactly like
-          // the feed's, and the bootstrap batch cascades the all-'c'
-          // snapshot feed into the empty frame, so one rule maintains
-          // every batch: w += feed
-          if (cascade) {
-            val published = state.readAt("feed", id)
-            val w = graft.operators.ViewDelta.cascadeAgg(
-              state.readLatestBefore("down", id)
-                .getOrElse(emptyW(published)),
-              published, segOf, "seg", feedCols)
-            state.publish("down", id, w)
-          }
-          // the two side states are mutually independent non-anchor
-          // kinds: publish them concurrently (guide §2.6); the
-          // version-anchoring agg still publishes strictly last
-          state.publishConcurrently(id,
-            "aState" -> aS2, "bState" -> bS2)
-          state.publish("agg", id, agg2)
-          // LIVE retention: ≥ 2 kept so this batch's own replay (crash
-          // before the checkpoint commit) still finds its fold version
-          state.prune(keepLast = 2)
-          b.unpersist(): Unit
+            require(semis.size >= 2,
+              s"stream changefeed: expected both diff sides " +
+                s"semi-pruned to the touched set, got ${semis.size}")
+            (a2, s1, s2, f)
+          case _ =>
+            val aS = IncrementalJoinView.sideState(aDelta, "id")
+            val bS = IncrementalJoinView.sideState(bDelta, "id")
+            val boot = IncrementalAggView
+              .bootstrap(aS, bS, "id", "g", "balance")
+              .withColumn("via", lit("bootstrap"))
+            // the CDF bootstrap snapshot: everything is a create
+            (boot, aS, bS, ViewDelta.diff(
+              view(boot).filter(lit(false)), view(boot),
+              Seq("g"), feedCols))
         }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-    // state/store partitions sized to state volume (see qCdcTxnStream)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      // afterRun fires between producer generations — the decoupled
-      // consumer gate ([[qCdcFeedConsumer]]) drives ITS OWN streaming
-      // query there, tailing what the producer published so far
-      copyStaged(s, s"$staged/gen1", inDir, "g1")
-      run() // batch 0 bootstraps (and emits the all-'c' snapshot feed)
-      afterRun(0L)
-      copyStaged(s, s"$staged/gen2", inDir, "g2")
-      run() // batch 1: A-side moves/deletes, restart-resumed
-      afterRun(1L)
-      copyStaged(s, s"$staged/gen3", inDir, "g3")
-      run() // batch 2: B-side updates/deletes; prune now drops gen 0
-      afterRun(2L)
-      staged4.foreach { s4 =>
-        copyStaged(s, s"$s4/gen4", inDir, "g4")
-        run() // batch 3: the 'late' relocations; prune drops gen 1
-        afterRun(3L)
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    ChangefeedDrive(state, ck, () => {
-      // capture the CURRENT value, not the drive-construction snapshot:
-      // a caller that changed the setting between the drive and this
-      // replay must get its own value back (round-12 advisory)
-      val cur = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try run()
-      finally s.conf.set("spark.sql.shuffle.partitions", cur)
-    })
+      // non-anchor kinds first (feed and cascade included), the
+      // version-anchoring agg LAST. The feed rides its generation id as
+      // a COLUMN, not just a path segment: a decoupled consumer tailing
+      // the published files ([[graft.cdc.FeedConsumer]]) needs it
+      // in-band to dedup at-least-once re-deliveries and detect
+      // retention gaps.
+      val feedStage = Drive.Kinds("feed" ->
+        feed.withColumn("feed_version", lit(id)))
+      // the CASCADE stage (when the caller gates it), maintained IN the
+      // loop purely from this batch's feed
+      // (graft.operators.ViewDelta.cascadeAgg) — read back from the
+      // feed's OWN just-published parquet, exactly the wire a
+      // downstream consumer tails. The bounded read keeps its replay
+      // byte-identical exactly like the feed's, and the bootstrap batch
+      // cascades the all-'c' snapshot feed into the empty frame, so one
+      // rule maintains every batch: w += feed
+      val downStage = Drive.After("down", () => {
+        val published = batch.published("feed")
+        ViewDelta.cascadeAgg(
+          batch.before("down").getOrElse(emptyW(published)),
+          published, segOf, "seg", feedCols)
+      })
+      (feedStage +: (if (cascade) Seq(downStage) else Nil)) ++
+        Seq(Drive.Kinds("aState" -> aS2, "bState" -> bS2),
+          Drive.Kinds("agg" -> agg2))
+    }
   }
 
   /** The gate over [[streamChangefeedDrive]]: emit the RETAINED feed
@@ -1970,7 +1896,7 @@ object Cdc {
     *
     * Scale shape: per micro-batch cost is the batch step's
     * O(|Δ| + fan-out + |touched groups|) plus one state read/write;
-    * state partition count is a config sized to state volume.
+    * state partitions as in [[graft.streaming.Drive]].
     */
   def qCdcFkStreamIvm(s: SparkSession, d: String): DataFrame =
     fkStreamDrive(s, d, gateTmpDir("graft_fk_stream_ivm", d))
@@ -1993,12 +1919,9 @@ object Cdc {
     */
   private def fkStreamDrive(s: SparkSession, d: String, base: String)
       : graft.cdc.VersionedState = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.cdc.{IncrementalFkAggView, IncrementalJoinView}
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val (inDir, store, ck) = (s"$base/in", s"$base/store", s"$base/ck")
+    import graft.streaming.Drive
+    Drive.fresh(s, base)
     val staged = stageOnce(s, "graft_fk_stream_ivm_staged", d) { st =>
       val (f1, f2, d1, d2) = fkAggFixture(s, d)
       def tag(df: DataFrame, side: String, isFact: Boolean): DataFrame =
@@ -2016,61 +1939,39 @@ object Cdc {
       tag(f2, "f", isFact = true).unionByName(tag(d2, "d", isFact = false))
         .coalesce(1).write.parquet(s"$st/gen2")
     }
-    val state = new graft.cdc.VersionedState(s, store, "agg")
-    def run(): Unit =
-      s.readStream
-        .schema("side STRING, id INT, op STRING, lsn LONG, " +
-          "fk INT, amount LONG, g STRING")
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val b = batch.cache()
-          val fDelta = b.filter(col("side") === "f")
-            .select(col("id").as("order_id"), col("op"), col("lsn"),
-              col("fk").as("cust_id"), col("amount"))
-          val dDelta = b.filter(col("side") === "d")
-            .select(col("id").as("d_id"), col("op"), col("lsn"), col("g"))
-          // bounded read (< id): a replayed batch must fold into the
-          // state BEFORE its own publish, or the delta double-applies
-          val next =
-            (state.readLatestBefore("fState", id),
-              state.readLatestBefore("dState", id),
-              state.readLatestBefore("agg", id)) match {
-              case (Some(fS), Some(dS), Some(agg)) =>
-                IncrementalFkAggView.step(agg.drop("via"), fS, dS,
-                  fDelta, dDelta, "order_id", "cust_id", "d_id", "g",
-                  "amount", "via")
-              case _ =>
-                val fS = IncrementalJoinView.sideState(fDelta, "order_id")
-                val dS = IncrementalJoinView.sideState(dDelta, "d_id")
-                (IncrementalFkAggView
-                  .bootstrap(fS, dS, "order_id", "cust_id", "d_id",
-                    "g", "amount")
-                  .withColumn("via", lit("bootstrap")), fS, dS)
-            }
-          // side states first, the version-anchoring agg LAST: a crash
-          // between publishes leaves the previous version current. The
-          // two side states are independent → concurrent (guide §2.6)
-          state.publishConcurrently(id,
-            "fState" -> next._2, "dState" -> next._3)
-          state.publish("agg", id, next._1)
-          b.unpersist(): Unit
+    // generation 1 bootstraps the maintained state; generation 2 lands
+    // while the stream is DOWN and the restarted run must resume from
+    // the checkpoint and APPLY it as one step
+    Drive.maintain(s, base, "agg",
+        Seq(Seq(s"$staged/gen1" -> "g1"), Seq(s"$staged/gen2" -> "g2")),
+        in => s.readStream
+          .schema("side STRING, id INT, op STRING, lsn LONG, " +
+            "fk INT, amount LONG, g STRING")
+          .parquet(in)) { batch =>
+      val b = batch.df
+      val fDelta = b.filter(col("side") === "f")
+        .select(col("id").as("order_id"), col("op"), col("lsn"),
+          col("fk").as("cust_id"), col("amount"))
+      val dDelta = b.filter(col("side") === "d")
+        .select(col("id").as("d_id"), col("op"), col("lsn"), col("g"))
+      val (agg, fS, dS) =
+        (batch.before("fState"), batch.before("dState"),
+          batch.before("agg")) match {
+          case (Some(fS), Some(dS), Some(agg)) =>
+            IncrementalFkAggView.step(agg.drop("via"), fS, dS,
+              fDelta, dDelta, "order_id", "cust_id", "d_id", "g",
+              "amount", "via")
+          case _ =>
+            val fS = IncrementalJoinView.sideState(fDelta, "order_id")
+            val dS = IncrementalJoinView.sideState(dDelta, "d_id")
+            (IncrementalFkAggView
+              .bootstrap(fS, dS, "order_id", "cust_id", "d_id",
+                "g", "amount")
+              .withColumn("via", lit("bootstrap")), fS, dS)
         }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-    // state/store partitions sized to state volume (see qCdcTxnStream)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      copyStaged(s, s"$staged/gen1", inDir, "g1")
-      run() // generation 1 bootstraps the maintained state
-      // generation 2 lands while the stream is DOWN; the restarted run
-      // must resume from the checkpoint and APPLY it as one step
-      copyStaged(s, s"$staged/gen2", inDir, "g2")
-      run()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    state
+      Seq(Drive.Kinds("fState" -> fS, "dState" -> dS),
+        Drive.Kinds("agg" -> agg))
+    }.state
   }
 
   /** MV routing onto a STREAMING-maintained materialization — the last
@@ -2423,11 +2324,9 @@ object Cdc {
     */
   def qCdcMvFresh(s: SparkSession, d: String): DataFrame = {
     import graft.plans.MvRewrite
-    val base = gateTmpDir("graft_mv_fresh", d)
+    val base = graft.streaming.Drive.fresh(s,
+      gateTmpDir("graft_mv_fresh", d))
     val (basePath, store) = (s"$base/mv_fresh_base", s"$base/store")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
     val state = new graft.cdc.VersionedState(s, store, "mv")
     def members(withDelta: Boolean): DataFrame =
       s.read.parquet(s"$d/customer.parquet").select(
@@ -2494,12 +2393,10 @@ object Cdc {
     */
   def qCdcMvFreshMulti(s: SparkSession, d: String): DataFrame = {
     import graft.plans.MvRewrite
-    val base = gateTmpDir("graft_mv_fresh_multi", d)
+    val base = graft.streaming.Drive.fresh(s,
+      gateTmpDir("graft_mv_fresh_multi", d))
     val (basePath, exactStore, fineStore) =
       (s"$base/fm_base", s"$base/fm_exact", s"$base/fm_fine")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
     def members(withDelta: Boolean): DataFrame =
       s.read.parquet(s"$d/customer.parquet").select(
         lower(col("c_mktsegment")).as("g"),
@@ -3054,10 +2951,7 @@ object Cdc {
     * [[qCdcDsv2Scan]].
     */
   def qCdcLogCompaction(s: SparkSession, d: String): DataFrame = {
-    val base = gateTmpDir("graft_compact", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.streaming.Drive.fresh(s, gateTmpDir("graft_compact", d))
     val (inDir, outDir) = (s"$base/in", s"$base/out")
     changeMixRaw(s, d).write.mode("overwrite").text(inDir)
     CdcLogCompaction.compact(s, inDir, outDir)
@@ -3171,11 +3065,9 @@ object Cdc {
     * regeneration.
     */
   def qCdcTxnStream(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val base = gateTmpDir("graft_txn_stream", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, gateTmpDir("graft_txn_stream", d))
     val (evDir, mtDir, outDir, ck) =
       (s"$base/ev", s"$base/mt", s"$base/out", s"$base/ck")
     val staged = stageOnce(s, "graft_txn_stream_staged", d) { st =>
@@ -3187,37 +3079,24 @@ object Cdc {
         .write.parquet(s"$st/gen2_replay")
       ev.unpersist(blocking = true) // frees the Materialize.stage cache
     }
-    def run(): Unit = {
+    // generation 1: even transactions' events + every END record;
+    // generation 2 lands while the stream is DOWN: odd transactions'
+    // events, plus a replay of some generation-1 events as NEW files
+    // (at-least-once transport) — released state must suppress them
+    Drive.generations(s, Seq(
+        Seq(Drive.Land(s"$staged/gen1_ev", evDir, "g1"),
+          Drive.Land(s"$staged/gen1_mt", mtDir, "g1")),
+        Seq(Drive.Land(s"$staged/gen2_ev", evDir, "g2"),
+          Drive.Land(s"$staged/gen2_replay", evDir, "g2r")))) { () =>
       import s.implicits._
       val events = s.readStream.schema("tx LONG, lsn LONG, value STRING")
         .parquet(evDir).as[graft.streaming.TxnEvent]
       val ends = s.readStream.schema("tx LONG, expected INT")
         .parquet(mtDir).as[graft.streaming.TxnMeta]
-      graft.streaming.TxnConsistentStream.release(events, ends)
+      Drive.await(graft.streaming.TxnConsistentStream.release(events, ends)
         .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
+        .outputMode(OutputMode.Append), ck)
     }
-    // state-store partitions sized to the state (hundreds of open
-    // txns), not the session's scan parallelism: every micro-batch
-    // commits one delta file PER state partition, so 32 stores are
-    // pure fixed IO here. At production volume this knob scales back
-    // up with transaction cardinality — a config, not a plan change.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      // generation 1: even transactions' events + every END record
-      copyStaged(s, s"$staged/gen1_ev", evDir, "g1")
-      copyStaged(s, s"$staged/gen1_mt", mtDir, "g1")
-      run()
-      // generation 2 lands while the stream is DOWN: odd transactions'
-      // events, plus a replay of some generation-1 events as NEW files
-      // (at-least-once transport) — released state must suppress them
-      copyStaged(s, s"$staged/gen2_ev", evDir, "g2")
-      copyStaged(s, s"$staged/gen2_replay", evDir, "g2r")
-      run()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     s.read.parquet(outDir)
       .select(get_json_object(col("value"), "$.after.id")
         .cast("int").as("id"), col("lsn"))
@@ -3252,11 +3131,9 @@ object Cdc {
     * history) — the 100-TB posture the NoTimeout mode lacks.
     */
   def qCdcTxnEvict(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val base = gateTmpDir("graft_txn_evict", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, gateTmpDir("graft_txn_evict", d))
     val (evDir, mtDir, outDir, ck) =
       (s"$base/ev", s"$base/mt", s"$base/out", s"$base/ck")
     val staged = stageOnce(s, "graft_txn_evict_staged", d) { st =>
@@ -3269,7 +3146,17 @@ object Cdc {
         new java.sql.Timestamp(FixedTs + 86400000L))).toDS()
         .write.parquet(s"$st/gen2_adv")
     }
-    def run(): Unit = {
+    // generation 1: every arriving event + every END, all at FixedTs —
+    // complete transactions release here; torn/END-less ones buffer.
+    // Generation 2 after restart: one advancer event a day ahead; the
+    // watermark passes every horizon and the no-data batch evicts (the
+    // timeout scans run per state store — see graft.streaming.Drive on
+    // the state-sized partition count). The advancer's own transaction
+    // (tx = -1) stays open — it must not leak into the output.
+    Drive.generations(s, Seq(
+        Seq(Drive.Land(s"$staged/gen1_ev", evDir, "g1"),
+          Drive.Land(s"$staged/gen1_mt", mtDir, "g1")),
+        Seq(Drive.Land(s"$staged/gen2_adv", evDir, "g2")))) { () =>
       import s.implicits._
       val events = s.readStream
         .schema("tx LONG, lsn LONG, value STRING, ts TIMESTAMP")
@@ -3277,31 +3164,11 @@ object Cdc {
       val ends = s.readStream
         .schema("tx LONG, expected INT, ts TIMESTAMP")
         .parquet(mtDir).as[graft.streaming.TxnMetaTs]
-      graft.streaming.TxnConsistentStream
+      Drive.await(graft.streaming.TxnConsistentStream
         .releaseOrEvict(events, ends, "10 seconds", 60000L)
         .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
+        .outputMode(OutputMode.Append), ck)
     }
-    // state partitions sized to state volume (see qCdcTxnStream) —
-    // the eviction run pays timeout scans per store, so oversized
-    // store counts hurt twice here
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      // generation 1: every arriving event + every END, all at FixedTs —
-      // complete transactions release here; torn/END-less ones buffer
-      copyStaged(s, s"$staged/gen1_ev", evDir, "g1")
-      copyStaged(s, s"$staged/gen1_mt", mtDir, "g1")
-      run()
-      // generation 2 after restart: one advancer event a day ahead; the
-      // watermark passes every horizon and the no-data batch evicts.
-      // The advancer's own transaction (tx = -1) stays open — it must
-      // not leak into the output.
-      copyStaged(s, s"$staged/gen2_adv", evDir, "g2")
-      run()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     s.read.parquet(outDir)
       .select(get_json_object(col("value"), "$.after.id")
         .cast("int").as("id"), col("lsn"), col("dead"))

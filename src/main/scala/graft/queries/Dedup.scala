@@ -490,12 +490,8 @@ object Dedup {
     * batch pays the one-time full-CC cost any labeling must.
     */
   def qDedupClustersStream(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val base = Cdc.gateTmpDir("graft_clusters_stream", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val (inDir, store, ck) = (s"$base/in", s"$base/store", s"$base/ck")
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_clusters_stream", d))
     val c = Tables.customer(s, d)
       .select(col("c_custkey").cast("int").as("id"))
       .stage() // nodes + all four delta rules + the endpoint guard
@@ -515,40 +511,24 @@ object Dedup {
     // markers are the single-step touched set the oracle folds
     e1.coalesce(1).write.parquet(s"$base/gen1")
     delta.coalesce(1).write.parquet(s"$base/gen2")
-    val state = new graft.cdc.VersionedState(s, store, "labels")
-    def run(): Unit =
-      s.readStream.schema("a INT, b INT").parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val bt = batch.cache()
-          // bounded read (< id): a replayed batch folds into the state
-          // BEFORE its own publish (CC re-application happens to be
-          // idempotent, but the discipline is uniform across gates)
-          val next = state.readLatestBefore("labels", id) match {
-            case Some(lbl) => graft.operators.IncrementalComponents
-              .step(lbl.select(col("node"), col("label")), bt,
-                "node", "label", "a", "b", "via")
-            case None => graft.operators.MinLabelComponents
-              .components(nodes, bt, "node", "a", "b")
-              .withColumn("via", lit("bootstrap"))
-          }
-          state.publish("labels", id, next)
-          bt.unpersist(): Unit
-        }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      Cdc.copyStaged(s, s"$base/gen1", inDir, "g1")
-      run() // generation 1 bootstraps the corpus labeling
-      // generation 2 lands while the stream is DOWN; the restarted run
-      // must resume from the checkpoint and APPLY it as one step
-      Cdc.copyStaged(s, s"$base/gen2", inDir, "g2")
-      run()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    state.readLatest("labels").get
+    // generation 1 bootstraps the corpus labeling; generation 2 lands
+    // while the stream is DOWN, and the restarted run must resume from
+    // the checkpoint and APPLY it as one step. The step reads strictly
+    // below its batch id (CC re-application happens to be idempotent,
+    // but the discipline is uniform across gates).
+    Drive.maintain(s, base, "labels",
+        Seq(Seq(s"$base/gen1" -> "g1"), Seq(s"$base/gen2" -> "g2")),
+        in => s.readStream.schema("a INT, b INT").parquet(in)) { batch =>
+      val next = batch.before("labels") match {
+        case Some(lbl) => graft.operators.IncrementalComponents
+          .step(lbl.select(col("node"), col("label")), batch.df,
+            "node", "label", "a", "b", "via")
+        case None => graft.operators.MinLabelComponents
+          .components(nodes, batch.df, "node", "a", "b")
+          .withColumn("via", lit("bootstrap"))
+      }
+      Seq(Drive.Kinds("labels" -> next))
+    }.state.readLatest("labels").get
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),
         concat_ws(",", sort_array(collect_list(col("node"))))
@@ -586,12 +566,9 @@ object Dedup {
     * tombstone batches — plus one state read/write per kind.
     */
   def qDedupClustersStreamTomb(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val base = Cdc.gateTmpDir("graft_clusters_stream_tomb", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val (inDir, store, ck) = (s"$base/in", s"$base/store", s"$base/ck")
+    import graft.streaming.Drive
+    val base = Drive.fresh(s,
+      Cdc.gateTmpDir("graft_clusters_stream_tomb", d))
     val c = Tables.customer(s, d)
       .select(col("c_custkey").cast("int").as("id"))
       .stage() // nodes + all gen-2/gen-3 rules + the endpoint guards
@@ -619,57 +596,44 @@ object Dedup {
     delta2.withColumn("op", lit("i")).coalesce(1)
       .write.parquet(s"$base/gen2")
     delta3.coalesce(1).write.parquet(s"$base/gen3")
-    val state = new graft.cdc.VersionedState(s, store, "labels")
-    def run(): Unit =
-      s.readStream.schema("a INT, b INT, op STRING").parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val bt = batch.cache()
-          // bounded read (< id): a replayed tombstone batch against its
-          // own published edge state would see its deletions already
-          // applied and its insertions already live — not idempotent
-          val (labels, edges) =
-            (state.readLatestBefore("labels", id),
-              state.readLatestBefore("edges", id)) match {
-              case (Some(lbl), Some(live)) =>
-                val (l3, e3) = graft.operators.IncrementalComponents
-                  .stepWithTombstones(lbl.select(col("node"), col("label")),
-                    live, bt, "op", "node", "label", "a", "b", "via")
-                // marker combine through the SHARED fold (one function
-                // for this gate and its batch twin — round-10 advisory);
-                // append-only batches emit the step's own markers
-                val out =
-                  if (bt.filter(col("op") === "d").isEmpty) l3
-                  else graft.operators.IncrementalComponents
-                    .combineTombstoneMarkers(l3, lbl, "node", "label",
-                      "via", "via", "via")
-                (out, e3)
-              case _ =>
-                val ins = bt.filter(col("op") =!= "d")
-                  .select(col("a"), col("b"))
-                (graft.operators.MinLabelComponents
-                  .components(nodes, ins, "node", "a", "b")
-                  .withColumn("via", lit("bootstrap")), ins)
-            }
-          // edge state first, the version-anchoring labels LAST
-          state.publish("edges", id, edges)
-          state.publish("labels", id, labels)
-          bt.unpersist(): Unit
+    // generation 1 bootstraps labels + live edges; generation 2 is
+    // append-only (the resumed stream must take the O(Δ) step);
+    // generation 3 is the tombstone mid-stream: detect, recompute
+    // scoped, combine
+    Drive.maintain(s, base, "labels",
+        Seq("gen1" -> "g1", "gen2" -> "g2", "gen3" -> "g3")
+          .map { case (g, p) => Seq(s"$base/$g" -> p) },
+        in => s.readStream.schema("a INT, b INT, op STRING").parquet(in)) {
+        batch =>
+      val bt = batch.df
+      // bounded read (< id): a replayed tombstone batch against its own
+      // published edge state would see its deletions already applied
+      // and its insertions already live — not idempotent
+      val (labels, edges) =
+        (batch.before("labels"), batch.before("edges")) match {
+          case (Some(lbl), Some(live)) =>
+            val (l3, e3) = graft.operators.IncrementalComponents
+              .stepWithTombstones(lbl.select(col("node"), col("label")),
+                live, bt, "op", "node", "label", "a", "b", "via")
+            // marker combine through the SHARED fold (one function for
+            // this gate and its batch twin — round-10 advisory);
+            // append-only batches emit the step's own markers
+            val out =
+              if (bt.filter(col("op") === "d").isEmpty) l3
+              else graft.operators.IncrementalComponents
+                .combineTombstoneMarkers(l3, lbl, "node", "label",
+                  "via", "via", "via")
+            (out, e3)
+          case _ =>
+            val ins = bt.filter(col("op") =!= "d")
+              .select(col("a"), col("b"))
+            (graft.operators.MinLabelComponents
+              .components(nodes, ins, "node", "a", "b")
+              .withColumn("via", lit("bootstrap")), ins)
         }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      Cdc.copyStaged(s, s"$base/gen1", inDir, "g1")
-      run() // generation 1 bootstraps labels + live edges
-      Cdc.copyStaged(s, s"$base/gen2", inDir, "g2")
-      run() // append-only: resumed stream must take the O(Δ) step
-      Cdc.copyStaged(s, s"$base/gen3", inDir, "g3")
-      run() // tombstone mid-stream: detect, recompute scoped, combine
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    state.readLatest("labels").get
+      // edge state first, the version-anchoring labels LAST
+      Seq(Drive.Kinds("edges" -> edges), Drive.Kinds("labels" -> labels))
+    }.state.readLatest("labels").get
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),
         concat_ws(",", sort_array(collect_list(col("node"))))

@@ -569,7 +569,7 @@ object Events {
     */
   private def ssJoinRun(s: SparkSession, cDir: String, pDir: String,
       outDir: String, ck: String): Unit = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.OutputMode
     val schema =
       "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
     def src(dir: String): DataFrame =
@@ -582,15 +582,22 @@ object Events {
       .select(col("event_id").as("purchase_id"), col("ts").as("p_ts"),
         col("user_id").as("p_user"), col("value"))
       .withWatermark("p_ts", "365 days")
-    clicks.join(purch,
+    graft.streaming.Drive.await(clicks.join(purch,
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ck)
-      .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
+      .writeStream.format("parquet").option("path", outDir)
+      .outputMode(OutputMode.Append), ck)
   }
+
+  /** The two sides' slices `is` of the staged click/purchase fixture,
+    * landed into the gate's `clicks`/`purch` input dirs.
+    */
+  private def ssSlices(staged: String, base: String, is: Range)
+      : Seq[graft.streaming.Drive.Land] =
+    is.flatMap(i => Seq(
+      graft.streaming.Drive.Land(s"$staged/clicks/s$i", s"$base/clicks", s"s$i"),
+      graft.streaming.Drive.Land(s"$staged/purch/s$i", s"$base/purch", s"s$i")))
 
   /** The order-canonical per-user rollup over the joined-pair sink —
     * identical for both inner-join gates (their oracle is shared).
@@ -608,26 +615,13 @@ object Events {
       .orderBy(col("user_id"))
 
   def qStreamStreamJoin(s: SparkSession, d: String): DataFrame = {
-    val base = Cdc.gateTmpDir("graft_ss_join", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_ss_join", d))
     val (cDir, pDir, outDir, ck) =
       (s"$base/clicks", s"$base/purch", s"$base/out", s"$base/ck")
-    val staged = ssJoinStage(s, d)
-    for (i <- 0 until 3) {
-      Cdc.copyStaged(s, s"$staged/clicks/s$i", cDir, s"s$i")
-      Cdc.copyStaged(s, s"$staged/purch/s$i", pDir, s"s$i")
-    }
-    // state partitions sized to state volume (the qCdcTxnStream pattern):
-    // a stream-stream join keeps FOUR state stores per partition per
-    // batch, so 32 shuffle partitions × 4 micro-batches is pure fixed
-    // overhead at any local SF — on a cluster this is sized to state
-    // volume, not defaulted
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try ssJoinRun(s, cDir, pDir, outDir, ck)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // one generation, one uninterrupted run over all three slices
+    Drive.generations(s, Seq(ssSlices(ssJoinStage(s, d), base, 0 until 3)))(
+      () => ssJoinRun(s, cDir, pDir, outDir, ck))
     ssJoinRollup(s, outDir)
   }
 
@@ -656,27 +650,17 @@ object Events {
     * or driver loss.
     */
   def qStreamStreamJoinRestart(s: SparkSession, d: String): DataFrame = {
-    val base = Cdc.gateTmpDir("graft_ss_join_restart", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_ss_join_restart", d))
     val (cDir, pDir, outDir, ck) =
       (s"$base/clicks", s"$base/purch", s"$base/out", s"$base/ck")
     val staged = ssJoinStage(s, d)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      Cdc.copyStaged(s, s"$staged/clicks/s0", cDir, "s0")
-      Cdc.copyStaged(s, s"$staged/purch/s0", pDir, "s0")
-      ssJoinRun(s, cDir, pDir, outDir, ck) // slice 0 buffers join state
-      // slices 1–2 land while the stream is DOWN; the restarted run must
-      // recover the four join stores and match across the boundary
-      for (i <- 1 until 3) {
-        Cdc.copyStaged(s, s"$staged/clicks/s$i", cDir, s"s$i")
-        Cdc.copyStaged(s, s"$staged/purch/s$i", pDir, s"s$i")
-      }
-      ssJoinRun(s, cDir, pDir, outDir, ck)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // slice 0 buffers join state; slices 1–2 land while the stream is
+    // DOWN, and the restarted run must recover the four join stores and
+    // match across the boundary
+    Drive.generations(s, Seq(ssSlices(staged, base, 0 until 1),
+        ssSlices(staged, base, 1 until 3)))(
+      () => ssJoinRun(s, cDir, pDir, outDir, ck))
     ssJoinRollup(s, outDir)
   }
 
@@ -738,11 +722,9 @@ object Events {
       lit(0.0).as("value"))
 
   def qStreamStreamOuterJoin(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val base = Cdc.gateTmpDir("graft_ss_outer", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_ss_outer", d))
     val (cDir, pDir, outDir, ck) =
       (s"$base/clicks", s"$base/purch", s"$base/out", s"$base/ck")
     // _v2 suffix: the sentinel-ts recipe changed after the first staging
@@ -766,35 +748,28 @@ object Events {
       sentinelRow(s, hi, -2L, "purchase")
         .coalesce(1).write.parquet(s"$st/purch/s3")
     }
-    for (i <- 0 until 4) {
-      Cdc.copyStaged(s, s"$staged/clicks/s$i", cDir, s"s$i")
-      Cdc.copyStaged(s, s"$staged/purch/s$i", pDir, s"s$i")
-    }
     val schema =
       "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
     def src(dir: String): DataFrame =
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
-    val clicks = src(cDir)
-      .select(col("event_id").as("click_id"), col("ts").as("c_ts"),
-        col("user_id").as("c_user"))
-      .withWatermark("c_ts", "1 hour")
-    val purch = src(pDir)
-      .select(col("event_id").as("purchase_id"), col("ts").as("p_ts"),
-        col("user_id").as("p_user"))
-      .withWatermark("p_ts", "1 hour")
-    // state partitions sized to state volume (see qStreamStreamJoin)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try clicks.join(purch,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"),
-        "left_outer")
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ck)
-      .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // one generation: every tertile plus the sentinels, one run
+    Drive.generations(s, Seq(ssSlices(staged, base, 0 until 4))) { () =>
+      val clicks = src(cDir)
+        .select(col("event_id").as("click_id"), col("ts").as("c_ts"),
+          col("user_id").as("c_user"))
+        .withWatermark("c_ts", "1 hour")
+      val purch = src(pDir)
+        .select(col("event_id").as("purchase_id"), col("ts").as("p_ts"),
+          col("user_id").as("p_user"))
+        .withWatermark("p_ts", "1 hour")
+      Drive.await(clicks.join(purch,
+          col("c_user") === col("p_user") &&
+            col("p_ts") >= col("c_ts") &&
+            col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"),
+          "left_outer")
+        .writeStream.format("parquet").option("path", outDir)
+        .outputMode(OutputMode.Append), ck)
+    }
     s.read.parquet(outDir)
       .filter(col("c_user") >= 0)
       .groupBy(col("c_user"))
@@ -831,11 +806,9 @@ object Events {
     * shuffle is the same single user-keyed exchange as the batch twin.
     */
   def qStreamSession(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val base = Cdc.gateTmpDir("graft_stream_session", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_stream_session", d))
     val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
     val staged = Cdc.stageOnce(s, "graft_stream_session_staged", d) { st =>
       val ev = events(s, d)
@@ -848,25 +821,21 @@ object Events {
       sentinelRow(s, lo + 3 * step, -1L, "click")
         .coalesce(1).write.parquet(s"$st/s3")
     }
-    for (i <- 0 until 4) Cdc.copyStaged(s, s"$staged/s$i", inDir, s"s$i")
     val schema =
       "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
-    // state partitions sized to state volume (see qStreamStreamJoin)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(MoneyVal).as("sum_value"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"), col("sum_value"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ck)
-      .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // one generation: every tertile plus the sentinel, one run
+    Drive.generations(s,
+        Seq((0 until 4).map(i => Drive.Land(s"$staged/s$i", inDir, s"s$i"))))(
+      () => Drive.await(s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(session_window(col("ts"), "30 minutes").as("w"),
+          col("user_id"))
+        .agg(count(lit(1)).as("n_events"), sum(MoneyVal).as("sum_value"))
+        .select(col("user_id"), col("w.start").as("session_start"),
+          col("w.end").as("session_end"), col("n_events"), col("sum_value"))
+        .writeStream.format("parquet").option("path", outDir)
+        .outputMode(OutputMode.Append), ck))
     s.read.parquet(outDir)
       .filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("session_start"))
@@ -877,7 +846,7 @@ object Events {
     * a typed [[graft.streaming.RunningTopK]] processor keeps per-user
     * (count, exact cents sum, top-3 purchases) in a NAMED `ValueState`
     * in the RocksDB state store (the provider this API requires —
-    * pinned inside the gate's conf window), emits the running totals on
+    * pinned in the drive's conf window), emits the running totals on
     * every batch the user appears in, and must resume that state across
     * a CHECKPOINT RESTART placed mid-fixture: the final per-user
     * emission (max `n_events` — strictly increasing) equals the
@@ -896,12 +865,10 @@ object Events {
     * posture a 100 TB/day personalization pipeline runs with.
     */
   def qStreamTwsTopk(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.{Encoders, Dataset}
-    val base = Cdc.gateTmpDir("graft_tws_topk", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_tws_topk", d))
     val (inDir, sink, ck) = (s"$base/in", s"$base/sink", s"$base/ck")
     val staged = Cdc.stageOnce(s, "graft_tws_topk_staged", d) { st =>
       val ev = events(s, d)
@@ -928,34 +895,14 @@ object Events {
         .groupByKey(_.user_id)(Encoders.scalaLong)
         .transformWithState(new graft.streaming.RunningTopK(3),
           TimeMode.None(), OutputMode.Update())
-      out.toDF()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$sink/batch=$id"): Unit
-        }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
+      Drive.await(Drive.batchSink(out.toDF(), sink), ck)
     }
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provider)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set(provider, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      Cdc.copyStaged(s, s"$staged/s0", inDir, "s0")
-      Cdc.copyStaged(s, s"$staged/s1", inDir, "s1")
-      run() // tertiles 1–2 build per-user state
-      // tertile 3 lands while the stream is DOWN: the restarted run must
-      // fold into RESTORED RocksDB state (a re-bootstrap resets n_events
-      // for every returning user and hash-fails)
-      Cdc.copyStaged(s, s"$staged/s2", inDir, "s2")
-      run()
-    } finally {
-      prevProv.fold(s.conf.unset(provider))(s.conf.set(provider, _))
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    // tertiles 1–2 build per-user state; tertile 3 lands while the
+    // stream is DOWN: the restarted run must fold into RESTORED RocksDB
+    // state (a re-bootstrap resets n_events for every returning user and
+    // hash-fails)
+    Drive.generations(s, Seq(Seq(0, 1), Seq(2)).map(_.map(i =>
+      Drive.Land(s"$staged/s$i", inDir, s"s$i"))), rocksDb = true)(run)
     // final state per user = the max-n_events batch snapshot (the count
     // is cumulative, so the last emission carries the max; a re-emitted
     // tie is byte-identical). Argmax aggregate instead of a rank-1
@@ -992,12 +939,10 @@ object Events {
     * closed session, the information minimum.
     */
   def qStreamTwsSession(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.{Dataset, Encoders}
-    val base = Cdc.gateTmpDir("graft_tws_session", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_tws_session", d))
     val (inDir, sink, ck) = (s"$base/in", s"$base/sink", s"$base/ck")
     val staged = Cdc.stageOnce(s, "graft_tws_session_staged", d) { st =>
       val ev = events(s, d)
@@ -1031,34 +976,13 @@ object Events {
         .transformWithState(
           new graft.streaming.SessionProcessor(30L * 60 * 1000),
           TimeMode.EventTime(), OutputMode.Update())
-      out.toDF()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$sink/batch=$id"): Unit
-        }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
+      Drive.await(Drive.batchSink(out.toDF(), sink), ck)
     }
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provider)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set(provider, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      Cdc.copyStaged(s, s"$staged/s0", inDir, "s0")
-      Cdc.copyStaged(s, s"$staged/s1", inDir, "s1")
-      run() // tertiles 1–2: open sessions + timers land in the store
-      // tertile 3 + sentinel arrive after a restart: straddling sessions
-      // and their timers must come back from the checkpoint
-      Cdc.copyStaged(s, s"$staged/s2", inDir, "s2")
-      Cdc.copyStaged(s, s"$staged/s3", inDir, "s3")
-      run()
-    } finally {
-      prevProv.fold(s.conf.unset(provider))(s.conf.set(provider, _))
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    // tertiles 1–2: open sessions + timers land in the store; tertile 3
+    // + sentinel arrive after a restart: straddling sessions and their
+    // timers must come back from the checkpoint
+    Drive.generations(s, Seq(Seq(0, 1), Seq(2, 3)).map(_.map(i =>
+      Drive.Land(s"$staged/s$i", inDir, s"s$i"))), rocksDb = true)(run)
     s.read.parquet(sink)
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
@@ -1105,10 +1029,8 @@ object Events {
   def qStreamTwsActivity(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, TimeMode, Trigger}
     import org.apache.spark.sql.{Dataset, Encoders}
-    val base = Cdc.gateTmpDir("graft_tws_activity", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_tws_activity", d))
     val (inDir, sink, ck) = (s"$base/in", s"$base/sink", s"$base/ck")
     val staged = Cdc.stageOnce(s, "graft_tws_activity_staged", d) { st =>
       val ev = events(s, d)
@@ -1138,34 +1060,14 @@ object Events {
       // Trigger.Once, NOT AvailableNow: see the drive-shape scaladoc —
       // ProcessingTime mode makes AvailableNow run no-data batches
       // forever. One batch per run is exactly this gate's contract.
-      out.toDF()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$sink/batch=$id"): Unit
-        }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.Once())
-        .start().awaitTermination()
+      Drive.await(Drive.batchSink(out.toDF(), sink), ck, Trigger.Once())
     }
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provider)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set(provider, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      // each slice is one Trigger.Once batch; every run after the first
-      // is a checkpoint restart that must fold into RESTORED collection
-      // state (a re-bootstrap resets every returning user's histogram
-      // and purchase log and hash-fails)
-      for (i <- 0 until 3) {
-        Cdc.copyStaged(s, s"$staged/s$i", inDir, s"s$i")
-        run()
-      }
-    } finally {
-      prevProv.fold(s.conf.unset(provider))(s.conf.set(provider, _))
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    // each slice is one Trigger.Once batch; every run after the first
+    // is a checkpoint restart that must fold into RESTORED collection
+    // state (a re-bootstrap resets every returning user's histogram and
+    // purchase log and hash-fails)
+    Drive.generations(s, (0 until 3).map(i =>
+      Seq(Drive.Land(s"$staged/s$i", inDir, s"s$i"))), rocksDb = true)(run)
     // final state per user = the max-n_total batch snapshot (cumulative
     // count, same argmax-not-window rationale as qStreamTwsSession)
     s.read.parquet(sink)
@@ -1223,13 +1125,9 @@ object Events {
     * dead-letter write is sized to the late volume, not the stream.
     */
   def qStreamLateDeadletter(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val base = Cdc.gateTmpDir("graft_late_dlq", d)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val (inDir, store, sink, ck) =
-      (s"$base/in", s"$base/store", s"$base/sink", s"$base/ck")
+    import graft.streaming.Drive
+    val base = Drive.fresh(s, Cdc.gateTmpDir("graft_late_dlq", d))
+    val sink = s"$base/sink"
     val staged = Cdc.stageOnce(s, "graft_late_dlq_staged", d) { st =>
       val ev = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -1246,58 +1144,42 @@ object Events {
           .select(col("event_id"), col("ts"), col("user_id"), col("value"))
           .coalesce(1).write.parquet(s"$st/s$i")
     }
-    val state = new graft.cdc.VersionedState(s, store, "wm")
-    def run(): Unit =
-      s.readStream
-        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
-        // one file per micro-batch (round-10 advisory): tertiles 0 and 1
-        // must publish watermark state as SEPARATE batches, matching the
-        // oracle's per-batch m0/m01 sequence by construction, not by the
-        // coincidence that merged batches classify identically
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val bt = batch.cache()
-          // bounded read (< id): a checkpoint-replayed batch must
-          // classify against the watermark BEFORE its own publish —
-          // an unbounded read would see the batch's own max and
-          // re-classify differently than the first attempt
-          val prevMax: Option[Long] = state.readLatestBefore("wm", id)
-            .map(_.head().getLong(0))
-          val classified = prevMax match {
-            case Some(mx) => bt.withColumn("is_late",
-              unix_millis(col("ts")) < lit(mx - LateDelayMs))
-            case None => bt.withColumn("is_late", lit(false))
-          }
-          // overwrite-by-batch-path: a post-restart replay is idempotent
-          classified.select(col("event_id"), col("user_id"), col("value"),
-              col("is_late"))
-            .write.mode("overwrite").parquet(s"$sink/batch=$id")
-          val batchMax: Option[Long] = {
-            val r = bt.agg(max(unix_millis(col("ts")))).head()
-            if (r.isNullAt(0)) None else Some(r.getLong(0))
-          }
-          val newMax = (prevMax ++ batchMax).foldLeft(Long.MinValue)(_ max _)
-          if (newMax != Long.MinValue)
-            state.publish("wm", id,
-              s.range(1).select(lit(newMax).as("max_ms")))
-          bt.unpersist(): Unit
-        }
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      Cdc.copyStaged(s, s"$staged/s0", inDir, "s0")
-      Cdc.copyStaged(s, s"$staged/s1", inDir, "s1")
-      run() // batches 0–1 build the explicit watermark
-      // the stragglers land while the stream is DOWN; the restarted run
-      // must classify them against the CHECKPOINTED watermark state
-      Cdc.copyStaged(s, s"$staged/s2", inDir, "s2")
-      run()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // batches 0–1 build the explicit watermark; the stragglers land
+    // while the stream is DOWN, and the restarted run must classify them
+    // against the CHECKPOINTED watermark state
+    Drive.maintain(s, base, "wm",
+        Seq(Seq(0, 1), Seq(2)).map(_.map(i => s"$staged/s$i" -> s"s$i")),
+        in => s.readStream
+          .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
+          // one file per micro-batch (round-10 advisory): tertiles 0 and
+          // 1 must publish watermark state as SEPARATE batches, matching
+          // the oracle's per-batch m0/m01 sequence by construction, not
+          // by the coincidence that merged batches classify identically
+          .option("maxFilesPerTrigger", "1")
+          .parquet(in)) { batch =>
+      val bt = batch.df
+      // bounded read (< id): a checkpoint-replayed batch must classify
+      // against the watermark BEFORE its own publish — an unbounded read
+      // would see the batch's own max and re-classify differently than
+      // the first attempt
+      val prevMax: Option[Long] = batch.before("wm").map(_.head().getLong(0))
+      val classified = prevMax match {
+        case Some(mx) => bt.withColumn("is_late",
+          unix_millis(col("ts")) < lit(mx - LateDelayMs))
+        case None => bt.withColumn("is_late", lit(false))
+      }
+      // overwrite-by-batch-path: a post-restart replay is idempotent
+      classified.select(col("event_id"), col("user_id"), col("value"),
+          col("is_late"))
+        .write.mode("overwrite").parquet(s"$sink/batch=${batch.id}")
+      val batchMax: Option[Long] = {
+        val r = bt.agg(max(unix_millis(col("ts")))).head()
+        if (r.isNullAt(0)) None else Some(r.getLong(0))
+      }
+      val newMax = (prevMax ++ batchMax).foldLeft(Long.MinValue)(_ max _)
+      if (newMax == Long.MinValue) Nil
+      else Seq(Drive.Kinds("wm" -> s.range(1).select(lit(newMax).as("max_ms"))))
+    }
     val out = s.read.parquet(sink)
     // accounting contract: nothing silently dropped, dead-letter is
     // real — one aggregate over the sink, one count of the base
