@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-level engine tuning shared by every driver-contract main
-  * (Bench / Verify / Explain / Profile), so the measured posture and the
-  * correctness posture can never drift apart. Both knobs are
+  * (Bench / Verify / Explain / Profile / CdcDemo), so the measured posture
+  * and the correctness posture can never drift apart. Both settings are
   * scale-ADAPTIVE (they delegate the actual sizing decision to AQE /
-  * the workload), parameterised by env with these defaults — see
-  * OPTIMIZATION_r13.md for the measurements behind them.
+  * the workload) — see OPTIMIZATION_r13.md for the measurements behind
+  * them.
   *
   *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`
   *    (guide §2.2/§2.4): the engine's `.stage()` (persist) call sites
@@ -39,21 +39,23 @@ import org.apache.spark.sql.SparkSession
   */
 object EngineTuning {
 
+  /** The tuned session confs, in the order [[apply]] sets them. */
+  private val Tuning = Seq(
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> "20000")
+
   /** STATIC-CONF constraint (round-13 advisory):
     * `spark.sql.codegen.cache.maxEntries` is a static SQL conf — it only
     * takes effect when set BEFORE the first SparkSession in the JVM, and
     * builder-supplied values are silently ignored once a session exists.
-    * All four mains call this (through [[session]]) before `getOrCreate`; an
+    * Every main calls this (through [[session]]) before `getOrCreate`; an
     * embedder that already created a session should call [[verify]] to
     * fail loudly instead of running with the 100-entry default.
     */
-  def apply(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
+  def apply(b: SparkSession.Builder): SparkSession.Builder =
+    Tuning.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
-  /** The driver-contract mains' one session: [[apply]]'s tuning on
+  /** The mains' one session: [[apply]]'s tuning on
     * `local[SPARK_GRAFT_CPUS]` (the caller's default when unset), as many
     * shuffle partitions as cores, UTC, no UI, plus the caller's `extra`
     * confs; then [[verify]] and WARN logging.
@@ -76,19 +78,30 @@ object EngineTuning {
   /** Assert the active session actually runs with the tuning [[apply]]
     * requested — catches the static-conf silent-ignore case above.
     */
-  def verify(spark: SparkSession): Unit = {
-    val expect = Seq(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"),
-      "spark.sql.codegen.cache.maxEntries" ->
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
-    expect.foreach { case (k, v) =>
+  def verify(spark: SparkSession): Unit =
+    Tuning.foreach { case (k, v) =>
       val got = spark.conf.get(k)
       require(got == v,
         s"EngineTuning: $k is '$got', expected '$v' — a SparkSession " +
           "existed before EngineTuning ran (static confs cannot be " +
           "applied retroactively); create the session through " +
           "EngineTuning(builder) before any other getOrCreate")
+    }
+
+  /** Run `body` with `confs` set on `s`'s session; the caller's values
+    * come back afterwards, in a `finally` — a key that was unset before
+    * is unset again, not pinned to its default (the raw session map, not
+    * `conf.getOption`, which reports a registered key's default). A gate
+    * must not leak its settings into later gates' plans.
+    */
+  def withConfs[A](s: SparkSession, confs: (String, String)*)(
+      body: => A): A = {
+    val set = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) =>
+      v.fold(s.conf.unset(k))(s.conf.set(k, _))
     }
   }
 }

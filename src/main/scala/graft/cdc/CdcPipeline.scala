@@ -76,42 +76,21 @@ object CdcPipeline {
       col("enriched.source_table").as("source_table"),
       col("enriched.value").as("value"))
 
-  /** Streaming pipeline: JSON-lines dir → enrich → JSON-lines dir.
-    * `Trigger.AvailableNow` drains what exists then stops (deterministic for
-    * tests); pass `trigger = None` for a continuous micro-batch run.
+  /** Streaming pipeline: envelope log dir → enrich → envelope log dir,
+    * both ends on the `graft-cdc` DataSource V2 table
+    * ([[graft.sources.CdcTableProvider]]). The source tails the input's
+    * name-sorted file list with checkpointed offsets and fails loudly on a
+    * file that lands behind the committed prefix; `maxFilesPerTrigger`
+    * bounds each micro-batch (and so a recovery batch). The sink
+    * rename-commits monotone names, so its output is itself a tailable
+    * `graft-cdc` log that feeds the next stage directly — the reference's
+    * topic chaining (`docs/architecture.md:30-41`).
     *
-    * `fanOutByTable = true` partitions the sink by source table
-    * (`source_table=<t>/` directories), mirroring the reference's
-    * one-topic-per-table routing; at scale this also gives per-table
-    * readers partition pruning for free.
-    */
-  def start(spark: SparkSession, inDir: String, outDir: String,
-      checkpointDir: String, cfg: EnrichConfig = EnrichConfig(),
-      availableNow: Boolean = true,
-      fanOutByTable: Boolean = false): StreamingQuery = {
-    val values =
-      if (fanOutByTable) routedValues(CdcSource.streamJsonLines(spark, inDir), cfg)
-      else enrichedValues(CdcSource.streamJsonLines(spark, inDir), cfg)
-    var writer = values
-      .writeStream
-      .format("text")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-    if (fanOutByTable) writer = writer.partitionBy("source_table")
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
-
-  /** V2-transport variant of [[start]]: both ends ride the `graft-cdc`
-    * DataSource V2 table ([[graft.sources.CdcTableProvider]]) instead of
-    * text source/sink. What that buys over the text transport:
-    * admission-controlled tailing (`maxFilesPerTrigger` bounds recovery
-    * batches), a loud failure on out-of-order input files (the text
-    * source silently skips them), and fan-out into per-table
-    * subdirectories that are THEMSELVES tailable `graft-cdc` logs under
-    * rename-committed monotone names — so each table's output feeds the
-    * next pipeline stage directly, the reference's topic-chaining shape
-    * (`docs/architecture.md:30-41`).
+    * `Trigger.AvailableNow` drains what exists then stops (deterministic
+    * for tests); pass `availableNow = false` for a continuous micro-batch
+    * run. `fanOutByTable = true` routes each record into one subdirectory
+    * per source table ([[routedValues]]), mirroring the reference's
+    * one-topic-per-table layout.
     */
   def startV2(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, cfg: EnrichConfig = EnrichConfig(),
@@ -136,11 +115,14 @@ object CdcPipeline {
       .start()
   }
 
-  /** Batch twin (snapshot mode, SURVEY.md §2.1 S2): same transform, bounded
-    * input — how Debezium replays pre-existing rows through the same path.
+  /** Batch twin (snapshot mode, SURVEY.md §2.1 S2): same transform and
+    * the same `graft-cdc` reader and sink as [[startV2]], bounded input —
+    * how Debezium replays pre-existing rows through the same path.
+    * `outDir` is overwritten.
     */
   def runBatch(spark: SparkSession, inDir: String, outDir: String,
       cfg: EnrichConfig = EnrichConfig()): Unit =
-    enrichedValues(CdcSource.readJsonLines(spark, inDir), cfg)
-      .write.mode("overwrite").text(outDir)
+    enrichedValues(spark.read.format("graft-cdc")
+        .schema(CdcDataSource.ValueOnlySchema).load(inDir), cfg)
+      .write.format("graft-cdc").mode("overwrite").save(outDir)
 }

@@ -9,21 +9,14 @@ import org.apache.spark.sql.types.StructType
   * The reference's source is config-declared Debezium-over-Pulsar; in Spark
   * the same capability is a `readStream` over any transport that carries the
   * envelope JSON. Production path = Kafka (`format("kafka")` over Debezium
-  * topics); test/local path = JSON-lines file streams. Both produce the same
-  * one-string-column contract that [[Enrich]] consumes, so the transform is
+  * topics). The file path is not here: it is the `graft-cdc` table
+  * ([[graft.sources.CdcTableProvider]]) read with
+  * [[graft.sources.CdcDataSource.ValueOnlySchema]], which is what
+  * [[CdcPipeline]] tails. Every variant produces the same one-string-column
+  * contract that [[Enrich]] consumes, so the transform is
   * transport-agnostic.
   */
 object CdcSource {
-
-  /** S1 (file variant): continuous change stream from JSON-lines files.
-    * One `value` string column per message. `maxFilesPerTrigger` paces
-    * micro-batches (the Spark analogue of connector backpressure).
-    */
-  def streamJsonLines(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(dir)
 
   /** S1 (Kafka variant, production): Debezium topics carry the envelope in
     * the record value. Subscribe pattern = per-table topics
@@ -35,9 +28,10 @@ object CdcSource {
     *   1. point `bootstrap` at the Kafka cluster fronting Debezium;
     *   2. `topicPattern = "dbserver1\\.public\\..*"` subscribes every
     *      per-table topic the connector routes to;
-    *   3. downstream is identical to the file path: [[CdcEnvelope.parse]] →
-    *      [[Enrich]] → sink; `message_id`/`topic`/`partition` flow into
-    *      P16 `processing_metadata`.
+    *   3. downstream is identical to the `graft-cdc` file path:
+    *      [[CdcEnvelope.parse]] → [[Enrich]] → sink;
+    *      `message_id`/`topic`/`partition` flow into P16
+    *      `processing_metadata`.
     */
   def streamKafka(spark: SparkSession, bootstrap: String, topicPattern: String): DataFrame =
     projectKafka(spark.readStream
@@ -61,19 +55,16 @@ object CdcSource {
   /** S1 (TCP socket variant): envelope lines over a live network socket —
     * the in-sandbox stand-in for a broker transport (no Kafka broker or
     * connector jars ship here; see the README runbook for the real
-    * wiring). Emits the same one-string-column contract as the file and
-    * Kafka variants, so everything downstream is identical; exercised
-    * end-to-end over a real socket in `CdcSocketTransportSpec`. Not for
-    * production (the socket source is unreplayable — no offsets), which
-    * is exactly why the checkpointed file/Kafka variants exist.
+    * wiring). Emits the same one-string-column contract as the `graft-cdc`
+    * file table and the Kafka variant, so everything downstream is
+    * identical; exercised end-to-end over a real socket in
+    * `CdcSocketTransportSpec`. Not for production (the socket source is
+    * unreplayable — no offsets), which is exactly why the checkpointed
+    * file/Kafka variants exist.
     */
   def streamSocket(spark: SparkSession, host: String, port: Int): DataFrame =
     spark.readStream.format("socket")
       .option("host", host).option("port", port).load()
-
-  /** Batch twin of [[streamJsonLines]] for replay/snapshot processing. */
-  def readJsonLines(spark: SparkSession, dir: String): DataFrame =
-    spark.read.text(dir)
 
   /** S2: initial snapshot — wrap a batch table scan as `op='r'` envelopes,
     * exactly how Debezium replays existing rows through the same topic

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.EngineTuning.withConfs
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
@@ -48,20 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object Adaptive {
 
-  /** Set `confs` for the duration of `body`, restoring previous values
-    * (or unsetting) afterwards — a gate must not leak its thresholds
-    * into later gates' plans.
-    */
-  private def withConfs[T](s: SparkSession, confs: Seq[(String, String)])(
-      body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
-  }
-
   /** AQE skew-join split, witnessed on the FINAL adaptive plan. The fact
     * side deliberately funnels every non-first lineitem row onto one hot
     * supplier key (~75% of the table into one shuffle partition — the
@@ -76,7 +63,7 @@ object Adaptive {
     * the runtime stats both detected and mitigated the skew.
     */
   def qAqeSkewJoin(s: SparkSession, d: String): DataFrame =
-    withConfs(s, Seq(
+    withConfs(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -86,7 +73,7 @@ object Adaptive {
       // default — the witness pins the mechanism, not the numbers
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "24576",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "24576",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")) {
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true") {
       // AQE splits a skewed REDUCE partition at MAP-output granularity:
       // each split spec is a contiguous range of mapper outputs. The
       // local fixtures are single-row-group parquet files — ONE mapper —
@@ -138,11 +125,11 @@ object Adaptive {
     * is the plain join.
     */
   def qRuntimeBloomJoin(s: SparkSession, d: String): DataFrame =
-    withConfs(s, Seq(
+    withConfs(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(s, d)
         .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
       val p = Tables.part(s, d).filter(col("p_brand") === "Brand#23")
@@ -192,11 +179,11 @@ object Adaptive {
     * performance.
     */
   def qAqeCoalesce(s: SparkSession, d: String): DataFrame =
-    withConfs(s, Seq(
+    withConfs(s,
       "spark.sql.shuffle.partitions" -> "200",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8388608")) {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8388608") {
       val q = Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_linestatus"),
           col("l_quantity"), col("l_extendedprice"))

@@ -255,15 +255,6 @@ object Curation {
   /** Context-window budget for sequence packing (whitespace tokens). */
   private val PackBudget = 4096L
 
-  /** Sequential sequence packing by token offset: documents in doc_id
-    * order fill context windows of `PackBudget` tokens; each doc joins the
-    * window its FIRST token falls in (so a pack can overflow by at most
-    * one document's length — standard offset-based packing). Emits
-    * per-pack stats. The running token total is [[graft.operators.GlobalRank.withPrefixSum]]
-    * — the distributed range-partitioned formulation, NOT a global
-    * `Window.orderBy` (which would plan as a single-partition sort over
-    * the corpus, the one scale cliff this family otherwise avoids).
-    */
   /** Packing stage over a (doc_id, n_tokens) frame — SHARED by
     * [[qPackSequences]] and [[qCurationPipeline]] so the window/budget
     * semantics cannot drift.
@@ -295,6 +286,15 @@ object Curation {
        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
        |FROM c GROUP BY 1 ORDER BY pack_id""".stripMargin
 
+  /** Sequential sequence packing by token offset: documents in doc_id
+    * order fill context windows of `PackBudget` tokens; each doc joins the
+    * window its FIRST token falls in (so a pack can overflow by at most
+    * one document's length — standard offset-based packing). Emits
+    * per-pack stats. The running token total is [[graft.operators.GlobalRank.withPrefixSum]]
+    * — the distributed range-partitioned formulation, NOT a global
+    * `Window.orderBy` (which would plan as a single-partition sort over
+    * the corpus, the one scale cliff this family otherwise avoids).
+    */
   def qPackSequences(s: SparkSession, d: String): DataFrame =
     packStats(Tables.documents(s, d)
       .select(col("doc_id"),

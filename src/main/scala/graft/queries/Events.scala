@@ -225,7 +225,6 @@ object Events {
       .orderBy(col("event_id"))
   }
 
-  /** JSON property extraction + aggregation over the stream-shaped table. */
   /** The funnel pattern, leading-delimiter-anchored only: the char after
     * "purchase" is necessarily ',' or end-of-string (no event type has
     * "purchase" as a prefix), and NOT consuming that trailing comma means
@@ -272,6 +271,7 @@ object Events {
       .orderBy(col("user_id"))
   }
 
+  /** JSON property extraction + aggregation over the stream-shaped table. */
   def qEventsProps(s: SparkSession, d: String): DataFrame =
     events(s, d)
       .select(col("event_type"),
@@ -338,15 +338,6 @@ object Events {
       .orderBy(col("user_id"), col("type_a"), col("type_b"))
   }
 
-  /** Day-over-day volume anomaly detection — the pipeline-health monitor
-    * that catches a broken producer (volume collapse) or a runaway one
-    * (volume spike) per event type. One aggregate collapses the event
-    * volume to the tiny (type, day) frame; the lag window and the flag run
-    * over that aggregate, never the base table. The ratio is exact
-    * integer ×10000 (both operands positive, so Spark's truncating `div`
-    * and DuckDB's floor `//` agree); flagged when volume halves or grows
-    * ≥1.5× versus the previous observed day.
-    */
   /** Event-type transition matrix (first-order Markov statistics — the
     * next-event-prediction feature and the input to flow/sankey
     * analyses): for every consecutive pair in each user's timeline, count
@@ -433,6 +424,15 @@ object Events {
       .orderBy(col("event_type"), col("day"))
   }
 
+  /** Day-over-day volume anomaly detection — the pipeline-health monitor
+    * that catches a broken producer (volume collapse) or a runaway one
+    * (volume spike) per event type. One aggregate collapses the event
+    * volume to the tiny (type, day) frame; the lag window and the flag run
+    * over that aggregate, never the base table. The ratio is exact
+    * integer ×10000 (both operands positive, so Spark's truncating `div`
+    * and DuckDB's floor `//` agree); flagged when volume halves or grows
+    * ≥1.5× versus the previous observed day.
+    */
   def qVolumeAnomalies(s: SparkSession, d: String): DataFrame =
     anomalyFlags(events(s, d)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -508,41 +508,6 @@ object Events {
       .orderBy(col("day"))
   }
 
-  /** STREAM-STREAM watermarked join — click→purchase attribution run as
-    * two live Structured-Streaming sources joined on (user, event-time
-    * range): each purchase is attributed to every click by the same user
-    * in the preceding 2 hours. This is the one join shape whose state
-    * management is genuinely streaming-specific (both sides unbounded;
-    * each side buffers keyed state and emits a pair exactly once when
-    * the partner arrives), and the suite's other streaming gates don't
-    * cover it — they stream one delta source against maintained state.
-    *
-    * Drive: the events table is split into click/purchase parquet
-    * slices by `event_id mod 3` (three files per side), both sides read
-    * with `maxFilesPerTrigger=1` under `AvailableNow` — so the join
-    * processes three deterministic micro-batches per side and matching
-    * pairs STRADDLE batches (a batch-0 click matches a batch-2
-    * purchase), proving cross-batch state, not single-batch join. Both
-    * sides carry event-time watermarks; the delay is deliberately wider
-    * than the corpus span so NOTHING is ever late — streamed inner-join
-    * output is then exactly the batch join, and the DuckDB oracle
-    * recomputes it closed-form from `events`. (Watermark-driven state
-    * EVICTION semantics are pinned separately by `q_cdc_txn_evict` and
-    * the streaming specs; here the watermark bounds state without
-    * touching values, which is what keeps the gate hash-exact.)
-    *
-    * The joined pairs land in an append-mode parquet sink (exactly-once
-    * by sink manifest); one batch rollup over the sink makes the gate
-    * output small and order-canonical. All aggregates are integer/
-    * decimal-exact: pair counts, purchase-id sums, exact-µs latency
-    * sums, decimal value sums.
-    *
-    * Scale shape: stream-stream join state is partitioned by the join
-    * key (user), per-batch work is O(batch + matched state), and the
-    * range condition bounds each side's buffered window once watermarks
-    * advance (at 100 TB/day the delay is set to the real lateness SLA,
-    * not the corpus span — the eviction contract the specs pin).
-    */
   /** The click/purchase mod-3 slice fixture BOTH stream-stream inner
     * join gates stage (one recipe — the gates and their common oracle
     * can never drift).
@@ -614,6 +579,41 @@ object Events {
         col("latency_us_sum"), col("value_sum"))
       .orderBy(col("user_id"))
 
+  /** STREAM-STREAM watermarked join — click→purchase attribution run as
+    * two live Structured-Streaming sources joined on (user, event-time
+    * range): each purchase is attributed to every click by the same user
+    * in the preceding 2 hours. This is the one join shape whose state
+    * management is genuinely streaming-specific (both sides unbounded;
+    * each side buffers keyed state and emits a pair exactly once when
+    * the partner arrives), and the suite's other streaming gates don't
+    * cover it — they stream one delta source against maintained state.
+    *
+    * Drive: the events table is split into click/purchase parquet
+    * slices by `event_id mod 3` (three files per side), both sides read
+    * with `maxFilesPerTrigger=1` under `AvailableNow` — so the join
+    * processes three deterministic micro-batches per side and matching
+    * pairs STRADDLE batches (a batch-0 click matches a batch-2
+    * purchase), proving cross-batch state, not single-batch join. Both
+    * sides carry event-time watermarks; the delay is deliberately wider
+    * than the corpus span so NOTHING is ever late — streamed inner-join
+    * output is then exactly the batch join, and the DuckDB oracle
+    * recomputes it closed-form from `events`. (Watermark-driven state
+    * EVICTION semantics are pinned separately by `q_cdc_txn_evict` and
+    * the streaming specs; here the watermark bounds state without
+    * touching values, which is what keeps the gate hash-exact.)
+    *
+    * The joined pairs land in an append-mode parquet sink (exactly-once
+    * by sink manifest); one batch rollup over the sink makes the gate
+    * output small and order-canonical. All aggregates are integer/
+    * decimal-exact: pair counts, purchase-id sums, exact-µs latency
+    * sums, decimal value sums.
+    *
+    * Scale shape: stream-stream join state is partitioned by the join
+    * key (user), per-batch work is O(batch + matched state), and the
+    * range condition bounds each side's buffered window once watermarks
+    * advance (at 100 TB/day the delay is set to the real lateness SLA,
+    * not the corpus span — the eviction contract the specs pin).
+    */
   def qStreamStreamJoin(s: SparkSession, d: String): DataFrame = {
     import graft.streaming.Drive
     val base = Drive.fresh(s, Cdc.gateTmpDir("graft_ss_join", d))
@@ -664,6 +664,30 @@ object Events {
     ssJoinRollup(s, outDir)
   }
 
+  /** Event-time TERTILE boundaries of `ev` (lo epoch-ms, slice width):
+    * slice i = rows with (ts_ms − lo) / step == i, i ∈ 0..2 — three
+    * disjoint, time-ORDERED slices covering the corpus. Streaming gates
+    * feed slices as one-file micro-batches so no arrival ever lands
+    * behind a batch-advanced watermark (the never-late argument in
+    * [[qStreamStreamOuterJoin]]).
+    */
+  private def timeTertiles(ev: DataFrame): (Long, Long) = {
+    val b = ev.agg(min(unix_millis(col("ts"))).as("lo"),
+      max(unix_millis(col("ts"))).as("hi")).head()
+    (b.getLong(0), (b.getLong(1) - b.getLong(0)) / 3 + 1)
+  }
+
+  /** Far-future watermark-advancing sentinel row (30 days past `hi`),
+    * with a negative user id real data never carries so rollups filter
+    * it and join conditions never match it.
+    */
+  private def sentinelRow(s: SparkSession, hiMs: Long, user: Long,
+      eventType: String): DataFrame =
+    s.range(1).select(lit(-1L).as("event_id"),
+      timestamp_millis(lit(hiMs + 30L * 24 * 3600 * 1000)).as("ts"),
+      lit(user).as("user_id"), lit(eventType).as("event_type"),
+      lit(0.0).as("value"))
+
   /** Stream-stream LEFT OUTER join — the watermark-EVICTION semantics in
     * a hash gate: a click with no purchase in its 2-hour window emits its
     * null-extended row only when the global watermark passes the click's
@@ -697,30 +721,6 @@ object Events {
     * of arrivals, the posture a 100 TB/day attribution pipeline runs
     * with (the inner gate's span-wide delay would buffer a full day).
     */
-  /** Event-time TERTILE boundaries of `ev` (lo epoch-ms, slice width):
-    * slice i = rows with (ts_ms − lo) / step == i, i ∈ 0..2 — three
-    * disjoint, time-ORDERED slices covering the corpus. Streaming gates
-    * feed slices as one-file micro-batches so no arrival ever lands
-    * behind a batch-advanced watermark (the never-late argument in
-    * [[qStreamStreamOuterJoin]]).
-    */
-  private def timeTertiles(ev: DataFrame): (Long, Long) = {
-    val b = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).head()
-    (b.getLong(0), (b.getLong(1) - b.getLong(0)) / 3 + 1)
-  }
-
-  /** Far-future watermark-advancing sentinel row (30 days past `hi`),
-    * with a negative user id real data never carries so rollups filter
-    * it and join conditions never match it.
-    */
-  private def sentinelRow(s: SparkSession, hiMs: Long, user: Long,
-      eventType: String): DataFrame =
-    s.range(1).select(lit(-1L).as("event_id"),
-      timestamp_millis(lit(hiMs + 30L * 24 * 3600 * 1000)).as("ts"),
-      lit(user).as("user_id"), lit(eventType).as("event_type"),
-      lit(0.0).as("value"))
-
   def qStreamStreamOuterJoin(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.streaming.OutputMode
     import graft.streaming.Drive

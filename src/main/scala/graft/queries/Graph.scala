@@ -137,25 +137,6 @@ object Graph {
         .distinct()
     }
 
-  /** Per-node TRIANGLE counts on the supplier co-order graph — the classic
-    * clustering-coefficient / community-density primitive, in the
-    * degree-ordered ORIENTATION formulation (Suri & Vassilvitskii, WWW'11;
-    * Schank & Wagner's forward algorithm): orient every edge from its
-    * lower-(degree, id) endpoint to the higher, enumerate wedges only at
-    * each node's oriented OUT-neighbors, and close each wedge against the
-    * oriented edge set. Every triangle is counted exactly once — at its
-    * lowest-ordered vertex — and each node's credit is recovered by
-    * exploding the (u, x, y) witness into its three members.
-    *
-    * Scale shape: the naive wedge count Σ deg(v)² explodes on skewed
-    * graphs (one celebrity node = O(deg²) wedges); orientation bounds
-    * every out-degree by O(√m), making the wedge join O(m^{3/2}) WORST
-    * CASE — the skew-proof bound, independent of the degree distribution.
-    * Every step is an equi-join or aggregate: per-order pair enumeration
-    * keys on the order (blowup bounded by order width, ≤7 lineitems),
-    * wedges key on the shared source, closure keys on (x, y). The explode
-    * credit partially aggregates map-side onto the node-id domain.
-    */
   /** Degree table (n, dg) of an undirected a<b edge list. */
   private[queries] def edgeDegrees(edges: DataFrame): DataFrame =
     edges.select(col("a").as("n"))
@@ -201,6 +182,25 @@ object Graph {
         col("w2.dst").as("y"))
   }
 
+  /** Per-node TRIANGLE counts on the supplier co-order graph — the classic
+    * clustering-coefficient / community-density primitive, in the
+    * degree-ordered ORIENTATION formulation (Suri & Vassilvitskii, WWW'11;
+    * Schank & Wagner's forward algorithm): orient every edge from its
+    * lower-(degree, id) endpoint to the higher, enumerate wedges only at
+    * each node's oriented OUT-neighbors, and close each wedge against the
+    * oriented edge set. Every triangle is counted exactly once — at its
+    * lowest-ordered vertex — and each node's credit is recovered by
+    * exploding the (u, x, y) witness into its three members.
+    *
+    * Scale shape: the naive wedge count Σ deg(v)² explodes on skewed
+    * graphs (one celebrity node = O(deg²) wedges); orientation bounds
+    * every out-degree by O(√m), making the wedge join O(m^{3/2}) WORST
+    * CASE — the skew-proof bound, independent of the degree distribution.
+    * Every step is an equi-join or aggregate: per-order pair enumeration
+    * keys on the order (blowup bounded by order width, ≤7 lineitems),
+    * wedges key on the shared source, closure keys on (x, y). The explode
+    * credit partially aggregates map-side onto the node-id domain.
+    */
   def qTriangleCount(s: SparkSession, d: String): DataFrame = {
     // support-thresholded undirected edges, one row per a<b pair
     val edges = coOrderEdges(s, d)
@@ -229,24 +229,6 @@ object Graph {
     */
   val LpRounds = 3
 
-  /** COMMUNITY DETECTION via synchronous label propagation (Raghavan/
-    * Albert/Kumara LPA) on the supplier co-order graph: every node
-    * starts as its own label; each round every node adopts the MOST
-    * FREQUENT label among its neighbors (ties → smallest label, which
-    * makes the classically random-tie-break algorithm deterministic and
-    * engine-exact). After K rounds, nodes sharing a label are a
-    * community; sizes ride along. Completes the graph family:
-    * PageRank = centrality, triangles = local density, components =
-    * reachability, LPA = mesoscale structure.
-    *
-    * Scale shape: one round = one edge⋈label equi-join (edges
-    * pre-partitioned on the probe key, the exchange reused across
-    * rounds) + one (node, label)-keyed count with map-side partials +
-    * one per-node argmax window over the label-frequency rows (O(deg)
-    * per node, the same row set the count produced). K rounds = K such
-    * passes — the Pregel cost profile, no step sees more than
-    * O(edges) rows.
-    */
   /** One LPA round's neighbor-label HISTOGRAM: one row per
     * (node, neighbor-label). This — not the raw neighbor list — is the
     * adoption window's input, so per-node window work is O(distinct
@@ -275,6 +257,24 @@ object Graph {
         .as("label"))
       .select(col("a").as("node"), col("label"))
 
+  /** COMMUNITY DETECTION via synchronous label propagation (Raghavan/
+    * Albert/Kumara LPA) on the supplier co-order graph: every node
+    * starts as its own label; each round every node adopts the MOST
+    * FREQUENT label among its neighbors (ties → smallest label, which
+    * makes the classically random-tie-break algorithm deterministic and
+    * engine-exact). After K rounds, nodes sharing a label are a
+    * community; sizes ride along. Completes the graph family:
+    * PageRank = centrality, triangles = local density, components =
+    * reachability, LPA = mesoscale structure.
+    *
+    * Scale shape: one round = one edge⋈label equi-join (edges
+    * pre-partitioned on the probe key, the exchange reused across
+    * rounds) + one (node, label)-keyed count with map-side partials +
+    * one per-node argmax window over the label-frequency rows (O(deg)
+    * per node, the same row set the count produced). K rounds = K such
+    * passes — the Pregel cost profile, no step sees more than
+    * O(edges) rows.
+    */
   def qCommunityLp(s: SparkSession, d: String): DataFrame = {
     val e0 = coOrderEdges(s, d)
     val edges = e0.unionByName(

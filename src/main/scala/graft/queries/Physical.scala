@@ -176,10 +176,8 @@ object Physical {
   def qBucketPrunedScan(s: SparkSession, d: String): DataFrame = {
     val (liName, _) = bucketedTables(s, d)
     val k = Tables.lineitem(s, d).agg(max(col("l_orderkey"))).head.getLong(0)
-    val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.get(conf)
-    s.conf.set(conf, "false")
-    try {
+    graft.EngineTuning.withConfs(s,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val q = s.table(liName)
         .filter(col("l_orderkey") === k)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
@@ -189,7 +187,7 @@ object Physical {
         s"q_bucket_pruned_scan: expected a 1-of-$NBuckets bucket-pruned " +
           s"scan; scan metadata: $pruned")
       graft.Materialize.barrier(q)
-    } finally s.conf.set(conf, prev)
+    }
   }
 
   /** Hive-style partitioned orders, staged once per (version, sf) —

@@ -65,12 +65,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** Quality scoring: integer 0–100 from length / stopword / diversity
-    * bands, then per-(lang, band) distribution. Demonstrates the
-    * scan→narrow-score→tiny-shuffle aggregate shape a corpus filter runs at
-    * scale: the groupBy output is O(bands × langs), so partial aggregation
-    * collapses nearly everything map-side.
-    */
   /** Integer 0–100 quality score over a frame with (text, n_chars) —
     * SHARED by [[qQualityScore]] and [[Curation.qCurationPipeline]] so the
     * band thresholds cannot drift between the stage query and the
@@ -100,6 +94,12 @@ object TextAnalysis {
        |  + (CASE WHEN len(list_filter(toks, x -> x IN ($enMarkers)))*100//len(toks)
        |          BETWEEN 2 AND 20 THEN 30 ELSE 10 END)""".stripMargin
 
+  /** Quality scoring: integer 0–100 from length / stopword / diversity
+    * bands, then per-(lang, band) distribution. Demonstrates the
+    * scan→narrow-score→tiny-shuffle aggregate shape a corpus filter runs at
+    * scale: the groupBy output is O(bands × langs), so partial aggregation
+    * collapses nearly everything map-side.
+    */
   def qQualityScore(s: SparkSession, d: String): DataFrame = {
     val score = qualityScoreExpr
     Tables.documents(s, d)
@@ -582,32 +582,6 @@ object TextAnalysis {
     */
   val BpeMerges = 6
 
-  /** Iterative BPE tokenizer TRAINING (Sennrich et al. 2016): K greedy
-    * merge rounds, each picking the globally most frequent adjacent
-    * symbol pair (count desc, pair asc tie-break) and merging it across
-    * the vocabulary. [[qBpePairs]] is one round's counting; this is the
-    * training loop a tokenizer pipeline actually runs.
-    *
-    * Scale shape: the corpus collapses ONCE to the counted vocabulary
-    * (the only aggregation that sees corpus volume — standard for BPE
-    * trainers); each round is then one explode+sum over O(vocab) rows
-    * plus a 1-row argmax. The driver holds exactly K chosen pairs (the
-    * model being trained — the justified O(K) materialization, same
-    * pattern as PageRank's convergence flag), never data.
-    *
-    * Engine-parity trick: words are space-joined symbol strings and a
-    * merge is a plain `replace(seg, ' x y ', ' xy ')` — leftmost
-    * non-overlapping with scan continuing after the replacement,
-    * identical in Spark and DuckDB, so the oracle replays training
-    * bit-exactly as K unrolled CTE stages. KNOWN DEVIATION from
-    * Sennrich's reference implementation: on an immediately repeated
-    * pair the single replace pass consumes the shared delimiter
-    * (`' a b a b '` → `' ab a b '`, not `' ab ab '`), so the second
-    * occurrence merges only if the pair is selected in a LATER round —
-    * a deterministic variant (the deviation can only under-merge, never
-    * corrupt), accepted because a fixpoint/lookahead merge has no
-    * bounded-depth SQL unrolling for the oracle to replay.
-    */
   /** The training loop shared by [[qBpeTrain]] (emits the merge table)
     * and [[qBpeEncode]] (applies the merges). Returns the K merges in
     * order: (round, pair, merged token, weighted pair count).
@@ -647,6 +621,32 @@ object TextAnalysis {
     merges.toSeq
   }
 
+  /** Iterative BPE tokenizer TRAINING (Sennrich et al. 2016): K greedy
+    * merge rounds, each picking the globally most frequent adjacent
+    * symbol pair (count desc, pair asc tie-break) and merging it across
+    * the vocabulary. [[qBpePairs]] is one round's counting; this is the
+    * training loop a tokenizer pipeline actually runs.
+    *
+    * Scale shape: the corpus collapses ONCE to the counted vocabulary
+    * (the only aggregation that sees corpus volume — standard for BPE
+    * trainers); each round is then one explode+sum over O(vocab) rows
+    * plus a 1-row argmax. The driver holds exactly K chosen pairs (the
+    * model being trained — the justified O(K) materialization, same
+    * pattern as PageRank's convergence flag), never data.
+    *
+    * Engine-parity trick: words are space-joined symbol strings and a
+    * merge is a plain `replace(seg, ' x y ', ' xy ')` — leftmost
+    * non-overlapping with scan continuing after the replacement,
+    * identical in Spark and DuckDB, so the oracle replays training
+    * bit-exactly as K unrolled CTE stages. KNOWN DEVIATION from
+    * Sennrich's reference implementation: on an immediately repeated
+    * pair the single replace pass consumes the shared delimiter
+    * (`' a b a b '` → `' ab a b '`, not `' ab ab '`), so the second
+    * occurrence merges only if the pair is selected in a LATER round —
+    * a deterministic variant (the deviation can only under-merge, never
+    * corrupt), accepted because a fixpoint/lookahead merge has no
+    * bounded-depth SQL unrolling for the oracle to replay.
+    */
   def qBpeTrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     bpeTrainMerges(s, d).toDF("round", "pair", "new_token", "pair_count")
@@ -758,10 +758,6 @@ object TextAnalysis {
       .orderBy(col("source"))
   }
 
-  /** Oracle twin of [[qBpeTrain]]: the K training rounds unrolled as CTE
-    * stages (built programmatically so Spark's K and the oracle's K can
-    * never drift).
-    */
   /** The K unrolled training stages (w0 vocabulary + per-round
     * pair-count/argmax/merge CTEs) shared by both BPE oracles.
     */
@@ -789,6 +785,10 @@ object TextAnalysis {
        |$stages""".stripMargin
   }
 
+  /** Oracle twin of [[qBpeTrain]]: the K training rounds unrolled as CTE
+    * stages (built programmatically so Spark's K and the oracle's K can
+    * never drift).
+    */
   private def bpeTrainOracle(k: Int): String = {
     val union = (1 to k).map(r => s"SELECT * FROM m$r").mkString(" UNION ALL ")
     s"""WITH ${bpeStagesSql(k)}

@@ -54,16 +54,9 @@ object Drive {
     * unset key is unset again, not pinned to its default.
     */
   def stateConf[A](s: SparkSession, rocksDb: Boolean = false)(
-      body: => A): A = {
-    val confs = (Partitions -> "4") +:
-      (if (rocksDb) Seq(Provider -> RocksDb) else Nil)
-    val prev = confs.map { case (k, _) => k -> s.conf.getAll.get(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
-  }
+      body: => A): A =
+    graft.EngineTuning.withConfs(s, (Partitions -> "4") +:
+      (if (rocksDb) Seq(Provider -> RocksDb) else Nil): _*)(body)
 
   /** One staged dir a generation lands: its data files are copied into
     * the live input dir `to`, renamed under `prefix` (the file source

@@ -3,7 +3,7 @@ package graft.cdc
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
 
-/** Streaming E2E: file-source JSON-lines → enrich → file sink with
+/** Streaming E2E: `graft-cdc` log → enrich → `graft-cdc` log with
   * checkpointing, including the restart/no-reprocess property that upgrades
   * the reference's at-least-once bar (SURVEY.md §2.9, §5.2-3).
   */
@@ -16,6 +16,17 @@ class CdcPipelineSpec extends SparkSpec {
     Files.write(Paths.get(dir, s"$name.jsonl"),
       ids.map(i => event.format(i, i, i, 27565000 + i)).mkString("\n").getBytes)
 
+  /** Reference layout: the same routed records through Spark's own `text`
+    * file source and a `text` sink partitioned by `source_table`.
+    */
+  private def textTransport(in: String, out: String, ckpt: String,
+      cfg: EnrichConfig): Unit =
+    CdcPipeline.routedValues(spark.readStream.text(in), cfg)
+      .writeStream.format("text").partitionBy("source_table")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+
   test("streaming enrich end-to-end with checkpoint restart") {
     val in = tmpDir("cdc-in")
     val out = tmpDir("cdc-out")
@@ -23,14 +34,14 @@ class CdcPipelineSpec extends SparkSpec {
     val cfg = EnrichConfig(processingTimeIso = Some("2026-01-01T00:00:00"))
 
     writeBatch(in, "batch1", 1 to 20)
-    CdcPipeline.start(spark, in, out, ckpt, cfg).awaitTermination()
+    CdcPipeline.startV2(spark, in, out, ckpt, cfg).awaitTermination()
     val first = spark.read.text(out).collect().map(_.getString(0))
     assert(first.length == 20)
     assert(first.forall(_.contains("\"enrichment\"")))
 
     // restart with new data only → checkpoint skips batch1
     writeBatch(in, "batch2", 21 to 30)
-    CdcPipeline.start(spark, in, out, ckpt, cfg).awaitTermination()
+    CdcPipeline.startV2(spark, in, out, ckpt, cfg).awaitTermination()
     val all = spark.read.text(out).collect().map(_.getString(0))
     assert(all.length == 30, "restart must process exactly the new files")
     assert(all.count(_.contains("u25@example.com")) == 1)
@@ -42,7 +53,7 @@ class CdcPipelineSpec extends SparkSpec {
     val ckpt = tmpDir("cdc-met-ckpt")
     writeBatch(in, "good", 1 to 7)
     Files.write(Paths.get(in, "bad.jsonl"), "not-json{{{\nnope[[[".getBytes)
-    val q = CdcPipeline.start(spark, in, out, ckpt,
+    val q = CdcPipeline.startV2(spark, in, out, ckpt,
       EnrichConfig(processingTimeIso = Some("t")))
     q.awaitTermination()
     val metrics = q.recentProgress.flatMap(p =>
@@ -74,7 +85,7 @@ class CdcPipelineSpec extends SparkSpec {
       .select("event_id", "user_id", "event_type", "value", "props")
     CdcSource.snapshot(ev, "appdb", "public", "events")
       .coalesce(2).write.mode("overwrite").text(in)
-    CdcPipeline.start(spark, in, out, ckpt,
+    CdcPipeline.startV2(spark, in, out, ckpt,
       EnrichConfig(processingTimeIso = Some("t"))).awaitTermination()
     val res = spark.read.text(out)
     assert(res.count() == 1000)
@@ -92,9 +103,7 @@ class CdcPipelineSpec extends SparkSpec {
     Files.write(Paths.get(in, "mixed.jsonl"),
       (Seq(event.format(1, 1, 1, 1), orders.format(2, 2, 2, 2), "garbage{{{"))
         .mkString("\n").getBytes)
-    CdcPipeline.start(spark, in, out, ckpt,
-      EnrichConfig(processingTimeIso = Some("t")), fanOutByTable = true)
-      .awaitTermination()
+    textTransport(in, out, ckpt, EnrichConfig(processingTimeIso = Some("t")))
     // one output directory per source table, like one topic per table
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
       .map(_.getName).filterNot(_ == "_spark_metadata").toSet
@@ -118,8 +127,7 @@ class CdcPipelineSpec extends SparkSpec {
         Array(0xFF.toByte, '{'.toByte, '\n'.toByte))
     val cfg = EnrichConfig(processingTimeIso = Some("2026-01-01T00:00:00"))
     val outText = tmpDir("cdc-v2scan-text")
-    CdcPipeline.start(spark, in, outText, tmpDir("cdc-v2scan-text-ck"), cfg,
-      fanOutByTable = true).awaitTermination()
+    textTransport(in, outText, tmpDir("cdc-v2scan-text-ck"), cfg)
     val outV2 = tmpDir("cdc-v2scan-v2")
     val q = CdcPipeline.startV2(spark, in, outV2, tmpDir("cdc-v2scan-v2-ck"),
       cfg, fanOutByTable = true)

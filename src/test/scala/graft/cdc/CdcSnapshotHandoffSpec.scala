@@ -67,7 +67,9 @@ class CdcSnapshotHandoffSpec extends SparkSpec {
     // would from a connector)
     val sink = tmpDir("handoff-sink")
     val ckpt = tmpDir("handoff-ckpt")
-    CdcSource.streamJsonLines(spark, in, maxFilesPerTrigger = 1)
+    spark.readStream.format("graft-cdc")
+      .schema(graft.sources.CdcDataSource.ValueOnlySchema)
+      .option("maxFilesPerTrigger", 1).load(in)
       .writeStream.format("parquet")
       .option("path", sink).option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start().awaitTermination()

@@ -236,4 +236,20 @@ class AdaptiveSpec extends SparkSpec {
     val after = keys.map(k => spark.conf.getOption(k))
     assert(before == after, s"conf leak: $before -> $after")
   }
+
+  test("conf windows restore the set of explicitly set keys: a key unset " +
+    "before a gate is unset after it, not pinned to its default") {
+    // getOption reports a registered key's default, so only the raw
+    // session map can tell "unset" from "set to the default"; a new
+    // session's conf starts clean of what earlier rows may have set
+    val s = spark.newSession()
+    val before = s.conf.getAll.keySet
+    Adaptive.qAqeSkewJoin(s, sf).count()
+    Adaptive.qRuntimeBloomJoin(s, sf).count()
+    Adaptive.qAqeCoalesce(s, sf).count()
+    Physical.qBucketPrunedScan(s, sf).count()
+    val after = s.conf.getAll.keySet
+    assert(after == before,
+      s"set keys leaked: +${after -- before} -${before -- after}")
+  }
 }
