@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -77,33 +77,8 @@ object CdcSource {
     */
   def snapshot(rows: DataFrame, db: String, schema: String, table: String,
       serverName: String = "dbserver1",
-      fixedTsMs: Option[Long] = None): DataFrame = {
-    val tsMs = fixedTsMs.map(lit(_).cast("long"))
-      .getOrElse((unix_timestamp(current_timestamp()) * 1000).cast("long"))
-    // ignoreNullFields=false: Debezium emits EVERY column and block —
-    // "before": null, "lsn": null, and a NULL column as "email": null.
-    // Default to_json would drop those keys, so a null-valued column
-    // became indistinguishable from an absent one and downstream
-    // key-presence semantics (has_email_key, field_count) diverged from
-    // real connector output.
-    rows.select(to_json(struct(
-      lit(null).cast(StructType(rows.schema.fields)).as("before"),
-      struct(rows.columns.map(col): _*).as("after"),
-      struct(
-        lit("spark-graft").as("version"),
-        lit("postgresql").as("connector"),
-        lit(serverName).as("name"),
-        tsMs.as("ts_ms"),
-        lit("true").as("snapshot"),
-        lit(db).as("db"),
-        lit(schema).as("schema"),
-        lit(table).as("table"),
-        lit(null).cast("long").as("txId"),
-        lit(null).cast("long").as("lsn")).as("source"),
-      lit("r").as("op"),
-      tsMs.as("ts_ms")
-    ), Map("ignoreNullFields" -> "false")).as("value"))
-  }
+      fixedTsMs: Option[Long] = None): DataFrame =
+    changes(rows, "r", db, schema, table, lit(null), serverName, fixedTsMs)
 
   /** S2 (JDBC variant): initial snapshot read straight from the source
     * database — the Spark analogue of Debezium's `snapshot.mode: initial`
@@ -151,35 +126,12 @@ object CdcSource {
     * carry `after` only, deletes carry `before` only.
     */
   def changes(rows: DataFrame, op: String, db: String, schema: String,
-      table: String, lsn: org.apache.spark.sql.Column,
+      table: String, lsn: Column,
       serverName: String = "dbserver1",
       fixedTsMs: Option[Long] = None,
-      txId: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val tsMs = fixedTsMs.map(lit(_).cast("long"))
-      .getOrElse((unix_timestamp(current_timestamp()) * 1000).cast("long"))
-    val image = struct(rows.columns.map(col): _*)
-    val noImage = lit(null).cast(StructType(rows.schema.fields))
-    val (before, after) =
-      if (op == "d") (image, noImage) else (noImage, image)
-    rows.select(to_json(struct(
-      before.as("before"),
-      after.as("after"),
-      struct(
-        lit("spark-graft").as("version"),
-        lit("postgresql").as("connector"),
-        lit(serverName).as("name"),
-        tsMs.as("ts_ms"),
-        lit(if (op == "r") "true" else "false").as("snapshot"),
-        lit(db).as("db"),
-        lit(schema).as("schema"),
-        lit(table).as("table"),
-        txId.map(_.cast("long"))
-          .getOrElse(lit(null).cast("long")).as("txId"),
-        lsn.cast("long").as("lsn")).as("source"),
-      lit(op).as("op"),
-      tsMs.as("ts_ms")
-    ), Map("ignoreNullFields" -> "false")).as("value"))
-  }
+      txId: Option[Column] = None): DataFrame =
+    envelope(rows, rows.columns.toSeq, lit(op == "d"), lit(op), lsn,
+      txId.getOrElse(lit(null)), db, schema, table, serverName, fixedTsMs)
 
   /** Mixed-op twin of [[changes]]: rows carry their OWN op and lsn columns
     * (the shape a database changelog/audit table delivers — one row per
@@ -195,13 +147,31 @@ object CdcSource {
   def changesMixed(rows: DataFrame, opCol: String, lsnCol: String,
       db: String, schema: String, table: String,
       serverName: String = "dbserver1",
-      fixedTsMs: Option[Long] = None): DataFrame = {
-    val payload = rows.columns.filterNot(c => c == opCol || c == lsnCol)
+      fixedTsMs: Option[Long] = None): DataFrame =
+    envelope(rows, rows.columns.filterNot(c => c == opCol || c == lsnCol)
+        .toSeq, col(opCol) === "d", col(opCol), col(lsnCol), lit(null),
+      db, schema, table, serverName, fixedTsMs)
+
+  /** The one Debezium envelope builder behind [[snapshot]], [[changes]]
+    * and [[changesMixed]]: `payload` columns as the row image — in
+    * `before` when `isDelete`, else in `after` — plus the 10-field
+    * `source` block, `op` and `ts_ms` (the clock unless `fixedTsMs`).
+    *
+    * ignoreNullFields=false: Debezium emits EVERY column and block —
+    * "before": null, "lsn": null, and a NULL column as "email": null.
+    * Default to_json would drop those keys, so a null-valued column
+    * became indistinguishable from an absent one and downstream
+    * key-presence semantics (has_email_key, field_count) diverged from
+    * real connector output.
+    */
+  private def envelope(rows: DataFrame, payload: Seq[String],
+      isDelete: Column, op: Column, lsn: Column, txId: Column, db: String,
+      schema: String, table: String, serverName: String,
+      fixedTsMs: Option[Long]): DataFrame = {
     val tsMs = fixedTsMs.map(lit(_).cast("long"))
       .getOrElse((unix_timestamp(current_timestamp()) * 1000).cast("long"))
-    val image = struct(payload.map(col).toIndexedSeq: _*)
+    val image = struct(payload.map(col): _*)
     val noImage = lit(null).cast(StructType(payload.map(rows.schema(_))))
-    val isDelete = col(opCol) === "d"
     rows.select(to_json(struct(
       when(isDelete, image).otherwise(noImage).as("before"),
       when(isDelete, noImage).otherwise(image).as("after"),
@@ -210,13 +180,15 @@ object CdcSource {
         lit("postgresql").as("connector"),
         lit(serverName).as("name"),
         tsMs.as("ts_ms"),
-        when(col(opCol) === "r", "true").otherwise("false").as("snapshot"),
+        // isin, not ===: `===` warns when `changes` compares lit("r")
+        // with itself
+        when(op.isin("r"), "true").otherwise("false").as("snapshot"),
         lit(db).as("db"),
         lit(schema).as("schema"),
         lit(table).as("table"),
-        lit(null).cast("long").as("txId"),
-        col(lsnCol).cast("long").as("lsn")).as("source"),
-      col(opCol).cast("string").as("op"),
+        txId.cast("long").as("txId"),
+        lsn.cast("long").as("lsn")).as("source"),
+      op.cast("string").as("op"),
       tsMs.as("ts_ms")
     ), Map("ignoreNullFields" -> "false")).as("value"))
   }

@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.operators.GroupDelta
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,10 +23,11 @@ import org.apache.spark.sql.functions._
   *      contributions — the insertion set;
   *   4. folds insertions(+1) and retractions(−1) to per-group
   *      (Δcount, Δsum) and merges them into the view by one group-keyed
-  *      outer join: groups reaching count 0 leave the view, groups the
-  *      delta touched are marked `delta_applied` (even on a net-zero
-  *      delta — the marker witnesses MAINTENANCE structure, not change),
-  *      all other groups are `carried` untouched.
+  *      outer join ([[graft.operators.GroupDelta]], the algebra every
+  *      maintained aggregate shares): groups reaching count 0 leave the
+  *      view, groups the delta touched are marked `delta_applied` (even
+  *      on a net-zero delta — the marker witnesses MAINTENANCE
+  *      structure, not change), all other groups are `carried`.
   *
   * This handles every keyed-CDC mutation shape: a payload update shifts
   * a group's sum; a GROUP-attribute update retracts from the old group
@@ -65,9 +67,9 @@ object IncrementalAggView {
       aDelta: DataFrame, bDelta: DataFrame, key: String,
       groupCol: String, metricCol: String, touchedCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (a, aS, bS, _) = stepCore(agg, aState, bState, aDelta,
-      bDelta, key, groupCol, metricCol, touchedCol, wantTouched = false)
-    (a, aS, bS)
+    val (delta, aCarry, bCarry) = foldStep(aState, bState, aDelta, bDelta,
+      key, groupCol, metricCol)
+    (applied(agg, delta, touchedCol), aCarry, bCarry)
   }
 
   /** [[step]] that ALSO returns the step's touched-GROUP set — distinct
@@ -86,15 +88,21 @@ object IncrementalAggView {
   def stepWithTouched(agg: DataFrame, aState: DataFrame, bState: DataFrame,
       aDelta: DataFrame, bDelta: DataFrame, key: String,
       groupCol: String, metricCol: String, touchedCol: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    stepCore(agg, aState, bState, aDelta, bDelta, key, groupCol,
-      metricCol, touchedCol, wantTouched = true)
-
-  private def stepCore(agg: DataFrame, aState: DataFrame,
-      bState: DataFrame, aDelta: DataFrame, bDelta: DataFrame,
-      key: String, groupCol: String, metricCol: String,
-      touchedCol: String, wantTouched: Boolean)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    import graft.Materialize.Ops
+    val (fold, aCarry, bCarry) = foldStep(aState, bState, aDelta, bDelta,
+      key, groupCol, metricCol)
+    val delta = fold.stage() // merge + touched probe
+    (applied(agg, delta, touchedCol), aCarry, bCarry, delta.select(col("g")))
+  }
+
+  /** Steps 1–3 and the fold of step 4: the per-group
+    * [[GroupDelta.fold]] of the touched keys' contributions, and both
+    * carried side states.
+    */
+  private def foldStep(aState: DataFrame, bState: DataFrame,
+      aDelta: DataFrame, bDelta: DataFrame, key: String, groupCol: String,
+      metricCol: String): (DataFrame, DataFrame, DataFrame) = {
     import graft.Materialize.Ops
     val touched = IncrementalJoinView.touchedKeys(aDelta, bDelta, key)
       .stage() // semi-probes (×2), both refreshes, and both carries
@@ -112,54 +120,21 @@ object IncrementalAggView {
     val bT = IncrementalJoinView.refreshTouched(bTouched, bDelta, touched, key)
       .stage() // newC + state carry
     val newC = contribs(aT, bT, key, groupCol, metricCol)
-    val aCarry = IncrementalJoinView.carryState(aState, touched, aT, key)
-    val bCarry = IncrementalJoinView.carryState(bState, touched, bT, key)
-    if (wantTouched) {
-      val delta = deltaFold(newC, oldC).stage() // merge + touched probe
-      (mergeFold(agg, delta, touchedCol), aCarry, bCarry,
-        delta.select(col("g")))
-    } else
-      (mergeDelta(agg, newC, oldC, touchedCol), aCarry, bCarry, null)
+    (GroupDelta.fold(newC.drop(key), oldC.drop(key)),
+      IncrementalJoinView.carryState(aState, touched, aT, key),
+      IncrementalJoinView.carryState(bState, touched, bT, key))
   }
 
-  /** Fold insertion(+1)/retraction(−1) contribution sets `(key, g, m)`
-    * to per-group (Δcount, Δsum) and merge them into the maintained
-    * aggregate by ONE group-keyed outer join — shared by the shared-key
-    * step above and [[IncrementalFkAggView.step]]. Groups reaching
-    * count 0 leave the view; groups present in EITHER contribution set
-    * mark `delta_applied` (even net-zero — the marker witnesses
-    * maintenance structure), all others `carried`.
+  /** The maintained `(g, n_members, total, touchedCol)` view after a
+    * [[GroupDelta.merge]] of a `(g, m)` contribution fold — groups the
+    * fold holds are `delta_applied`, all others `carried`. Shared with
+    * [[IncrementalFkAggView.step]].
     */
-  private[cdc] def mergeDelta(agg: DataFrame, newC: DataFrame,
-      oldC: DataFrame, touchedCol: String): DataFrame =
-    mergeFold(agg, deltaFold(newC, oldC), touchedCol)
-
-  /** The per-group algebraic delta `(g, dn, dm)` of an
-    * insertion(+1)/retraction(−1) contribution pair; the sign folds
-    * map-side before any shuffle. Its key set IS the step's touched
-    * groups ([[stepWithTouched]] stages and reuses it for both the
-    * merge and the change-feed probe).
-    */
-  private[cdc] def deltaFold(newC: DataFrame, oldC: DataFrame): DataFrame =
-    newC.withColumn("sign", lit(1L))
-      .unionByName(oldC.withColumn("sign", lit(-1L)))
-      .groupBy(col("g"))
-      .agg(sum(col("sign")).as("dn"), sum(col("m") * col("sign")).as("dm"))
-
-  /** Merge a pre-folded [[deltaFold]] frame into the maintained view by
-    * one group-keyed outer join (see [[mergeDelta]] for the contract).
-    */
-  private[cdc] def mergeFold(agg: DataFrame, delta: DataFrame,
+  private[cdc] def applied(agg: DataFrame, delta: DataFrame,
       touchedCol: String): DataFrame =
-    agg
-      .join(delta.select(col("g").as("dg"), col("dn"), col("dm")),
-        col("g") === col("dg"), "full_outer")
-      .select(coalesce(col("g"), col("dg")).as("g"),
-        (coalesce(col("n_members"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-          .as("n_members"),
-        (coalesce(col("total"), lit(0L)) + coalesce(col("dm"), lit(0L)))
-          .as("total"),
-        when(col("dg").isNotNull, lit("delta_applied"))
+    GroupDelta.merge(agg.select(col("g"), col("n_members"), col("total")),
+        delta)
+      .select(col("g"), col("n_members"), col("total"),
+        when(col("__touched"), lit("delta_applied"))
           .otherwise(lit("carried")).as(touchedCol))
-      .filter(col("n_members") > 0)
 }

@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.operators.GroupDelta
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ import org.apache.spark.sql.functions._
   *      re-pointed at an untouched dim must still contribute) — the
   *      insertion set;
   *   4. folds both sets to per-group (Δcount, Δsum) and merges into
-  *      the group-sized view ([[IncrementalAggView.mergeDelta]]) —
+  *      the group-sized view ([[graft.operators.GroupDelta]]) —
   *      `delta_applied` exactly for groups either set touches,
   *      `carried` for groups the merge provably never rewrote.
   *
@@ -99,7 +100,8 @@ object IncrementalFkAggView {
     // insertions: refreshed facts against the POST-batch dim state
     val newC = contribs(factT, dimAfter, factKey, fkCol, dimKey,
       groupCol, metricCol)
-    (IncrementalAggView.mergeDelta(agg, newC, oldC, touchedCol),
+    (IncrementalAggView.applied(agg,
+        GroupDelta.fold(newC.drop(factKey), oldC.drop(factKey)), touchedCol),
       IncrementalJoinView.carryState(factState, touchedFacts, factT, factKey),
       dimAfter)
   }

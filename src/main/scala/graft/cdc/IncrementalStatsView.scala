@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.operators.GroupDelta
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,18 +22,10 @@ import org.apache.spark.sql.functions._
   *     back to a re-aggregation SCOPED to the threatened groups (with a
   *     `recomputed` witness) where it is not.
   *
-  * The dichotomy theorem the split rests on: let (mn, mx) be a group's
-  * maintained extrema and R its retraction multiset for this batch.
-  *   - If every r ∈ R satisfies mn < r < mx STRICTLY, no retraction can
-  *     carry the extremum (the rows holding mn and mx survive), so
-  *     min' = least(mn, min(insertions)) and
-  *     max' = greatest(mx, max(insertions)) — pure semilattice folds.
-  *   - Otherwise some retraction touches the boundary (r ≤ mn or
-  *     r ≥ mx — equality included: removing one of two copies of the
-  *     minimum keeps it, but the algebra cannot know the multiplicity),
-  *     and the group's extrema are re-aggregated from its FULL
-  *     post-batch live rows. Recompute is always correct; the threat
-  *     test only decides when it is NEEDED.
+  * The split rests on the min/max dichotomy stated on
+  * [[graft.operators.GroupDelta]], the algebra every maintained
+  * aggregate shares: a retraction strictly inside a group's (mn, mx)
+  * cannot carry an extremum, one at or beyond it threatens the group.
   *
   * A maintenance step therefore:
   *   1. collects the touched-key set and the touched keys' OLD rows —
@@ -97,49 +90,14 @@ object IncrementalStatsView {
       .select(col(groupCol).as("g"), col(metricCol).as("m"))
     val state2 = IncrementalJoinView.carryState(state, touched, refreshed, key)
       .stage() // recompute probe + returned state
-    // algebraic (Δcount, Δsum): sign fold partially aggregates map-side
-    val deltaAgg = newC.withColumn("sign", lit(1L))
-      .unionByName(oldC.withColumn("sign", lit(-1L)))
-      .groupBy(col("g"))
-      .agg(sum(col("sign")).as("dn"), sum(col("m") * col("sign")).as("dm"))
-    // boundary threat: a retraction at or beyond the maintained extrema
-    // means the algebra cannot certify min/max — recompute that group
-    val threat = oldC
-      .join(agg.select(col("g"), col("mn"), col("mx")), Seq("g"))
-      .filter(col("m") <= col("mn") || col("m") >= col("mx"))
-      .select(col("g")).distinct()
-      .stage() // recompute semi-probe + marker join
-    val recomputed = state2
-      .select(col(groupCol).as("g"), col(metricCol).as("m"))
-      .join(threat, Seq("g"), "left_semi")
-      .groupBy(col("g"))
-      .agg(min(col("m")).as("rmn"), max(col("m")).as("rmx"))
-    // semilattice fold of the insertion set for the unthreatened
-    val insAgg = newC.groupBy(col("g"))
-      .agg(min(col("m")).as("imn"), max(col("m")).as("imx"))
-    val merged = agg
-      .join(deltaAgg.select(col("g").as("dg"), col("dn"), col("dm")),
-        col("g") === col("dg"), "full_outer")
-      .select(coalesce(col("g"), col("dg")).as("g"),
-        (coalesce(col("n_members"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-          .as("n_members"),
-        (coalesce(col("total"), lit(0L)) + coalesce(col("dm"), lit(0L)))
-          .as("total"),
-        col("mn"), col("mx"), col("dg").isNotNull.as("__touched"))
-      .join(insAgg, Seq("g"), "left")
-      .join(threat.withColumn("__threat", lit(true)), Seq("g"), "left")
-      .join(recomputed, Seq("g"), "left")
-      .select(col("g"), col("n_members"), col("total"),
-        // least/greatest skip nulls: an untouched group keeps (mn, mx),
-        // a brand-new group takes the insertion fold outright
-        when(col("__threat"), col("rmn"))
-          .otherwise(least(col("mn"), col("imn"))).as("mn"),
-        when(col("__threat"), col("rmx"))
-          .otherwise(greatest(col("mx"), col("imx"))).as("mx"),
-        when(col("__threat"), lit("recomputed"))
-          .when(col("__touched"), lit("delta_applied"))
-          .otherwise(lit("carried")).as(touchedCol))
-      .filter(col("n_members") > 0)
+    val view = Seq("g", "n_members", "total", "mn", "mx").map(col)
+    val merged = GroupDelta.extrema(
+      GroupDelta.merge(agg.select(view: _*), GroupDelta.fold(newC, oldC)),
+      oldC, newC,
+      state2.select(col(groupCol).as("g"), col(metricCol).as("m")))
+      .select(view :+ when(col("__threat"), lit("recomputed"))
+        .when(col("__touched"), lit("delta_applied"))
+        .otherwise(lit("carried")).as(touchedCol): _*)
     (merged, state2)
   }
 }

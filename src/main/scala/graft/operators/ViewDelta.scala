@@ -129,8 +129,8 @@ object ViewDelta {
     * the upstream view moves it algebraically — every feed row is a
     * retraction of its `old_*` image ('d'/'u') and/or an insertion of
     * its `new_*` image ('c'/'u'), so the per-group delta is one
-    * O(|feed|) signed fold, merged by one group-keyed outer join.
-    * Downstream groups reaching zero rows leave the view. The upstream
+    * O(|feed|) signed fold, merged by one group-keyed outer join (the
+    * shared [[GroupDelta]] algebra). Downstream groups reaching zero rows leave the view. The upstream
     * view itself is NEVER read — aggregate views compose down a feed
     * chain the way the DBSP/Materialize dataflow model promises, each
     * stage O(its own feed).
@@ -162,35 +162,30 @@ object ViewDelta {
       s"ViewDelta.cascadeAgg: downstream schema ${down.columns.toSeq} " +
         s"must be exactly $expect (extra columns would be dropped " +
         "silently by the merge)")
-    val minus = feed.filter(col("op") =!= "c").select(
-      groupOf.as(groupName) +: lit(-1L).as("__dn") +:
-        valueCols.map(v => (-col(s"old_$v")).as(s"__d_$v")): _*)
-    val plus = feed.filter(col("op") =!= "d").select(
-      groupOf.as(groupName) +: lit(1L).as("__dn") +:
-        valueCols.map(v => col(s"new_$v").as(s"__d_$v")): _*)
-    // the signed fold partially aggregates map-side before any shuffle
-    val delta = plus.unionByName(minus).groupBy(col(groupName))
-      .agg(sum(col("__dn")).as("__dn"),
-        valueCols.map(v => sum(col(s"__d_$v")).as(s"__d_$v")): _*)
-      .withColumnRenamed(groupName, "__dg")
-    down.join(delta, col(groupName) <=> col("__dg"), "full_outer")
-      .select(
-        coalesce(col(groupName), col("__dg")).as(groupName) +:
-          (coalesce(col("n_rows"), lit(0L)) +
-            coalesce(col("__dn"), lit(0L))).as("n_rows") +:
-          valueCols.map(v =>
-            (coalesce(col(s"sum_$v"), lit(0L)) +
-              coalesce(col(s"__d_$v"), lit(0L))).as(s"sum_$v")): _*)
-      .filter(col("n_rows") > 0)
+    val (ins, ret) = contributions(feed, groupOf, groupName, valueCols)
+    GroupDelta.merge(down, GroupDelta.fold(ins, ret)).drop("__touched")
+  }
+
+  /** A feed's insertion (`new_*` images of 'c'/'u' rows) and retraction
+    * (`old_*` images of 'u'/'d' rows) contribution frames
+    * `(groupName, v…)` for the [[GroupDelta]] algebra.
+    */
+  private def contributions(feed: DataFrame,
+      groupOf: org.apache.spark.sql.Column, groupName: String,
+      valueCols: Seq[String]): (DataFrame, DataFrame) = {
+    def images(skipOp: String, image: String): DataFrame =
+      feed.filter(col("op") =!= skipOp).select(groupOf.as(groupName) +:
+        valueCols.map(v => col(s"${image}_$v").as(v)): _*)
+    (images("d", "new"), images("c", "old"))
   }
 
   /** [[cascadeAgg]] widened with MIN/MAX over one upstream value column
     * — the aggregate algebra's non-self-maintainable half, downstream:
     * a signed fold cannot retract an extremum (removing the row that
     * holds a group's max leaves no algebraic way to know the
-    * runner-up), so this applies the same dichotomy
-    * [[graft.cdc.IncrementalStatsView]] proved upstream, driven by the
-    * FEED's images instead of base deltas:
+    * runner-up), so this applies the min/max dichotomy stated on
+    * [[GroupDelta]] — the same algebra [[graft.cdc.IncrementalStatsView]]
+    * runs upstream — driven by the FEED's images instead of base deltas:
     *
     *   - count/sum move algebraically, O(|feed|), exactly [[cascadeAgg]];
     *   - a feed row retracting an `old_<extremumCol>` image AT OR
@@ -210,11 +205,6 @@ object ViewDelta {
     * which must be one of `valueCols`); `upstream` carries the view's
     * key and value columns, with `groupOf` valid over both it and the
     * feed. Null images contribute nothing (SQL min/max skip nulls).
-    * Unlike [[cascadeAgg]], a NULL downstream group key is out of
-    * scope here: the threat/recompute/insertion side joins are plain
-    * equi-joins (matching [[graft.cdc.IncrementalStatsView]]), so
-    * derive `groupOf` to a non-null value when the upstream key can be
-    * null.
     */
   def cascadeAggStats(down: DataFrame, feed: DataFrame,
       upstream: DataFrame, groupOf: org.apache.spark.sql.Column,
@@ -228,60 +218,13 @@ object ViewDelta {
     require(down.columns.toSeq == expect,
       s"ViewDelta.cascadeAggStats: downstream schema " +
         s"${down.columns.toSeq} must be exactly $expect")
-    // algebraic (Δcount, Δsum) — the cascadeAgg fold, map-side combined
-    val minus = feed.filter(col("op") =!= "c").select(
-      groupOf.as(groupName) +: lit(-1L).as("__dn") +:
-        valueCols.map(v => (-col(s"old_$v")).as(s"__d_$v")): _*)
-    val plus = feed.filter(col("op") =!= "d").select(
-      groupOf.as(groupName) +: lit(1L).as("__dn") +:
-        valueCols.map(v => col(s"new_$v").as(s"__d_$v")): _*)
-    val delta = plus.unionByName(minus).groupBy(col(groupName))
-      .agg(sum(col("__dn")).as("__dn"),
-        valueCols.map(v => sum(col(s"__d_$v")).as(s"__d_$v")): _*)
-      .withColumnRenamed(groupName, "__dg")
-    // boundary threat: a retraction at or beyond the group's extrema
-    val threat = feed.filter(col("op") =!= "c")
-      .select(groupOf.as(groupName),
-        col(s"old_$extremumCol").as("__old_m"))
-      .join(down.select(col(groupName), col("mn"), col("mx")),
-        Seq(groupName))
-      .filter(col("__old_m") <= col("mn") || col("__old_m") >= col("mx"))
-      .select(col(groupName)).distinct()
-    // recompute threatened groups' extrema from the POST-batch upstream
-    // view, scoped by semi-join — the only read beyond the feed
-    val recomputed = upstream
-      .select(groupOf.as(groupName), col(extremumCol).as("__m"))
-      .join(threat, Seq(groupName), "left_semi")
-      .groupBy(col(groupName))
-      .agg(min(col("__m")).as("__rmn"), max(col("__m")).as("__rmx"))
-    // semilattice fold of the insertion images for everyone else
-    val insAgg = feed.filter(col("op") =!= "d")
-      .select(groupOf.as(groupName),
-        col(s"new_$extremumCol").as("__m"))
-      .groupBy(col(groupName))
-      .agg(min(col("__m")).as("__imn"), max(col("__m")).as("__imx"))
-    down.join(delta, col(groupName) <=> col("__dg"), "full_outer")
-      .select(
-        coalesce(col(groupName), col("__dg")).as(groupName) +:
-          (coalesce(col("n_rows"), lit(0L)) +
-            coalesce(col("__dn"), lit(0L))).as("n_rows") +:
-          (valueCols.map(v =>
-            (coalesce(col(s"sum_$v"), lit(0L)) +
-              coalesce(col(s"__d_$v"), lit(0L))).as(s"sum_$v")) ++
-            Seq(col("mn"), col("mx"))): _*)
-      .join(insAgg, Seq(groupName), "left")
-      .join(threat.withColumn("__threat", lit(true)),
-        Seq(groupName), "left")
-      .join(recomputed, Seq(groupName), "left")
-      .select(col(groupName) +: col("n_rows") +:
-        (valueCols.map(v => col(s"sum_$v")) ++ Seq(
-          // least/greatest skip nulls: an untouched group keeps (mn,
-          // mx), a brand-new group takes the insertion fold outright
-          when(col("__threat"), col("__rmn"))
-            .otherwise(least(col("mn"), col("__imn"))).as("mn"),
-          when(col("__threat"), col("__rmx"))
-            .otherwise(greatest(col("mx"), col("__imx"))).as("mx"))): _*)
-      .filter(col("n_rows") > 0)
+    val (ins, ret) = contributions(feed, groupOf, groupName, valueCols)
+    def extremum(c: DataFrame): DataFrame =
+      c.select(col(groupName), col(extremumCol))
+    GroupDelta.extrema(GroupDelta.merge(down, GroupDelta.fold(ins, ret)),
+        extremum(ret), extremum(ins),
+        upstream.select(groupOf.as(groupName), col(extremumCol)))
+      .drop("__touched", "__threat")
   }
 
   /** TOUCHED-KEY-PRUNED diff: [[diff]] restricted to `touchedKeys` (a

@@ -766,6 +766,31 @@ object Cdc {
     (a1, a2, b1, b2)
   }
 
+  /** The agg-view gates' shared preamble over a fixture's
+    * `(a1, a2, b1, b2)`: both generation-1 side states and the
+    * bootstrap view, staged (the step input, and for the feed gates
+    * the diff's before image, the apply base and the w0 build), then
+    * ONE maintenance step to generation 2 marked in `touchedCol`.
+    * Returns `(agg1, agg2)`.
+    */
+  private def aggViewStep(fixture: (DataFrame, DataFrame, DataFrame,
+      DataFrame), touchedCol: String): (DataFrame, DataFrame) = {
+    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
+    val (a1, a2, b1, b2) = fixture
+    val aState1 = IncrementalJoinView.sideState(a1, "id").stage()
+    val bState1 = IncrementalJoinView.sideState(b1, "id").stage()
+    val agg1 = IncrementalAggView
+      .bootstrap(aState1, bState1, "id", "g", "balance")
+      .stage() // the maintained materialization generation 2 merges into
+    val (agg2, _, _) = IncrementalAggView.step(agg1, aState1, bState1,
+      a2, b2, "id", "g", "balance", touchedCol)
+    (agg1, agg2)
+  }
+
+  /** The agg view as its feeds carry it: `(g, n_members, total_balance)`. */
+  private def balanceView(agg: DataFrame): DataFrame =
+    agg.select(col("g"), col("n_members"), col("total").as("total_balance"))
+
   /** Incremental AGGREGATE-over-join maintenance
     * ([[graft.cdc.IncrementalAggView]]): maintain `V = SELECT g,
     * count(*), sum(balance) FROM customers ⋈ balances GROUP BY g`
@@ -785,17 +810,8 @@ object Cdc {
     * merge provably never rewrote.
     */
   def qCdcAggView(s: SparkSession, d: String): DataFrame = {
-    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
-    val (a1, a2, b1, b2) = aggViewFixture(s, d)
-    // generation 1: bootstrap states + the materialized aggregate
-    val aState1 = IncrementalJoinView.sideState(a1, "id").stage()
-    val bState1 = IncrementalJoinView.sideState(b1, "id").stage()
-    val agg1 = IncrementalAggView
-      .bootstrap(aState1, bState1, "id", "g", "balance")
-      .stage() // the maintained materialization generation 2 merges into
-    // generation 2: algebraic delta application
-    val (agg2, _, _) = IncrementalAggView.step(agg1, aState1, bState1,
-      a2, b2, "id", "g", "balance", "maintained_via")
+    // generation 2 applied as an algebraic delta onto the bootstrap
+    val (_, agg2) = aggViewStep(aggViewFixture(s, d), "maintained_via")
     agg2.select(col("g"), col("n_members"),
         col("total").as("total_balance"), col("maintained_via"))
       .orderBy(col("g"))
@@ -823,15 +839,7 @@ object Cdc {
     * feed is O(touched groups).
     */
   def qCdcViewChangefeed(s: SparkSession, d: String): DataFrame = {
-    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
-    val (a1, a2, b1, b2) = aggViewFixture(s, d)
-    val aState1 = IncrementalJoinView.sideState(a1, "id").stage()
-    val bState1 = IncrementalJoinView.sideState(b1, "id").stage()
-    val agg1 = IncrementalAggView
-      .bootstrap(aState1, bState1, "id", "g", "balance")
-      .stage() // both the step input and the diff's before image
-    val (agg2, _, _) = IncrementalAggView.step(agg1, aState1, bState1,
-      a2, b2, "id", "g", "balance", "via")
+    val (agg1, agg2) = aggViewStep(aggViewFixture(s, d), "via")
     graft.operators.ViewDelta.diff(
       agg1.select(col("g"), col("n_members"), col("total")),
       agg2.select(col("g"), col("n_members"), col("total")),
@@ -858,23 +866,12 @@ object Cdc {
     * N full re-materializations.
     */
   def qCdcFeedApply(s: SparkSession, d: String): DataFrame = {
-    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
-    import graft.Materialize.Ops
-    val (a1, a2, b1, b2) = aggViewFixture(s, d)
-    val aState1 = IncrementalJoinView.sideState(a1, "id").stage()
-    val bState1 = IncrementalJoinView.sideState(b1, "id").stage()
-    val agg1 = IncrementalAggView
-      .bootstrap(aState1, bState1, "id", "g", "balance")
-      .stage() // step input, diff before-image, AND the apply base
-    val (agg2, _, _) = IncrementalAggView.step(agg1, aState1, bState1,
-      a2, b2, "id", "g", "balance", "via")
+    val (agg1, agg2) = aggViewStep(aggViewFixture(s, d), "via")
     val cols = Seq("n_members", "total_balance")
-    def view(agg: DataFrame): DataFrame =
-      agg.select(col("g"), col("n_members"),
-        col("total").as("total_balance"))
-    val feed = graft.operators.ViewDelta.diff(view(agg1), view(agg2),
-      Seq("g"), cols)
-    graft.operators.ViewDelta.applyDelta(view(agg1), feed, Seq("g"), cols)
+    val feed = graft.operators.ViewDelta.diff(balanceView(agg1),
+      balanceView(agg2), Seq("g"), cols)
+    graft.operators.ViewDelta.applyDelta(balanceView(agg1), feed, Seq("g"),
+      cols)
       .orderBy(col("g"))
   }
 
@@ -898,29 +895,17 @@ object Cdc {
     * the deltas flowing through it, never N × O(view) recomputes.
     */
   def qCdcFeedCascade(s: SparkSession, d: String): DataFrame = {
-    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
-    import graft.Materialize.Ops
-    val (a1, a2, b1, b2) = aggViewFixture(s, d)
-    val aState1 = IncrementalJoinView.sideState(a1, "id").stage()
-    val bState1 = IncrementalJoinView.sideState(b1, "id").stage()
-    val agg1 = IncrementalAggView
-      .bootstrap(aState1, bState1, "id", "g", "balance")
-      .stage() // step input, diff before-image, AND the w0 build
-    val (agg2, _, _) = IncrementalAggView.step(agg1, aState1, bState1,
-      a2, b2, "id", "g", "balance", "via")
+    val (agg1, agg2) = aggViewStep(aggViewFixture(s, d), "via")
     val cols = Seq("n_members", "total_balance")
-    def view(agg: DataFrame): DataFrame =
-      agg.select(col("g"), col("n_members"),
-        col("total").as("total_balance"))
     val segOf = substring_index(col("g"), "-", 1)
     // w0: the downstream rollup of the BOOTSTRAP view
-    val w0 = view(agg1).groupBy(segOf.as("seg"))
+    val w0 = balanceView(agg1).groupBy(segOf.as("seg"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("n_members")).as("sum_n_members"),
         sum(col("total_balance")).as("sum_total_balance"))
     // w1: maintained from the v0→v1 feed alone
-    val feed = graft.operators.ViewDelta.diff(view(agg1), view(agg2),
-      Seq("g"), cols)
+    val feed = graft.operators.ViewDelta.diff(balanceView(agg1),
+      balanceView(agg2), Seq("g"), cols)
     graft.operators.ViewDelta.cascadeAgg(w0, feed, segOf, "seg", cols)
       .select(col("seg"), col("n_rows").as("n_groups"),
         col("sum_n_members").as("members"),
@@ -955,24 +940,12 @@ object Cdc {
     * .IncrementalStatsView]].
     */
   def qCdcFeedCascadeMinmax(s: SparkSession, d: String): DataFrame = {
-    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
-    import graft.Materialize.Ops
-    val (a1, a2, b1, b2) = aggViewFixture(s, d)
-    val aState1 = IncrementalJoinView.sideState(a1, "id").stage()
-    val bState1 = IncrementalJoinView.sideState(b1, "id").stage()
-    val agg1 = IncrementalAggView
-      .bootstrap(aState1, bState1, "id", "g", "balance")
-      .stage() // step input, diff before-image, AND the w0 build
-    val (agg2raw, _, _) = IncrementalAggView.step(agg1, aState1, bState1,
-      a2, b2, "id", "g", "balance", "via")
+    val (agg1, agg2raw) = aggViewStep(aggViewFixture(s, d), "via")
     val agg2 = agg2raw.stage() // the diff after-image AND the recompute
     val cols = Seq("n_members", "total_balance")
-    def view(agg: DataFrame): DataFrame =
-      agg.select(col("g"), col("n_members"),
-        col("total").as("total_balance"))
     val segOf = substring_index(col("g"), "-", 1)
     // w0: the downstream rollup of the BOOTSTRAP view, extrema included
-    val w0 = view(agg1).groupBy(segOf.as("seg"))
+    val w0 = balanceView(agg1).groupBy(segOf.as("seg"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("n_members")).as("sum_n_members"),
         sum(col("total_balance")).as("sum_total_balance"),
@@ -980,9 +953,9 @@ object Cdc {
         max(col("total_balance")).as("mx"))
     // w1: maintained from the v0→v1 feed + the post-batch upstream view
     // (recompute source for threatened segments only)
-    val feed = graft.operators.ViewDelta.diff(view(agg1), view(agg2),
-      Seq("g"), cols)
-    graft.operators.ViewDelta.cascadeAggStats(w0, feed, view(agg2),
+    val feed = graft.operators.ViewDelta.diff(balanceView(agg1),
+      balanceView(agg2), Seq("g"), cols)
+    graft.operators.ViewDelta.cascadeAggStats(w0, feed, balanceView(agg2),
         segOf, "seg", cols, "total_balance")
       .select(col("seg"), col("n_rows").as("n_groups"),
         col("sum_n_members").as("members"),
@@ -1183,9 +1156,6 @@ object Cdc {
           .coalesce(1).write.parquet(s"$st/gen4")
       })
     val feedCols = Seq("n_members", "total_balance")
-    def view(agg: DataFrame): DataFrame =
-      agg.select(col("g"), col("n_members"),
-        col("total").as("total_balance"))
     // the DOWNSTREAM stage's group: the segment prefix of the view key
     val segOf = substring_index(col("g"), "-", 1)
     // an empty downstream frame with the cascade's exact schema — the
@@ -1221,7 +1191,7 @@ object Cdc {
             val (a2, s1, s2, touched) = IncrementalAggView
               .stepWithTouched(agg.drop("via"), aS, bS,
                 aDelta, bDelta, "id", "g", "balance", "via")
-            val f = ViewDelta.diffTouched(view(agg), view(a2),
+            val f = ViewDelta.diffTouched(balanceView(agg), balanceView(a2),
               touched, Seq("g"), feedCols)
             // loud witness of the O(touched) shape: BOTH versions
             // must be semi-join-pruned before the full-outer diff
@@ -1242,7 +1212,7 @@ object Cdc {
               .withColumn("via", lit("bootstrap"))
             // the CDF bootstrap snapshot: everything is a create
             (boot, aS, bS, ViewDelta.diff(
-              view(boot).filter(lit(false)), view(boot),
+              balanceView(boot).filter(lit(false)), balanceView(boot),
               Seq("g"), feedCols))
         }
       // non-anchor kinds first (feed and cascade included), the
@@ -1357,8 +1327,7 @@ object Cdc {
         // re-bases on (never the producer's base tables)
         val ps = new graft.cdc.VersionedState(s, s"$base/store", "agg")
         val v = ps.versions.max
-        (v, ps.readAt("agg", v).select(col("g"), col("n_members"),
-          col("total").as("total_balance")))
+        (v, balanceView(ps.readAt("agg", v)))
       }),
       publishFeed = publishFeed)
 
@@ -1613,7 +1582,6 @@ object Cdc {
     * [[graft.streaming.TxnConsistentStream]] state instead).
     */
   def qCdcTxnIvm(s: SparkSession, d: String): DataFrame = {
-    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
     val (a1, a2raw, b1, b2raw) = aggViewFixture(s, d)
     val txOf = (expr(s"id div $TxnIvmSpan").cast("long") + 1L).as("tx")
     // staged: each side's fixture lineage feeds the expected count, the
@@ -1638,13 +1606,7 @@ object Cdc {
     val a2 = arrA.join(ok, Seq("tx"), "left_semi").drop("tx")
     val b2 = arrB.join(ok, Seq("tx"), "left_semi").drop("tx")
     // released events flow through the UNCHANGED agg-view machinery
-    val aState1 = IncrementalJoinView.sideState(a1, "id").stage()
-    val bState1 = IncrementalJoinView.sideState(b1, "id").stage()
-    val agg1 = IncrementalAggView
-      .bootstrap(aState1, bState1, "id", "g", "balance")
-      .stage()
-    val (agg2, _, _) = IncrementalAggView.step(agg1, aState1, bState1,
-      a2, b2, "id", "g", "balance", "maintained_via")
+    val (_, agg2) = aggViewStep((a1, a2, b1, b2), "maintained_via")
     agg2.select(col("g"), col("n_members"),
         col("total").as("total_balance"), col("maintained_via"))
       .orderBy(col("g"))

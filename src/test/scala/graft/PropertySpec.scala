@@ -54,6 +54,16 @@ class PropertySpec extends SparkSpec {
       }.sorted
       assert(mixed == perRow,
         s"changesMixed diverges from per-op changes:\n${mixed.diff(perRow)}\n${perRow.diff(mixed)}")
+      // and the snapshot wrapper is changes(op = "r") with a null lsn
+      val images = rows.map { case (id, name, email, _, _) =>
+        (id, name, email) }.toDF("id", "name", "email")
+      val snap = graft.cdc.CdcSource.snapshot(images, "db1", "sch", "tbl",
+        fixedTsMs = Some(FixedTs)).collect().map(_.getString(0)).sorted.toSeq
+      val asRead = graft.cdc.CdcSource.changes(images, "r", "db1", "sch",
+        "tbl", lit(null), fixedTsMs = Some(FixedTs))
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(snap == asRead,
+        s"snapshot diverges from changes(op = r, lsn = null):\n${snap.diff(asRead)}")
     }
   }
 

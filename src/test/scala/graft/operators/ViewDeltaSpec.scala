@@ -168,11 +168,14 @@ class ViewDeltaSpec extends SparkSpec {
     //  y: 'y-3' updates t 40→60, strictly interior to y's (1, 100) —
     //     must stay on the algebraic least/greatest path, no recompute.
     //  z: created outright (downstream group must appear with its fold)
+    //  NULL: the null key's downstream group; its max 80 is retracted
+    //     (80 → 30), so the threat must match the NULL group too
     val before = v(Seq(("x-1", 1L, 50L), ("x-2", 1L, 10L),
-      ("y-1", 2L, 100L), ("y-2", 3L, 1L), ("y-3", 1L, 40L)))
+      ("y-1", 2L, 100L), ("y-2", 3L, 1L), ("y-3", 1L, 40L),
+      (null, 1L, 80L)))
     val after = v(Seq(("x-2", 1L, 10L),
       ("y-1", 2L, 100L), ("y-2", 3L, 1L), ("y-3", 1L, 60L),
-      ("z-1", 1L, 2L)))
+      ("z-1", 1L, 2L), (null, 1L, 30L)))
     def down(view: org.apache.spark.sql.DataFrame) =
       view.groupBy(substring_index(col("g"), "-", 1).as("h"))
         .agg(count(lit(1)).as("n_rows"), sum(col("n")).as("sum_n"),

@@ -102,8 +102,12 @@ class Round10OpsSpec extends SparkSpec {
     for (seed <- 0 until 3) {
       val rnd = new scala.util.Random(1031L + seed)
       val keys = 1 to 40
+      // keys 41/42 sit in the NULL group and 43 moves into it; the
+      // update on 42 retracts that group's max (a boundary threat)
       val snap = keys.map(k =>
-        (k, "r", k.toLong, s"g${k % 5}", (k * 13L) % 97L))
+        (k, "r", k.toLong, s"g${k % 5}", (k * 13L) % 97L)) ++ Seq(
+        (41, "r", 41L, null, 30L), (42, "r", 42L, null, 70L),
+        (43, "r", 43L, "g1", 50L))
       val deltas = keys.flatMap { k =>
         rnd.nextInt(4) match {
           case 0 => Some((k, "u", 1000L + k, s"g${rnd.nextInt(5)}",
@@ -113,7 +117,8 @@ class Round10OpsSpec extends SparkSpec {
         }
       } ++ Seq( // fresh inserts, including a brand-new group
         (100 + seed, "c", 2000L, "g9", 500L),
-        (200 + seed, "c", 2001L, s"g${seed % 5}", -17L))
+        (200 + seed, "c", 2001L, s"g${seed % 5}", -17L),
+        (42, "u", 3000L, null, 10L), (43, "u", 3001L, null, 90L))
       val st0 = IncrementalJoinView.sideState(df(snap), "id")
       val agg0 = IncrementalStatsView.bootstrap(st0, "g", "m")
       // single step

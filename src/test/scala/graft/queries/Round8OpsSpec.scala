@@ -337,6 +337,45 @@ class Round8OpsSpec extends SparkSpec {
     }
   }
 
+  test("agg-view NULL group: a balance update on a NULL-g key and a key " +
+    "moving into the NULL group land in ONE maintained NULL row equal " +
+    "to the recompute, marked delta_applied and inside the touched probe") {
+    import spark.implicits._
+    import graft.cdc.{IncrementalAggView, IncrementalJoinView}
+    def adf(rows: (Int, String, Long, String)*) =
+      rows.toDF("id", "op", "lsn", "g")
+    def bdf(rows: (Int, String, Long, Long)*) =
+      rows.toDF("id", "op", "lsn", "m")
+    val a0 = adf((1, "r", 1L, null), (2, "r", 2L, null), (3, "r", 3L, "g1"),
+      (4, "r", 4L, "g2"))
+    val b0 = bdf((1, "r", 1L, 10L), (2, "r", 2L, 20L), (3, "r", 3L, 30L),
+      (4, "r", 4L, 40L))
+    val a1 = adf((3, "u", 10L, null)) // key 3 moves g1 -> NULL
+    val b1 = bdf((1, "u", 11L, 15L)) // NULL-group key 1: 10 -> 15
+    val aS0 = IncrementalJoinView.sideState(a0, "id")
+    val bS0 = IncrementalJoinView.sideState(b0, "id")
+    val agg0 = IncrementalAggView.bootstrap(aS0, bS0, "id", "g", "m")
+    def rows(df: org.apache.spark.sql.DataFrame)
+        : Set[(Option[String], Long, Long)] =
+      df.select(col("g"), col("n_members"), col("total")).collect()
+        .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
+    val recompute = IncrementalAggView.bootstrap(
+      IncrementalJoinView.sideState(a0.unionByName(a1), "id"),
+      IncrementalJoinView.sideState(b0.unionByName(b1), "id"),
+      "id", "g", "m")
+    assert(rows(recompute) == Set((None, 3L, 65L), (Some("g2"), 1L, 40L)))
+    val (agg1, _, _) = IncrementalAggView.step(agg0, aS0, bS0, a1, b1,
+      "id", "g", "m", "via")
+    assert(rows(agg1) == rows(recompute))
+    assert(agg1.filter(col("g").isNull).select("via").as[String].collect()
+      .toSeq == Seq("delta_applied"))
+    val (aggT, _, _, touched) = IncrementalAggView.stepWithTouched(agg0,
+      aS0, bS0, a1, b1, "id", "g", "m", "via")
+    assert(rows(aggT) == rows(recompute))
+    assert(touched.collect().map(r => Option(r.getString(0))).toSet ==
+      Set(None, Some("g1")))
+  }
+
   test("legacy watermark promotion is bounded below by the max fence " +
     "encoded in committed data file names: a torn lower prefix promotes " +
     "to the substantiated fence; a higher parsed value (dataless " +
