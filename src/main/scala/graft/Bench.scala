@@ -1,9 +1,8 @@
 package graft
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, executing each plan fully via the noop sink
-  * (`count()` would let Spark skip projection work), and prints the one-line
-  * JSON contract for the driver.
+/** Benchmark main: runs every SparkEntry gate against SPARK_GRAFT_SF_DIR
+  * through [[Gates]] into the noop sink, and prints the one-line JSON
+  * metric contract.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -20,29 +19,22 @@ object Bench {
     graft.queries.QueryMemo.enterSuiteMode()
     // JVM/codegen warmup on the smallest table so per-query numbers measure
     // the queries, not first-use initialization.
-    SparkEntry.queries.get("q1_pricing_summary")
-      .foreach(fn => fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-    // STREAMING-ENGINE warmup (round-12 attribution, SCALE.md): the first
-    // streaming query in a JVM pays engine init — streaming listener bus,
-    // state-store coordinator, micro-batch execution classes — which the
-    // round-12 fresh-JVM experiment measured at 1.4–3.4× a streaming
-    // gate's warm cost on its first run. One trivial AvailableNow drive
-    // pays it here, outside every measured number (multi-pass runs were
-    // already covered by the uncounted sweep; this levels the DRIVER's
-    // single-pass posture).
+    SparkEntry.queries.get("q1_pricing_summary").foreach(fn => Gates.noop(fn(spark, sfDir)))
+    // STREAMING-ENGINE warmup (SCALE.md): the first streaming query in a
+    // JVM pays engine init (listener bus, state-store coordinator,
+    // micro-batch classes), measured at 1.4–3.4× a streaming gate's warm
+    // cost. One trivial AvailableNow drive pays it outside every number.
     locally {
       val wdir =
         java.nio.file.Files.createTempDirectory("graft_bench_warm")
       spark.range(4).write.mode("overwrite").parquet(s"$wdir/in")
       spark.readStream.schema("id LONG").parquet(s"$wdir/in")
         .writeStream
-        .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.format("noop").mode("overwrite").save())
+        .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => Gates.noop(b))
         .option("checkpointLocation", s"$wdir/ck")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      // the warmup scratch dir has served its purpose (round-12 advisory:
-      // it used to leak one temp tree per bench run)
+      // the warmup scratch dir must not leak one temp tree per run
       org.apache.commons.io.FileUtils.deleteQuietly(wdir.toFile): Unit
     }
     // Queries whose (small: pair-list / top-k / cluster-table) results
@@ -56,87 +48,31 @@ object Bench {
     val memoTwins = Set("q_dedup_ngram", "q_dedup_minhash",
       "q_ann_bruteforce", "q_ann_lsh", "q_ann_ivf", "q_ann_pq",
       "q_ann_binary_quant", "q_bpe_train", "q_dedup_clusters_incremental")
-    // Per-gate RECEIPTS (round-8 verdict item #1): the driver's r8 run
-    // held q_pagerank at 14.8s on both passes vs the committed 4.48s
-    // median, and an exact driver-mode rerun on the build host measured
-    // 4.48s — so the inflation is environmental, not plan or suite state.
-    // These three numbers separate the remaining hypotheses per gate:
-    //   cpu/wall  — JVM process-CPU seconds over wall seconds. Host
-    //               contention (co-located load, CPU steal) collapses it;
-    //               a clean heavy query keeps it near the core count.
-    //   gc_ms     — collector time inside the gate. GC thrash from block
-    //               accumulation shows here, contention does not.
-    //   stor_mb   — block-manager storage in use AFTER the per-gate free.
-    //               Leaked staged blocks would trend upward across the
-    //               suite; memo-pinned seeds are the only expected floor.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def storMb: Long = {
-      val used = spark.sparkContext.getExecutorMemoryStatus.values
-        .map { case (max, remaining) => max - remaining }.sum
-      used / (1024 * 1024)
-    }
+    // Per-gate RECEIPTS (Gates.Receipt) ride only in the file artifact:
+    // the wall split into busy (union of job intervals) and idle time
+    // outside every job, jobs, tasks and codegen compiles, plus the three
+    // numbers that separate host contention from plan cost — cpu/wall
+    // (contention collapses it), gc_ms (block-accumulation thrash shows
+    // here) and stor_mb after the per-gate free (leaked blocks trend
+    // upward). The last measured run per gate wins; stderr has every run.
     var receipts: Map[String, String] = Map.empty
-    // HOST-LOAD SENTINEL (round-12 verdict item #3): a contended run
-    // must self-identify in its artifact instead of masquerading as a
-    // regression. Three fields: system load average at start and end
-    // (co-located load shows here even when it isn't this JVM), and the
-    // run's MEDIAN per-gate cpu/wall ratio (contention collapses it —
-    // the round-12 drift's signature was exactly falling cpu/wall with
-    // rising wall).
+    // HOST-LOAD SENTINEL: a contended run must self-identify in its
+    // artifact instead of masquerading as a regression — system load
+    // average at start and end, and the run's MEDIAN per-gate cpu/wall.
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage
     var cpuWallRatios: List[Double] = Nil
-    def once(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Option[String]) = {
-      val (gc0, cpu0) = (gcMs, osBean.getProcessCpuTime)
-      val t0 = System.nanoTime()
-      val err: Option[String] =
-        try {
-          if (memoTwins(name))
-            graft.queries.QueryMemo.seed(name, sfDir, fn(spark, sfDir))
-          else fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          None
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name: $e"); Some(e.toString)
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // free cached blocks so earlier queries' frames don't build GC
-      // pressure for later ones. Two layers: catalog.clearCache() drops
-      // Materialize.stage persists (blocks + CacheManager entries, so a
-      // later query with a structurally equal subtree can't silently read
-      // a stale cache), then the RDD sweep drops localCheckpoint blocks
-      // (memo-pinned seeds excepted — seed() uses localCheckpoint, which
-      // clearCache never touches); blocking so the release can't race the
-      // next query's materialization
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !graft.queries.QueryMemo.isPinned(id) }
-        .values.foreach(_.unpersist(true))
+    def once(gate: (String, Gates.Gate)): (Double, Option[String]) = {
+      val name = gate._1
+      val r = Gates.run(spark, sfDir, gate)(
+        if (memoTwins(name)) df => graft.queries.QueryMemo.seed(name, sfDir, df): Unit
+        else Gates.noop)
+      cpuWallRatios ::= r.cpuPerWall
+      receipts += name -> r.json
       // stderr progress (stdout carries only the JSON contract): makes a
-      // stalled or anomalously slow query identifiable mid-run. The
-      // receipt triple rides both here and in the file artifact (last
-      // measured run per query wins — the one the kept number came from
-      // is adjacent in the stderr log either way).
-      val (dGc, dCpu) = (gcMs - gc0, (osBean.getProcessCpuTime - cpu0) / 1e9)
-      val ratio = if (dt > 0) dCpu / dt else 0.0
-      val sm = storMb
-      // Double.toString after rounding, NOT an f-interpolation: the
-      // latter is default-locale and a comma-decimal locale would
-      // corrupt the artifact's JSON
-      val ratio2 = math.round(ratio * 100) / 100.0
-      cpuWallRatios ::= ratio2
-      receipts += name ->
-        s"""{"cpu_per_wall":$ratio2,"gc_ms":$dGc,"stor_mb":$sm}"""
-      System.err.println(
-        f"[bench] $name%-28s $dt%8.2f s  cpu/wall=$ratio%5.2f gc=${dGc}%5d ms stor=${sm}%5d MB")
-      (dt, err)
+      // stalled or anomalously slow gate identifiable mid-run
+      System.err.println(f"[bench] $name%-28s $r")
+      (r.wall, r.error)
     }
     // memo twins run first so every composite that can reuse them does
     // (alphabetical order alone would put q_dedup_clusters before
@@ -144,18 +80,9 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the suite to the named
     // gates (attribution experiments: the same gates in a fresh JVM vs
     // inside the full suite); unset = the driver's full contract
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail FAST on names matching no registered gate (round-12 advisory:
-    // a typo used to yield a silently partial suite, quietly invalidating
-    // the attribution run it was meant to serve)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown gates: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").toSeq
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+    val ordered = Gates.select(only)
       .sortBy { case (name, _) => (!memoTwins(name), name) }
     // SPARK_GRAFT_BENCH_PASSES=N (round-6 verdict item #5): this host
     // bounces ±15% run-to-run (the same code measured 143.5 s locally vs
@@ -178,9 +105,9 @@ object Bench {
         // the full suite puts minutes of other work between attempts, so
         // a transient stall can't poison both.
         val RetryAbove = 2.5
-        val pass1 = ordered.map { case (name, fn) =>
-          val (dt, err) = once(name, fn)
-          (name, fn, dt, err)
+        val pass1 = ordered.map { g =>
+          val (dt, err) = once(g)
+          (g, dt, err)
         }
         // Second pass: only successful outliers; up to two re-runs each,
         // the second only while the previous still improved the kept
@@ -188,13 +115,13 @@ object Bench {
         // extra run). Min across passes is kept; both pass values go to
         // stderr so a reader can see which queries were noise-corrected
         // and by how much.
-        pass1.map { case (name, fn, dt1, err1) =>
+        pass1.map { case (g @ (name, _), dt1, err1) =>
           var kept = dt1
           if (err1.isEmpty && dt1 > RetryAbove) {
             var attempts = 0
             var improving = true
             while (kept > RetryAbove && improving && attempts < 2) {
-              val (dt2, err2) = once(name, fn)
+              val (dt2, err2) = once(g)
               // pass 1 SUCCEEDED — a transient retry failure must not
               // overwrite that, nor may the aborted run's duration count
               if (err2.isEmpty) {
@@ -218,7 +145,7 @@ object Bench {
         // full sweep whose durations are DISCARDED leaves the N
         // measured passes all-warm.
         System.err.println(s"[bench] === warm-up pass (uncounted) ===")
-        ordered.foreach { case (name, fn) => once(name, fn) }
+        ordered.foreach(once)
         // N full-suite sweeps; per query keep the median (odd N: the
         // middle; even N: lower middle — a real measurement, never an
         // average of two) and surface min/max to stderr + the spread
@@ -229,7 +156,7 @@ object Bench {
         // kept only if every pass failed).
         val all = (1 to passes).map { p =>
           System.err.println(s"[bench] === suite pass $p/$passes ===")
-          ordered.map { case (name, fn) => (name, once(name, fn)) }
+          ordered.map(g => (g._1, once(g)))
         }
         ordered.map { case (name, _) =>
           val runs = all.map(_.find(_._1 == name).get._2)
@@ -285,25 +212,16 @@ object Bench {
         s""""ncpu":${Runtime.getRuntime.availableProcessors},""" +
         s""""cpu_wall_median":$medR}"""
     }
-    // SCALING WITNESS + CANARY (round-13 verdict item #2): the top-12
-    // stdout window holds only machinery-bound streaming drives whose
-    // low/high-core ratios are legitimately ≈1, so a scaling probe
-    // reading it alone false-positives "cpus ignored" every round.
-    // Measured this round: at sf0.1 NO real gate scales with cores —
-    // even the highest-cpu/wall gates run as fast or faster on 8 cores
-    // (q_kmeans_cluster 2.28 s @32 vs 1.10 s @8; q_ann_pq 3.09 vs 2.33;
-    // q_pagerank 1.79 vs 1.66) because per-partition fixed overhead
-    // exceeds the parallel work at this data size. So two additions-only
-    // fields ride the contract line: `scaling_witness` (four batch
-    // gates' times from THIS run, for like-for-like gate comparisons)
-    // and `scaling_canary` — a pure-CPU, shuffle-free, IO-free task
-    // (sum of xxhash64 over a range, partitioned at defaultParallelism)
-    // that scales ~linearly with cores BY CONSTRUCTION. Its low/high-
-    // core ratio separates "the harness ignored $SPARK_GRAFT_CPUS"
-    // (canary ratio ≈1) from "the suite is data-starved at this SF"
-    // (canary ratio ≈ core ratio while gate ratios sit at 1) — the
-    // latter is this suite's true posture at sf0.1. Neither field
-    // touches the queries map, timing, retries, or the total.
+    // SCALING WITNESS + CANARY: at sf0.1 no gate scales with cores
+    // (per-partition fixed overhead exceeds the parallel work; the top-12
+    // window is machinery-bound streaming drives), so a scaling probe
+    // reading the gates alone false-positives "cpus ignored". Two
+    // additions-only fields: `scaling_witness`, four batch gates' times
+    // from THIS run, and `scaling_canary`, a pure-CPU, shuffle-free,
+    // IO-free task that scales ~linearly with cores BY CONSTRUCTION —
+    // its low/high-core ratio separates "the harness ignored
+    // $SPARK_GRAFT_CPUS" (≈1) from "the suite is data-starved" (≈ core
+    // ratio). Neither touches the queries map, timing, retries or total.
     val witnessNames = Seq("q_pagerank", "q_kcore", "q_fuzzy_match_global",
       "q1_pricing_summary")
     val witness = results
@@ -312,20 +230,17 @@ object Bench {
       .mkString(""","scaling_witness":{""", ",", "}")
     val canary = {
       val t0 = System.nanoTime()
-      spark.range(0, 6000000000L)
-        .selectExpr("bit_xor(xxhash64(id, id + 1, id + 3)) AS h")
-        .write.format("noop").mode("overwrite").save()
+      Gates.noop(spark.range(0, 6000000000L)
+        .selectExpr("bit_xor(xxhash64(id, id + 1, id + 3)) AS h"))
       val dt = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
       s""","scaling_canary":$dt"""
     }
     def line(qs: String, extra: String = "") =
       s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"queries":$qs,"errors":$errs$extra$witness$canary,"sf":"$sfDir","n_queries":${results.size}}"""
     // Full per-query detail goes to the file; stdout gets a COMPACT line
-    // (top-12 slowest only). Round 2 post-mortem: the full 90-query line is
-    // ~4 KB, the driver records only the stdout tail, and the line's head —
-    // including the {"metric" anchor — fell outside the window, so the
-    // driver parsed null. The compact line stays well under 1 KB and is the
-    // last thing printed.
+    // (top-12 slowest only), the last thing printed: a reader that keeps
+    // only the stdout tail would lose a full-suite line's head — the
+    // {"metric" anchor.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"),
       line(qJson(results), spreadJson + receiptJson + hostJson))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-level engine tuning shared by every driver-contract main
-  * (Bench / Verify / Explain / Profile / CdcDemo), so the measured posture
+  * (Bench / Verify / Explain / CdcDemo), so the measured posture
   * and the correctness posture can never drift apart. Both settings are
   * scale-ADAPTIVE (they delegate the actual sizing decision to AQE /
   * the workload) — see OPTIMIZATION_r13.md for the measurements behind

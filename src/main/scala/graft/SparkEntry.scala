@@ -36,48 +36,25 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (name, fn) =>
+    families.flatMap(_.queries).toMap.map { case (name, fn) =>
       name -> ((s: SparkSession, d: String) => presentation(fn(s, d)))
     }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Cdc.queries ++
-      graft.queries.TextAnalysis.queries ++
-      graft.queries.Dedup.queries ++
-      graft.queries.Similarity.queries ++
-      graft.queries.Events.queries ++
-      graft.queries.Media.queries ++
-      graft.queries.Approx.queries ++
-      graft.queries.Profiling.queries ++
-      graft.queries.Curation.queries ++
-      graft.queries.Linkage.queries ++
-      graft.queries.Graph.queries ++
-      graft.queries.Retrieval.queries ++
-      graft.queries.Layout.queries ++
-      graft.queries.Recursive.queries ++
-      graft.queries.Physical.queries ++
-      graft.queries.Adaptive.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracle ++
-      graft.queries.Cdc.oracle ++
-      graft.queries.TextAnalysis.oracle ++
-      graft.queries.Dedup.oracle ++
-      graft.queries.Similarity.oracle ++
-      graft.queries.Events.oracle ++
-      graft.queries.Media.oracle ++
-      graft.queries.Approx.oracle ++
-      graft.queries.Profiling.oracle ++
-      graft.queries.Curation.oracle ++
-      graft.queries.Linkage.oracle ++
-      graft.queries.Graph.oracle ++
-      graft.queries.Retrieval.oracle ++
-      graft.queries.Layout.oracle ++
-      graft.queries.Recursive.oracle ++
-      graft.queries.Physical.oracle ++
-      graft.queries.Adaptive.oracle
+  def oracleSql: Map[String, String] = families.flatMap(_.oracle).toMap
+
+  private def families: Seq[GateFamily] = {
+    import graft.queries._
+    Seq(Relational, Cdc, TextAnalysis, Dedup, Similarity, Events, Media,
+      Approx, Profiling, Curation, Linkage, Graph, Retrieval, Layout,
+      Recursive, Physical, Adaptive)
+  }
+}
+
+/** One family of gates in `graft.queries`: its gates and their oracle SQL. */
+private[graft] trait GateFamily {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracle: Map[String, String]
 }

@@ -5,12 +5,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional trailing names: dump only those queries (local iteration;
-    // the driver always passes exactly two args → full suite). A typo'd
-    // name must fail loudly, not produce an empty successful run.
-    val only = args.drop(2).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    // optional trailing names: dump only those gates (local iteration;
+    // exactly two args → the full suite)
+    val gates = Gates.select(args.toSeq.drop(2))
     val spark = EngineTuning.session(defaultCpus = "4")
     // SPARK_GRAFT_CHECKPOINT_DIR: run the whole suite on the CLUSTER
     // materialization posture — every Materialize.barrier becomes a
@@ -20,23 +17,12 @@ object Verify {
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      // contract: outDir/<name>.parquet (a parquet directory with that
-      // literal name — readable as a pyarrow/pandas dataset path)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
-        // the gate name, then the full trace and cause chain: a bare
-        // getMessage prints `null` for an NPE and drops every cause
-        System.err.println(s"[verify] $name failed:")
-        e.printStackTrace()
-      }
-      // drop Materialize.stage persists (cache entries + blocks) and any
-      // localCheckpoint blocks between queries — every gate stands alone
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    // contract: outDir/<name>.parquet, a parquet directory with that
+    // literal name — readable as a pyarrow/pandas dataset path. Every gate
+    // stands alone: the runner frees its blocks before the next one.
+    gates.foreach { g =>
+      Gates.run(spark, sfDir, g)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${g._1}.parquet"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

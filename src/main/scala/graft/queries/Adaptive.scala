@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   * with no shuffle at all (`/root/reference/docs/architecture.md:22-41`);
   * this family is part of the driver-mandated warehouse layer beyond it.
   */
-object Adaptive {
+object Adaptive extends graft.GateFamily {
 
   /** AQE skew-join split, witnessed on the FINAL adaptive plan. The fact
     * side deliberately funnels every non-first lineitem row onto one hot

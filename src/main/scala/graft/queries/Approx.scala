@@ -21,7 +21,7 @@ import graft.Materialize.Ops
   * hold — a sketch that drifts outside its published error bound flips
   * the boolean and hash-mismatches the gate.
   */
-object Approx {
+object Approx extends graft.GateFamily {
 
   /** HLL++ relative standard deviations used below; verdict allows 5σ —
     * false-failure probability is negligible (<1e-6 per group) while a

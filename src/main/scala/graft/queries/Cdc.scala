@@ -16,7 +16,7 @@ import graft.Materialize.Ops
   * order-by), so it distributes trivially; JSON parse/serialize stays inside
   * whole-stage codegen (no UDFs).
   */
-object Cdc {
+object Cdc extends graft.GateFamily {
 
   private val FixedTs = 1700000000123L // 2023-11-14T22:13:20.123 UTC
 

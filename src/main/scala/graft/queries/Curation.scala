@@ -25,7 +25,7 @@ import graft.Materialize.Ops
   * All scores are scaled-integer arithmetic (×10000 integer division) so
   * the DuckDB oracle matches bit-exactly.
   */
-object Curation {
+object Curation extends graft.GateFamily {
 
   private def idiv(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column) = graft.text.TextOps.idiv(a, b)

@@ -32,7 +32,7 @@ import graft.Materialize.Ops
   * All hashes are md5-derived ([[TextOps.hash56]]) so DuckDB recomputes
   * signatures bit-exactly.
   */
-object Dedup {
+object Dedup extends graft.GateFamily {
 
   /** Exact dedup: md5 fingerprint of the whitespace/case normal form;
     * canonical = min doc_id per group.

@@ -16,7 +16,7 @@ import graft.Materialize.Ops
   * the as-of join is the carry-forward window formulation — one shuffle by
   * user, no range-join explosion.
   */
-object Events {
+object Events extends graft.GateFamily {
 
   private def events(s: SparkSession, d: String): DataFrame = Tables.events(s, d)
   private val MoneyVal: Column = col("value").cast(Tables.Money)

@@ -23,7 +23,7 @@ import graft.Materialize.Ops
   * K joins + K aggregates, the same per-iteration cost profile GraphX/
   * Pregel pays; the node-count scalar joins in as a broadcast literal row.
   */
-object Graph {
+object Graph extends graft.GateFamily {
 
   /** Rank scale (10^12): keeps floor-division quotients exact in both
     * engines — every dividend stays ≤ ~10^14, far under the 2^52 bound

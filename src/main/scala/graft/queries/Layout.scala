@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (Z-order) and equi-depth range boundaries (the split points a
   * range-partitioned write or a secondary index would use).
   */
-object Layout {
+object Layout extends graft.GateFamily {
 
   /** Bits per dimension interleaved into the Z-value. */
   val ZBits = 16

@@ -19,7 +19,7 @@ import graft.Materialize.Ops
   * `levenshtein` is unit-cost edit distance in both Spark and DuckDB, so
   * the oracle matches cell-exactly.
   */
-object Linkage {
+object Linkage extends graft.GateFamily {
 
   /** Inclusive edit-distance band: 0 is exact dup (the dedup family's
     * job), >2 is noise on two-word names.

@@ -11,7 +11,7 @@ import graft.Materialize.Ops
   * histogram), features exploded to (media_id, bin, cnt) rows that DuckDB
   * recomputes from the source text (ASCII corpus ⇒ char ordinal == byte).
   */
-object Media {
+object Media extends graft.GateFamily {
 
   def qMediaFeatures(s: SparkSession, d: String): DataFrame = {
     val media = Multimodal.mediaFromDocuments(Tables.documents(s, d))

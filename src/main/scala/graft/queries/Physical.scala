@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * `/root/reference/docs/architecture.md:22-41`); this family is part of
   * the driver-mandated warehouse layer beyond it.
   */
-object Physical {
+object Physical extends graft.GateFamily {
 
   /** Buckets for the co-located join tables. Sized so local[32] gets
     * parallelism; on a cluster this is sized to (table size / target

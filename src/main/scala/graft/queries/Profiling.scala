@@ -12,7 +12,7 @@ import graft.Materialize.Ops
   * map-side partials), then unpivots to one row per column — no per-column
   * rescans.
   */
-object Profiling {
+object Profiling extends graft.GateFamily {
 
   private val OrdersCols =
     Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",

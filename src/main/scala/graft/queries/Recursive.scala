@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * (its enrichment is per-record — processor.py:1-108); this family is
   * part of the driver-mandated relational layer beyond it.
   */
-object Recursive {
+object Recursive extends graft.GateFamily {
 
   /** Node view: id (int; the testdata's custkeys are contiguous FROM 0,
     * so node 0 sits outside root 1's tree — the top-down BOM traversal

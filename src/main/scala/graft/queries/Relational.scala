@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DecimalType
   *   - deterministic total ordering on every output (oracle hash parity),
   *     with unique tie-break keys so LIMIT/window results are stable.
   */
-object Relational {
+object Relational extends graft.GateFamily {
 
   private val one = lit(1.00).cast(Tables.Rate) // exact 1.00 for (1±rate)
   private def ts(s: String): Column = lit(s).cast("timestamp")

@@ -21,7 +21,7 @@ import graft.Materialize.Ops
   * float aggregation — so the DuckDB oracle hash-matches bit-exactly and a
   * 1000-executor run reproduces a laptop run.
   */
-object Retrieval {
+object Retrieval extends graft.GateFamily {
 
   private def idiv(a: Column, b: Column): Column = TextOps.idiv(a, b)
 

@@ -24,7 +24,7 @@ import graft.Materialize.Ops
   * All distance arithmetic is double, mirrored term-for-term in the oracle
   * (same casts, same left-to-right summation) so ranks hash-match.
   */
-object Similarity {
+object Similarity extends graft.GateFamily {
 
   val Dim = 64
   val NumPlanes = 16

@@ -16,7 +16,7 @@ import graft.Materialize.Ops
   * Every computed number is integer/decimal so the DuckDB oracle matches
   * bit-exactly (double ratios are emitted as exact DECIMAL divisions).
   */
-object TextAnalysis {
+object TextAnalysis extends graft.GateFamily {
 
   private def idiv(a: Column, b: Column): Column = TextOps.idiv(a, b)
 

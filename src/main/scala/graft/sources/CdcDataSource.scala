@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -444,7 +444,7 @@ object CdcOffset {
 class CdcMicroBatchStream(dir: String, required: StructType,
     timeZoneId: String, pushed: Seq[Filter] = Nil,
     maxFilesPerTrigger: Option[Int] = None)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
   // driver-side one-time captures: the conf snapshot and directory
   // listing are per-trigger costs otherwise (3 LISTs per micro-batch is
   // the dominant object-store expense of a file-tailing source)
@@ -489,19 +489,29 @@ class CdcMicroBatchStream(dir: String, required: StructType,
   override def getDefaultReadLimit: ReadLimit =
     maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
 
+  /** `Trigger.AvailableNow`'s end: the listing's file count when the run
+    * was prepared. Batches never read past it, and the read limit paces
+    * them up to it, so files that land mid-run wait for the next run.
+    */
+  @volatile private var availableNowEnd: Option[Int] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(CdcDataSource.listFiles(dir).length)
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[CdcOffset]
     // head of each trigger: always a FRESH listing (cache refreshed here,
     // reused by reportLatestOffset/planInputPartitions in the same trigger)
     cachedListing = null
     val files = listing()
+    val head = availableNowEnd.fold(files.length)(math.min(_, files.length))
     val cap = limit match {
       // clamp in LONG: fileCount + maxFiles overflows Int for an
       // "effectively unlimited" maxFilesPerTrigger=Int.MaxValue, and a
       // wrapped negative cap would wedge the stream on files(cap - 1)
       case m: ReadMaxFiles =>
-        math.min(files.length.toLong, s.fileCount.toLong + m.maxFiles).toInt
-      case _ => files.length
+        math.min(head.toLong, s.fileCount.toLong + m.maxFiles).toInt
+      case _ => head
     }
     CdcOffset(cap, if (cap == 0) "" else nameOf(files(cap - 1)),
       Some(CdcOffset.hashNames(files.take(cap).map(nameOf))))

@@ -67,12 +67,15 @@ class CdcSnapshotHandoffSpec extends SparkSpec {
     // would from a connector)
     val sink = tmpDir("handoff-sink")
     val ckpt = tmpDir("handoff-ckpt")
-    spark.readStream.format("graft-cdc")
+    val q = spark.readStream.format("graft-cdc")
       .schema(graft.sources.CdcDataSource.ValueOnlySchema)
       .option("maxFilesPerTrigger", 1).load(in)
       .writeStream.format("parquet")
       .option("path", sink).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2,
+      "snapshot and changes must arrive as two micro-batches")
 
     // consumer-side materialization over everything the stream delivered
     val state = CdcMaterialize

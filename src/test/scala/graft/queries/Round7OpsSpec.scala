@@ -190,8 +190,8 @@ class Round7OpsSpec extends SparkSpec {
       val want = keys.flatMap(k => for (va <- fa.get(k); vb <- fb.get(k))
         yield (k, va, vb,
           if (lastTouched(k)) "refreshed" else "carried")).toSet
-      assert(got == want, s"seed $seed:\n got=${got.toSeq.sorted}\n" +
-        s"want=${want.toSeq.sorted}")
+      assert(got == want, s"seed $seed:\n got=${got.toSeq.sortBy(_.toString)}\n" +
+        s"want=${want.toSeq.sortBy(_.toString)}")
       // both markers genuinely occur across the run
       assert(got.exists(_._4 == "carried") && got.exists(_._4 == "refreshed"),
         s"seed $seed: fixture must exercise both maintenance paths")
@@ -416,8 +416,8 @@ class Round7OpsSpec extends SparkSpec {
         (g0, rows.size.toLong, rows.map(_._2).sum,
           if (touchedGroups(g0)) "delta_applied" else "carried")
       }.toSet
-      assert(got == want, s"seed $seed:\n got=${got.toSeq.sorted}\n" +
-        s"want=${want.toSeq.sorted}")
+      assert(got == want, s"seed $seed:\n got=${got.toSeq.sortBy(_.toString)}\n" +
+        s"want=${want.toSeq.sortBy(_.toString)}")
       assert(got.exists(_._4 == "carried") &&
         got.exists(_._4 == "delta_applied"),
         s"seed $seed: fixture must exercise both maintenance paths")
