@@ -69,7 +69,4 @@ object Tables {
 
   def customerDec(s: SparkSession, d: String): DataFrame =
     customer(s, d).withColumn("c_acctbal", col("c_acctbal").cast(Money))
-
-  def supplierDec(s: SparkSession, d: String): DataFrame =
-    supplier(s, d).withColumn("s_acctbal", col("s_acctbal").cast(Money))
 }

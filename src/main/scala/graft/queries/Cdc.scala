@@ -1158,13 +1158,6 @@ object Cdc extends graft.GateFamily {
     val feedCols = Seq("n_members", "total_balance")
     // the DOWNSTREAM stage's group: the segment prefix of the view key
     val segOf = substring_index(col("g"), "-", 1)
-    // an empty downstream frame with the cascade's exact schema — the
-    // bootstrap batch cascades the all-'c' snapshot feed into it, so
-    // EVERY batch maintains w by the same one rule: w += feed
-    def emptyW(feed: DataFrame): DataFrame =
-      feed.select(segOf.as("seg"), lit(0L).as("n_rows"),
-        lit(0L).as("sum_n_members"), lit(0L).as("sum_total_balance"))
-        .filter(lit(false))
     // batch 0 bootstraps (and emits the all-'c' snapshot feed), batch 1
     // applies the A-side moves/deletes, batch 2 the B-side updates/
     // deletes (prune now drops gen 0), the optional batch 3 the 'late'
@@ -1229,13 +1222,13 @@ object Cdc extends graft.GateFamily {
       // feed's OWN just-published parquet, exactly the wire a
       // downstream consumer tails. The bounded read keeps its replay
       // byte-identical exactly like the feed's, and the bootstrap batch
-      // cascades the all-'c' snapshot feed into the empty frame, so one
-      // rule maintains every batch: w += feed
+      // cascades the all-'c' snapshot feed into an empty frame, so one
+      // rule — the decoupled consumer's own rollup fold — maintains
+      // every batch: w += feed
       val downStage = Drive.After("down", () => {
         val published = batch.published("feed")
-        ViewDelta.cascadeAgg(
-          batch.before("down").getOrElse(emptyW(published)),
-          published, segOf, "seg", feedCols)
+        graft.cdc.FeedConsumer.rollupFold(batch.before("down"), published,
+          segOf, "seg", feedCols)
       })
       (feedStage +: (if (cascade) Seq(downStage) else Nil)) ++
         Seq(Drive.Kinds("aState" -> aS2, "bState" -> bS2),
@@ -1288,15 +1281,19 @@ object Cdc extends graft.GateFamily {
     * drive — a chain of N downstream rollups updates for the price of
     * the deltas flowing through it, the dataflow-engine contract.
     */
-  def qCdcStreamCascade(s: SparkSession, d: String): DataFrame = {
-    val drive = streamChangefeedDrive(s, d,
-      gateTmpDir("graft_stream_cascade", d), cascade = true)
-    drive.state.readLatest("down").get
+  def qCdcStreamCascade(s: SparkSession, d: String): DataFrame =
+    segRollup(streamChangefeedDrive(s, d,
+      gateTmpDir("graft_stream_cascade", d), cascade = true).state)
+
+  /** The segment rollup in a cascade or consumer store's latest `down`,
+    * in the output shape its gates share.
+    */
+  private def segRollup(st: graft.cdc.VersionedState): DataFrame =
+    st.readLatest("down").get
       .select(col("seg"), col("n_rows").as("n_groups"),
         col("sum_n_members").as("members"),
         col("sum_total_balance").as("balance"))
       .orderBy(col("seg"))
-  }
 
   /** The published-feed schema [[qCdcFeedConsumer]] (and its spec) tail
     * — what [[streamChangefeedDrive]]'s handler writes per generation.
@@ -1313,7 +1310,7 @@ object Cdc extends graft.GateFamily {
   private[queries] def changefeedConsumer(s: SparkSession, base: String,
       name: String, withReseed: Boolean = false,
       publishFeed: Boolean = false): graft.cdc.FeedConsumer =
-    new graft.cdc.FeedConsumer(s,
+    graft.cdc.FeedConsumer.rollup(s,
       feedGlob = s"$base/store/feed/v*",
       feedSchema = ChangefeedSchema,
       store = s"$base/$name/store",
@@ -1348,7 +1345,7 @@ object Cdc extends graft.GateFamily {
     */
   private[queries] def chainStage2Consumer(s: SparkSession, base: String,
       stage1: String, name: String): graft.cdc.FeedConsumer =
-    new graft.cdc.FeedConsumer(s,
+    graft.cdc.FeedConsumer.rollup(s,
       feedGlob = s"$base/$stage1/store/feed/v*",
       feedSchema = ChainFeedSchema,
       store = s"$base/$name/store",
@@ -1358,11 +1355,11 @@ object Cdc extends graft.GateFamily {
       valueCols = Seq("n_rows", "sum_n_members", "sum_total_balance"))
 
   /** The decoupled MIN/MAX consumer over the same producer feed — see
-    * [[graft.cdc.FeedStatsConsumer]]; shared by the gate and spec.
+    * [[graft.cdc.FeedConsumer.minMax]]; shared by the gate and spec.
     */
   private[queries] def changefeedStatsConsumer(s: SparkSession,
-      base: String, name: String): graft.cdc.FeedStatsConsumer =
-    new graft.cdc.FeedStatsConsumer(s,
+      base: String, name: String): graft.cdc.FeedConsumer =
+    graft.cdc.FeedConsumer.minMax(s,
       feedGlob = s"$base/store/feed/v*",
       feedSchema = ChangefeedSchema,
       store = s"$base/$name/store",
@@ -1411,11 +1408,7 @@ object Cdc extends graft.GateFamily {
     val consumer = changefeedConsumer(s, base, "consumer")
     streamChangefeedDrive(s, d, base,
       afterRun = _ => consumer.runOnce())
-    consumer.state.readLatest("down").get
-      .select(col("seg"), col("n_rows").as("n_groups"),
-        col("sum_n_members").as("members"),
-        col("sum_total_balance").as("balance"))
-      .orderBy(col("seg"))
+    segRollup(consumer.state)
   }
 
   /** The RETENTION-RECOVERY gate: a consumer that STARTS after the
@@ -1453,11 +1446,7 @@ object Cdc extends graft.GateFamily {
       withReseed = true)
     streamChangefeedDrive(s, d, base, extraGen = true,
       afterRun = gen => if (gen >= 2) consumer.runOnce())
-    consumer.state.readLatest("down").get
-      .select(col("seg"), col("n_rows").as("n_groups"),
-        col("sum_n_members").as("members"),
-        col("sum_total_balance").as("balance"))
-      .orderBy(col("seg"))
+    segRollup(consumer.state)
   }
 
   /** The FEED-CHAIN gate — aggregates composing down a DECOUPLED
@@ -1507,7 +1496,7 @@ object Cdc extends graft.GateFamily {
     * aggregate on the consumer side of the wire:
     * [[qCdcFeedCascadeMinmax]] proved the threat/recompute dichotomy as
     * a batch algebra whose recompute read the producer's own view; this
-    * gate runs it DECOUPLED ([[graft.cdc.FeedStatsConsumer]]): a
+    * gate runs it DECOUPLED ([[graft.cdc.FeedConsumer.minMax]]): a
     * separately-checkpointed tail of the published feed maintains an
     * upstream REPLICA via `ViewDelta.applyDelta` (published first, read
     * back as the threat path's recompute source) and the extrema-bearing

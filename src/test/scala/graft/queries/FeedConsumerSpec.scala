@@ -4,7 +4,8 @@ import graft.SparkSpec
 import graft.cdc.FeedConsumer
 
 /** Pins the DECOUPLED consumer's independence rails — the contracts
-  * `q_cdc_feed_consumer`'s hash cannot express by itself:
+  * the feed gates' hashes cannot express by themselves. The count/sum
+  * rollup (first row):
   *
   *  1. MULTI-GENERATION CATCH-UP — a consumer that lags the producer
   *     applies generations N+1..N+k contiguously (the signed folds
@@ -21,6 +22,21 @@ import graft.cdc.FeedConsumer
   *     the producer's keepLast=2 prune swept the bootstrap feed must
   *     FAIL LOUDLY (a silent skip would corrupt every group the swept
   *     generation touched).
+  *  5. RESEED — the same gap with a snapshot source recovers onto the
+  *     reference answer, marked 'reseed'.
+  *  6. RESEED REPLAY — an un-committed reseed batch republishes
+  *     byte-identically.
+  *  7. STALLED consumer — its un-committed batch listed a generation the
+  *     prune has since swept; the restart must fail loudly and never
+  *     publish a frontier past the swept generation.
+  *
+  * The relay chain and the min/max replica (second row): stage 2 equals
+  * a recompute of stage 1, relay generations carry watermark rows, the
+  * min/max replica and rollup equal a recompute (in step and after a
+  * multi-generation catch-up), an un-committed min/max batch
+  * republishes `up` and `down` row-identically, a late min/max consumer
+  * and a late stage-2 consumer fail loudly behind retention, and a
+  * watermark-only relay generation advances stage 2's frontier alone.
   */
 class FeedConsumerSpec extends SparkSpec {
 
@@ -33,18 +49,26 @@ class FeedConsumerSpec extends SparkSpec {
   private def appliedOf(c: FeedConsumer): Long =
     c.state.readLatest("applied").get.head().getLong(0)
 
+  /** Every message on `ex`'s cause chain. */
+  private def messagesOf(ex: Throwable): Seq[String] =
+    Iterator.iterate(ex)(_.getCause)
+      .takeWhile(_ != null).map(e => Option(e.getMessage).getOrElse(""))
+      .toSeq
+
   test("decoupled consumer: catch-up, consumer-kill replay, producer " +
     "at-least-once no-op, and a loud failure behind the retention " +
     "window") {
     val s = spark
     val base = tmpDir("graft-fc-spec")
-    // the in-step consumer (one run per producer generation) and a
-    // LAGGED one that sees only the bootstrap during the drive
+    // the in-step consumer (one run per producer generation), a
+    // LAGGED one that sees only the bootstrap during the drive, and a
+    // STALLED one whose bootstrap batch is un-committed later (step 7)
     val consumer = Cdc.changefeedConsumer(s, base, "consumer")
     val lagged = Cdc.changefeedConsumer(s, base, "lagged")
+    val stalled = Cdc.changefeedConsumer(s, base, "stalled")
     val drive = Cdc.streamChangefeedDrive(s, sf, base, afterRun = gen => {
       consumer.runOnce()
-      if (gen == 0L) lagged.runOnce()
+      if (gen == 0L) { lagged.runOnce(); stalled.runOnce() }
     })
     val want = downOf(consumer)
     assert(want.nonEmpty)
@@ -89,10 +113,7 @@ class FeedConsumerSpec extends SparkSpec {
     // it must fail loudly, not silently skip the missing generation
     assert(drive.state.versions == Seq(1L, 2L))
     val late = Cdc.changefeedConsumer(s, base, "late")
-    val ex = intercept[Exception](late.runOnce())
-    val messages = Iterator.iterate(ex: Throwable)(_.getCause)
-      .takeWhile(_ != null).map(e => Option(e.getMessage).getOrElse(""))
-      .toSeq
+    val messages = messagesOf(intercept[Exception](late.runOnce()))
     assert(messages.exists(_.contains("retention outran")),
       s"expected the retention-gap failure, got: $messages")
 
@@ -121,6 +142,26 @@ class FeedConsumerSpec extends SparkSpec {
     reseeded.runOnce()
     assert(downOf(reseeded) == want)
     assert(appliedOf(reseeded) == 2L)
+
+    // 7. the stalled consumer's batch 0 listed feed v0, which the
+    // producer's prune has since swept: un-commit that batch and
+    // restart. The file source lists the swept file as absent, so the
+    // re-delivered batch must fail loudly (the retention gap, or a
+    // missing-file error) and never publish a frontier past v0
+    assert(!drive.state.versions.contains(0L))
+    assert(appliedOf(stalled) == 0L)
+    val sCommit = new org.apache.hadoop.fs.Path(s"$base/stalled/ck/commits/0")
+    assert(fs.exists(sCommit) && fs.delete(sCommit, false))
+    val stalledMessages =
+      messagesOf(intercept[Exception](stalled.runOnce()))
+    assert(stalledMessages.exists(m => m.contains("retention outran") ||
+        m.contains("FILE_NOT_EXIST") || m.contains("does not exist")),
+      s"expected a retention-gap or missing-file failure, got: " +
+        stalledMessages)
+    stalled.state.versions.foreach(v =>
+      assert(stalled.state.readAt("applied", v).head().getLong(0) < 1L,
+        s"the stalled consumer published a frontier past v0 at $v"))
+    assert(appliedOf(stalled) < 1L)
   }
 
   test("feed chain: stage-2 matches a direct recompute of stage 1, " +
@@ -199,9 +240,31 @@ class FeedConsumerSpec extends SparkSpec {
         == wantStats,
       "multi-generation catch-up must land on the same extrema rollup")
 
-    // stage-2 kill + re-delivery lands byte-identically
+    // min/max consumer kill: un-commit its newest batch and rerun it —
+    // the re-delivered batch re-folds its pre-batch replica and rollup
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sessionState.newHadoopConf())
+    val upBefore = rows(stats.state.readLatest("up").get, "g")
+    val downBefore = rows(stats.state.readLatest("down").get, "seg")
+    val statsCid = stats.state.versions.max
+    val statsCommit = new org.apache.hadoop.fs.Path(
+      s"$base/stats/ck/commits/$statsCid")
+    assert(fs.exists(statsCommit) && fs.delete(statsCommit, false))
+    stats.runOnce()
+    assert(stats.state.versions.max == statsCid)
+    assert(rows(stats.state.readLatest("up").get, "g") == upBefore,
+      "a re-delivered min/max batch must republish its replica unchanged")
+    assert(rows(stats.state.readLatest("down").get, "seg") == downBefore,
+      "a re-delivered min/max batch must republish its rollup unchanged")
+
+    // a LATE min/max consumer is behind the producer's keepLast=2
+    // retention: the shared gap check fails it loudly
+    val statsMessages = messagesOf(intercept[Exception](
+      Cdc.changefeedStatsConsumer(s, base, "statsLate").runOnce()))
+    assert(statsMessages.exists(_.contains("retention outran")),
+      s"expected the min/max retention-gap failure, got: $statsMessages")
+
+    // stage-2 kill + re-delivery lands byte-identically
     val c2Cid = c2.state.versions.max
     val c2Commit = new org.apache.hadoop.fs.Path(
       s"$base/stage2/ck/commits/$c2Cid")
@@ -238,10 +301,7 @@ class FeedConsumerSpec extends SparkSpec {
     // too
     assert(c1.state.versions.size == 2)
     val late2 = Cdc.chainStage2Consumer(s, base, "stage1", "late2")
-    val ex = intercept[Exception](late2.runOnce())
-    val messages = Iterator.iterate(ex: Throwable)(_.getCause)
-      .takeWhile(_ != null).map(e => Option(e.getMessage).getOrElse(""))
-      .toSeq
+    val messages = messagesOf(intercept[Exception](late2.runOnce()))
     assert(messages.exists(_.contains("retention outran")),
       s"expected the stage-2 retention-gap failure, got: $messages")
   }
