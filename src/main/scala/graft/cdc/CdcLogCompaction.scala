@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Materialize.Ops
+import graft.operators.RankOne
 
 /** Log compaction for a `graft-cdc` JSON-lines change log — the broker-side
   * retention policy the reference relies on for long-lived CDC topics
@@ -16,9 +17,10 @@ import graft.Materialize.Ops
   * compacted log and get byte-identical results at a fraction of the scan.
   *
   * Semantics:
-  *   - winner per (source schema, source table, key) = max `source.lsn`;
-  *     ties (a replayed envelope) break on the raw line, so the rewrite is
-  *     deterministic under at-least-once duplication.
+  *   - winner per (source schema, source table, key) = the first line
+  *     under `(source.lsn DESC NULLS LAST, line DESC)`: ties (a replayed
+  *     envelope) break on the raw line, so the rewrite is deterministic
+  *     under at-least-once duplication.
   *   - a winning tombstone (`op='d'`) removes the key from the compacted
   *     log entirely unless `retainTombstones=true` (Kafka's
   *     `delete.retention.ms` window, where consumers mid-bootstrap still
@@ -28,12 +30,12 @@ import graft.Materialize.Ops
   *     re-serialize). Lines with no extractable key or op (corrupt JSON,
   *     foreign shapes) are not compactable and pass through verbatim.
   *   - a key-bearing, op-bearing envelope whose `source.lsn` is null or
-  *     missing compacts at lsn = -infinity: it loses to ANY positioned
-  *     record for the same key (a record with no position makes the
-  *     weakest possible claim), and among only-null-lsn records for a key
-  *     the raw-line tiebreak picks one deterministic winner — so stale
-  *     unpositioned duplicates are actually removed instead of
-  *     accumulating as permanent passthrough.
+  *     missing ranks last: it loses to ANY positioned record for the
+  *     same key (a record with no position makes the weakest possible
+  *     claim), and among only-null-lsn records for a key the raw-line
+  *     tiebreak picks one deterministic winner — so stale unpositioned
+  *     duplicates are actually removed instead of accumulating as
+  *     permanent passthrough.
   *
   * Output layout: `0000000000_compacted_<i>.jsonl` — sorts
   * lexicographically BEFORE any collector-written log roll (zero-padded
@@ -45,9 +47,9 @@ import graft.Materialize.Ops
   *
   * Scale shape: one hash shuffle on (schema, table, key) for the frontier
   * argmax — the irreducible cost of per-key latest — and the argmax is a
-  * partial-aggregating `max(struct(rank, line))`, so the exchange carries
-  * one candidate per key per map partition, never every log line, and no
-  * per-partition sort runs; then a narrow write. Nothing driver-side,
+  * [[graft.operators.RankOne]] fold, so the exchange carries one
+  * candidate per key per map partition, never every log line, and no
+  * window sort runs; then a narrow write. Nothing driver-side,
   * nothing broadcast; a skewed hot key costs one aggregate group (already
   * map-side-combined), not a collect.
   */
@@ -61,15 +63,15 @@ object CdcLogCompaction {
     * `keyField` is the payload's primary-key field name inside
     * `after`/`before` (the reference's `customers.id`).
     *
-    * `nullLsnTsMsFallback` (round-7 advisory): the default −infinity
-    * rank silently drops an UNPOSITIONED record that is in fact the
+    * `nullLsnTsMsFallback` (round-7 advisory): ranking null-lsn records
+    * last silently drops an UNPOSITIONED record that is in fact the
     * newest state for its key — the right call for replay debris, the
     * wrong one for connectors that legitimately omit `lsn` on some live
-    * events. Opting in ranks a null-lsn record at its envelope `ts_ms`
-    * instead, an explicitly HEURISTIC position (lsn units are
-    * connector-specific and need not be millisecond-commensurable —
-    * which is why this is an opt-in escape hatch, not the default, and
-    * why the gate keeps the default).
+    * events. Opting in ranks on `coalesce(lsn, ts_ms)` instead: a
+    * null-lsn record at its envelope `ts_ms`, an explicitly HEURISTIC
+    * position (lsn units are connector-specific and need not be
+    * millisecond-commensurable — which is why this is an opt-in escape
+    * hatch, not the default, and why the gate keeps the default).
     */
   def compact(spark: SparkSession, inDir: String, outDir: String,
       keyField: String = "id", retainTombstones: Boolean = false,
@@ -98,27 +100,14 @@ object CdcLogCompaction {
     val compactable = keyed.filter(col("key").isNotNull && col("op").isNotNull)
     val passthrough = keyed.filter(col("key").isNull || col("op").isNull)
       .select(col("value"), lit("p").as("verdict"))
-    // null lsn ranks at -infinity (see scaladoc); Long.MinValue is the
-    // in-plan encoding — real lsns are non-negative sequence positions.
-    // Under the opt-in fallback a null-lsn record ranks at its ts_ms
-    // first (still -infinity when that too is absent).
-    val nullRank =
-      if (nullLsnTsMsFallback) coalesce(col("tsms"), lit(Long.MinValue))
-      else lit(Long.MinValue)
-    // per-(schema, table, key) frontier as an ARGMAX aggregate
-    // (optimization guide §2.3: aggregate before you shuffle), not a
-    // row_number window: max over struct(rank, value, op) picks the
-    // winner under exactly the old (rank DESC, raw-line DESC) order —
-    // `op` rides behind the total raw-line tiebreak, so it never
-    // decides — while count(*) − 1 tallies the superseded lines the
-    // window used to carry as whole rows. The reduction folds to one
-    // candidate line per key per map partition BEFORE the exchange and
-    // runs no per-partition sort; superseded log lines never shuffle.
+    val rank =
+      if (nullLsnTsMsFallback) coalesce(col("lsn"), col("tsms")) else col("lsn")
+    // count(*) − 1 tallies the superseded lines beside the winner
     val winners = compactable
       .groupBy(col("src_schema"), col("src_table"), col("key"))
       .agg(
-        max(struct(coalesce(col("lsn"), nullRank).as("r"), col("value"),
-          col("op"))).as("w"),
+        RankOne.of(compactable, struct(col("value"), col("op")),
+          rank.desc_nulls_last, col("value").desc).as("w"),
         count(lit(1)).as("n"))
     val tombstoned =
       if (retainTombstones) lit(false) else col("w.op") === "d"

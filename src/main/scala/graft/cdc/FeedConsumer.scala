@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.ViewDelta
+import graft.operators.{RankOne, ViewDelta}
 import graft.streaming.Drive
 
 /** A DECOUPLED change-feed consumer: a second, separately-checkpointed
@@ -70,8 +70,9 @@ import graft.streaming.Drive
   *    fires there, and that frame is never executed — benign, and what
   *    `q_cdc_feed_reseed` logs. An UN-committed batch that listed a swept
   *    version does re-execute, over what is left: its swept generation
-  *    reads as absent, so the frontier cannot pass it and the next fresh
-  *    generation trips the gap check (spec-pinned).
+  *    reads as absent, so it would republish a LOWER frontier than its
+  *    first run did; it fails before publishing anything instead
+  *    (spec-pinned).
   *  - CONTIGUOUS multi-generation catch-up: signed folds compose across
   *    consecutive feeds (a group's −old₁+new₁−old₂+new₂ telescopes), so
   *    one micro-batch carrying generations N+1..N+k applies in one fold;
@@ -174,6 +175,13 @@ final class FeedConsumer private (
         val fresh = b.filter(col("feed_version") > lit(frontier0))
           .filter(col("op") =!= FeedConsumer.WatermarkOp)
         val frontier = beyond.maxOption.getOrElse(frontier0)
+        // a replay whose generations were swept since its first run
+        // would regress the frontier it already published
+        state.publishedAt("applied", cid).map(_.head().getLong(0))
+          .filter(_ > frontier).foreach(was => throw new IllegalStateException(
+            s"feed retention outran this consumer: replayed batch $cid " +
+              s"would publish applied frontier $frontier below its first " +
+              s"run's $was (its feed generations were swept since)"))
         val (first, down) = fold(batch, fresh, snapshot)
         val s2 = spark
         import s2.implicits._
@@ -261,18 +269,8 @@ object FeedConsumer {
         // so collapse to each key's LAST image first — intermediate
         // images telescope away for a replace-by-key apply
         // (cascadeAggStats keeps the FULL rows: its signed fold needs
-        // every generation's images). A max_by ARGMAX on feed_version,
-        // not a row_number window: it partial-aggregates map-side and
-        // skips the sort; (key, feed_version) is unique and never null
-        // (feedVersions fails the batch on a null), so ties cannot occur.
-        val nonKey = fresh.columns.filterNot(upstreamKeys.contains)
-        val latest = fresh
-          .groupBy(upstreamKeys.map(col): _*)
-          .agg(max_by(struct(nonKey.map(col): _*), col("feed_version"))
-            .as("__top"))
-          .select(fresh.columns.map(c =>
-            if (upstreamKeys.contains(c)) col(c)
-            else col(s"__top.$c").as(c)).toSeq: _*)
+        // every generation's images). (key, feed_version) is unique.
+        val latest = RankOne(fresh, upstreamKeys, col("feed_version").desc)
         // replica first, then read the parquet back as the threat
         // path's recompute source (one materialized pass)
         (Seq(Drive.Kinds("up" ->

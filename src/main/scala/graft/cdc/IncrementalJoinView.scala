@@ -3,6 +3,8 @@ package graft.cdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.RankOne
+
 /** Incremental maintenance of a keyed two-table INNER-JOIN view from CDC
   * deltas — the next consumer capability after incremental aggregates
   * (`q_cdc_incremental_agg`): a warehouse keeps `V = A ⋈ B` materialized
@@ -23,7 +25,7 @@ import org.apache.spark.sql.functions._
   *      view), and CARRIES every untouched view row via an anti-join.
   *
   * Scale shape: all joins are key-equi (hash-partitioned once on the
-  * key); the window reduction runs over |touched state| + |Δ| rows, not
+  * key); the rank-1 reduction runs over |touched state| + |Δ| rows, not
   * the corpus; carried rows move through an anti-join whose probe side
   * is the broadcast-sized touched-key set when |Δ| is small. Cost per
   * batch is O(|Δ|) plus the carried-view pass — the recompute-from-
@@ -32,37 +34,19 @@ import org.apache.spark.sql.functions._
 object IncrementalJoinView {
 
   /** One side's live state from a delta frame `(key, op, lsn, payload…)`:
-    * per key the max-`lsn` row wins (ties broken on op descending — a
-    * replayed pair is identical anyway) and a winning delete removes the
-    * key. Retains `lsn` so the state can re-enter later reductions.
-    *
-    * Implementation (optimization round 13, guide §2.3 "aggregate before
-    * you shuffle"): the per-key argmax is a `max_by` hash aggregate, not
-    * a `row_number` window. The window formulation shuffled EVERY delta
-    * row and sorted each partition before discarding all but one row per
-    * key; `max_by` folds to one candidate row per key on the map side,
-    * so the exchange carries O(distinct keys) rows and no sort runs at
-    * all — at 100 TB the difference between shuffling the change stream
-    * and shuffling its key set. Semantics are identical for the
-    * operator's contract (`lsn` non-null, `op` non-null — every producer
-    * stamps both; ties in (lsn, op) only ever carry identical rows):
-    * max-by-(lsn, op) picks exactly the row `ORDER BY lsn DESC, op DESC`
-    * ranked first, including the empty-op re-tag losing equal-lsn ties
-    * to every real op. Pinned in `OperatorsSpec` ("sideState reduction").
+    * per key the first row under `(lsn DESC, op DESC)` wins, and a
+    * winning delete removes the key. Retains `lsn` so the state can
+    * re-enter later reductions; the output keeps the input's column
+    * order minus `op`. Every producer stamps a non-null `lsn` and `op`,
+    * and rows tying on both are identical replays; the empty-op re-tag
+    * of carried state loses every equal-lsn tie to a real op. A
+    * [[graft.operators.RankOne]] fold, pinned in `OperatorsSpec`
+    * ("sideState reduction").
     */
-  def sideState(deltas: DataFrame, key: String): DataFrame = {
-    val others = deltas.columns.filter(_ != key).toSeq // op, lsn, payload…
-    val top = max_by(struct(others.map(col): _*),
-      struct(col("lsn"), col("op")))
-    // output preserves the INPUT column order minus `op` (round-13
-    // advisory: every current caller passes key-first frames, but the
-    // operator's schema contract must not silently depend on that)
-    deltas.groupBy(col(key)).agg(top.as("__top"))
-      .filter(col("__top").getField("op") =!= "d")
-      .select(deltas.columns.filterNot(_ == "op").map(c =>
-        if (c == key) col(key)
-        else col("__top").getField(c).as(c)).toSeq: _*)
-  }
+  def sideState(deltas: DataFrame, key: String): DataFrame =
+    RankOne(deltas, Seq(key), col("lsn").desc, col("op").desc)
+      .filter(col("op") =!= "d")
+      .drop("op")
 
   /** Touched-key set of one change batch (both sides' delta keys) —
     * shared by [[step]] and [[IncrementalAggView.step]].

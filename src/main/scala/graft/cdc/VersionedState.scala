@@ -96,6 +96,14 @@ final class VersionedState(spark: SparkSession, store: String,
   def readAt(kind: String, version: Long): DataFrame =
     spark.read.parquet(s"$store/$kind/v$version")
 
+  /** The given kind as batch `id` published it, if that publish
+    * completed (its `_SUCCESS` marker exists) — how a re-delivered batch
+    * sees its first run. Costs one existence test when it did not.
+    */
+  def publishedAt(kind: String, id: Long): Option[DataFrame] =
+    Some(s"$store/$kind/v$id").filter(d => fs.exists(new Path(s"$d/_SUCCESS")))
+      .map(spark.read.parquet(_))
+
   /** Idempotent publish: mode=overwrite on a batch-id-keyed path, so
     * checkpoint-replayed batches rewrite identical bytes.
     */

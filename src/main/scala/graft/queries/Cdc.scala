@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.RankOne
 import graft.cdc.{CdcEnvelope, CdcLogCompaction, CdcMaterialize, CdcPipeline, CdcSource, Enrich, EnrichConfig}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,13 +21,22 @@ object Cdc extends graft.GateFamily {
 
   private val FixedTs = 1700000000123L // 2023-11-14T22:13:20.123 UTC
 
-  def qCdcEnrich(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"),
-      col("c_name").as("name"),
-      concat(
-        regexp_replace(lower(col("c_name")), "[^a-z0-9]+", "."),
+  /** The `customers` row images every CDC fixture captures:
+    * `(id, name, email)`.
+    */
+  private def customers(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d).select(
+      col("c_custkey").cast("int").as("id"), col("c_name").as("name"),
+      concat(regexp_replace(lower(col("c_name")), "[^a-z0-9]+", "."),
         lit("@"), lower(col("c_mktsegment")), lit(".example.com")).as("email"))
+
+  /** `(id, name)` of every customer. */
+  private def customerNames(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d).select(
+      col("c_custkey").cast("int").as("id"), col("c_name").as("name"))
+
+  def qCdcEnrich(s: SparkSession, d: String): DataFrame = {
+    val cust = customers(s, d)
     val envelopes = CdcSource.snapshot(cust, "inventory", "public", "customers",
       fixedTsMs = Some(FixedTs))
     Enrich(envelopes, EnrichConfig(processingTimeIso = Some("2026-01-01T00:00:00")))
@@ -55,12 +65,7 @@ object Cdc extends graft.GateFamily {
     * form the tail gate grows a log with; [[changeMixRaw]] is their union.
     */
   private def changeMixParts(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"),
-      col("c_name").as("name"),
-      concat(
-        regexp_replace(lower(col("c_name")), "[^a-z0-9]+", "."),
-        lit("@"), lower(col("c_mktsegment")), lit(".example.com")).as("email"))
+    val cust = customers(s, d)
     def mk(rows: DataFrame, op: String, lsn: Column) =
       CdcSource.changes(rows, op, "inventory", "public", "customers",
         lsn, fixedTsMs = Some(FixedTs))
@@ -131,9 +136,7 @@ object Cdc extends graft.GateFamily {
     */
   private def txnFixture(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"),
-      col("c_name").as("name"))
+    val cust = customerNames(s, d)
     val updFull = cust.filter(col("id") % 3 === 0)
       .withColumn("name", upper(col("name")))
     val txOf = expr("id div 30") + 1L
@@ -336,12 +339,7 @@ object Cdc extends graft.GateFamily {
     * narrow parse/enrich, no shuffle before the presentation sort.
     */
   def qCdcSchemaDrift(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"),
-      col("c_name").as("name"),
-      concat(
-        regexp_replace(lower(col("c_name")), "[^a-z0-9]+", "."),
-        lit("@"), lower(col("c_mktsegment")), lit(".example.com")).as("email"))
+    val cust = customers(s, d)
     val pre = CdcSource.changes(cust, "r", "inventory", "public",
       "customers", col("id").cast("long"), fixedTsMs = Some(FixedTs))
     // the ALTER: every 2nd key re-emitted as an update whose payload now
@@ -518,8 +516,7 @@ object Cdc extends graft.GateFamily {
     */
   def qCdcScd2Incremental(s: SparkSession, d: String): DataFrame = {
     import graft.cdc.IncrementalScd2
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"), col("c_name").as("name"))
+    val cust = customerNames(s, d)
     val lsn0 = col("id").cast("long")
     val e1 = cust.select(col("id"), lit("r").as("op"), lsn0.as("lsn"),
       col("name"))
@@ -637,8 +634,7 @@ object Cdc extends graft.GateFamily {
     */
   def qCdcJoinView(s: SparkSession, d: String): DataFrame = {
     import graft.cdc.IncrementalJoinView
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"), col("c_name").as("name"))
+    val cust = customerNames(s, d)
     val lsn0 = col("id").cast("long")
     val a1 = cust.select(col("id"), lit("r").as("op"), lsn0.as("lsn"),
       col("name"))
@@ -690,8 +686,7 @@ object Cdc extends graft.GateFamily {
     */
   def qCdcViewDrift(s: SparkSession, d: String): DataFrame = {
     import graft.cdc.IncrementalJoinView
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"), col("c_name").as("name"))
+    val cust = customerNames(s, d)
     val lsn0 = col("id").cast("long")
     // generation 1: NO tier column anywhere
     val a1 = cust.select(col("id"), lit("r").as("op"), lsn0.as("lsn"),
@@ -1626,15 +1621,14 @@ object Cdc extends graft.GateFamily {
     * where present, else the corrected/original snapshot — %12 keys
     * prove the update outranks the correction on the valid axis).
     *
-    * Scale shape: three filtered max_by aggregates over the event
-    * stream, each one key-partitioned shuffle with map-side combine —
-    * the same irreducible cost as latest-state; the three arms join on
-    * the key. No window over unbounded history, no per-(V,T) rescan
-    * beyond the filters.
+    * Scale shape: three filtered rank-1 folds over the event stream,
+    * each one key-partitioned shuffle with map-side combine — the same
+    * irreducible cost as latest-state; the three arms join on the key.
+    * No window over unbounded history, no per-(V,T) rescan beyond the
+    * filters.
     */
   def qCdcBitemporal(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"), col("c_name").as("name"))
+    val cust = customerNames(s, d)
     val idL = col("id").cast("long")
     val snap = cust.select(col("id"), col("name"),
       idL.as("vlsn"), idL.as("rlsn"))
@@ -1646,11 +1640,11 @@ object Cdc extends graft.GateFamily {
         idL.as("vlsn"), (idL + 20000000L).as("rlsn"))
     val ev = snap.unionByName(upd).unionByName(corr)
       .stage() // the three as-of arms share one materialization
-    def asOf(vCap: org.apache.spark.sql.Column,
-        tCap: org.apache.spark.sql.Column, out: String): DataFrame =
-      ev.filter(col("vlsn") <= vCap && col("rlsn") <= tCap)
-        .groupBy(col("id"))
-        .agg(max_by(col("name"), struct(col("vlsn"), col("rlsn"))).as(out))
+    def asOf(vCap: Column, tCap: Column, out: String): DataFrame = {
+      val known = ev.filter(col("vlsn") <= vCap && col("rlsn") <= tCap)
+      known.groupBy(col("id")).agg(RankOne.of(known, col("name"),
+        col("vlsn").desc, col("rlsn").desc).as(out))
+    }
     asOf(idL + 1L, idL + 15000000L, "name_v1_t1")
       .join(asOf(idL + 1L, idL + 25000000L, "name_v1_t2"), "id")
       .join(asOf(idL + 10000001L, idL + 25000000L, "name_v2_t2"), "id")
@@ -2050,14 +2044,7 @@ object Cdc extends graft.GateFamily {
   private def routedToMv(s: SparkSession, q: DataFrame, mvTag: String,
       baseTags: String*): DataFrame = {
     val opt = q.queryExecution.optimizedPlan
-    val leaves = opt.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
+    val leaves = scannedRoots(opt)
     // join-bearing callers pass BOTH base tags (round-11 advisory: a
     // fact-only check would let a plan that re-read the dim slip by)
     require(leaves.exists(_.contains(mvTag)) &&
@@ -2232,7 +2219,18 @@ object Cdc extends graft.GateFamily {
   private def fellBackToBase(s: SparkSession, q: DataFrame,
       baseTag: String, mvTag: String): DataFrame = {
     val opt = q.queryExecution.optimizedPlan
-    val leaves = opt.collect {
+    val leaves = scannedRoots(opt)
+    require(leaves.exists(_.contains(baseTag)) &&
+      !leaves.exists(_.contains(mvTag)),
+      s"stale registration did not fall back to the base: plan reads $leaves")
+    org.apache.spark.sql.GraftSqlBridge.ofRows(s, opt)
+  }
+
+  /** The root paths of every file relation `opt` reads. */
+  private def scannedRoots(
+      opt: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[String] =
+    opt.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case h: org.apache.spark.sql.execution.datasources
@@ -2240,11 +2238,6 @@ object Cdc extends graft.GateFamily {
           case _ => Seq.empty[String]
         }
     }.flatten
-    require(leaves.exists(_.contains(baseTag)) &&
-      !leaves.exists(_.contains(mvTag)),
-      s"stale registration did not fall back to the base: plan reads $leaves")
-    org.apache.spark.sql.GraftSqlBridge.ofRows(s, opt)
-  }
 
   /** MV FRESHNESS GUARD ([[graft.plans.MvRewrite.Freshness]], round-11
     * verdict item #3): a registration certified against one generation
@@ -2939,9 +2932,7 @@ object Cdc extends graft.GateFamily {
     * touches the driver.
     */
   def qCdcTxnConsistent(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"),
-      col("c_name").as("name"))
+    val cust = customerNames(s, d)
     val updFull = cust.filter(col("id") % 3 === 0)
       .withColumn("name", upper(col("name")))
     val txOf = expr("id div 30") + 1L
@@ -2974,13 +2965,9 @@ object Cdc extends graft.GateFamily {
     val state = parsed.filter(col("op") === "r")
       .unionByName(updates.join(applied, Seq("tx"), "left_semi"))
       .select(col("id"), col("name"), col("lsn"))
-    // per-key latest as a partial-aggregating argmax (guide §2.3): max
-    // over struct(lsn, name) — lsns are distinct per key here (snapshot
-    // id vs update id+10M), so the name field never decides — folds
-    // map-side; the old row_number window shuffled and sorted every row
-    state.groupBy(col("id"))
-      .agg(max(struct(col("lsn"), col("name"))).as("_w"))
-      .select(col("id"), col("_w.name").as("name"), col("_w.lsn").as("lsn"))
+    // per-key latest (lsns are distinct per key: snapshot id vs update
+    // id+10M, so name never decides)
+    RankOne(state, Seq("id"), col("lsn").desc, col("name").desc)
       .groupBy((col("id") % 10).cast("int").as("bucket"))
       .agg(
         count(lit(1)).as("n_rows"),
@@ -3148,9 +3135,7 @@ object Cdc extends graft.GateFamily {
     * aggregate — identical to the streaming fan-out's per-batch plan.
     */
   def qCdcMultiTable(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d).select(
-      col("c_custkey").cast("int").as("id"),
-      col("c_name").as("name"))
+    val cust = customerNames(s, d)
     // deterministic ¼ subset: the gate checks routing + payload
     // integrity, not volume (q_cdc_enrich already runs the full-table
     // envelope round-trip); each record pays the enrich pass plus a

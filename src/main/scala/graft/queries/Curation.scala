@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.RankOne
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,19 +57,14 @@ object Curation extends graft.GateFamily {
     val corpus = docs.filter(!isBench)
       .select(col("doc_id"), size(col("hs")).as("n_sh"),
         explode(col("hs")).as("sh"))
-    corpus.join(broadcast(bench), "sh")
+    val matches = corpus.join(broadcast(bench), "sh")
       .groupBy(col("doc_id"), col("n_sh"), col("bench_id"))
       .agg(count(lit(1)).as("common"))
-      // best benchmark match as a min_by ARGMIN over struct(−common,
-      // bench_id) — the old (common DESC, bench_id ASC) rank-1 window's
-      // exact total order (bench_id is unique per doc's match rows),
-      // folded map-side with no sort (guide §2.3)
-      .groupBy(col("doc_id"), col("n_sh"))
-      .agg(min_by(struct(col("bench_id"), col("common")),
-        struct((-col("common")).as("nc"), col("bench_id"))).as("_w"))
-      .select(col("doc_id"), col("_w.bench_id").as("bench_id"),
-        col("_w.common").as("common"),
-        floor(col("_w.common") * 10000L / col("n_sh")).cast("long")
+    // best benchmark match (bench_id is unique per doc's match rows)
+    RankOne(matches, Seq("doc_id", "n_sh"), col("common").desc,
+        col("bench_id"))
+      .select(col("doc_id"), col("bench_id"), col("common"),
+        floor(col("common") * 10000L / col("n_sh")).cast("long")
           .as("contamination_x10000"))
       .orderBy(col("doc_id"))
   }

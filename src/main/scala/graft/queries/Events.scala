@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.RankOne
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -211,17 +212,12 @@ object Events extends graft.GateFamily {
     * (`StreamingSpec` covers that path).
     */
   def qEventsDedup(s: SparkSession, d: String): DataFrame = {
-    // earliest-per-key as a partial-aggregating argmin (guide §2.3):
-    // min over struct(ts, event_id) — event_id makes the order total, so
-    // this is exactly the old (ts, event_id) rank-1 window, minus its
-    // full shuffle-and-sort of every duplicate (duplicates now fold away
-    // map-side and the exchange carries one candidate per key)
-    events(s, d)
+    val keyed = events(s, d)
       .withColumn("bucket", window(col("ts"), "10 minutes").getField("start"))
-      .groupBy(col("bucket"), col("user_id"), col("event_type"))
-      .agg(min(struct(col("ts"), col("event_id"))).as("_w"))
-      .select(col("_w.event_id").as("event_id"), col("user_id"),
-        col("event_type"), col("bucket"), col("_w.ts").as("ts"))
+      .select("bucket", "user_id", "event_type", "ts", "event_id")
+    RankOne(keyed, Seq("bucket", "user_id", "event_type"), col("ts"),
+        col("event_id"))
+      .select("event_id", "user_id", "event_type", "bucket", "ts")
       .orderBy(col("event_id"))
   }
 
@@ -905,14 +901,9 @@ object Events extends graft.GateFamily {
       Drive.Land(s"$staged/s$i", inDir, s"s$i"))), rocksDb = true)(run)
     // final state per user = the max-n_events batch snapshot (the count
     // is cumulative, so the last emission carries the max; a re-emitted
-    // tie is byte-identical). Argmax aggregate instead of a rank-1
-    // window (guide §2.3): folds map-side, no sort.
-    s.read.parquet(sink)
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("n_events"), col("cents_sum"), col("top3")),
-        col("n_events")).as("_w"))
-      .select(col("user_id"), col("_w.n_events").as("n_events"),
-        col("_w.cents_sum").as("cents_sum"), col("_w.top3").as("top3"))
+    // tie is byte-identical)
+    RankOne(s.read.parquet(sink).drop("batch"), Seq("user_id"),
+        col("n_events").desc)
       .orderBy(col("user_id"))
   }
 
@@ -1069,17 +1060,9 @@ object Events extends graft.GateFamily {
     Drive.generations(s, (0 until 3).map(i =>
       Seq(Drive.Land(s"$staged/s$i", inDir, s"s$i"))), rocksDb = true)(run)
     // final state per user = the max-n_total batch snapshot (cumulative
-    // count, same argmax-not-window rationale as qStreamTwsSession)
-    s.read.parquet(sink)
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("n_total"), col("type_summary"),
-        col("n_purchases"), col("purchase_id_sum"), col("purchase_cents")),
-        col("n_total")).as("_w"))
-      .select(col("user_id"), col("_w.n_total").as("n_total"),
-        col("_w.type_summary").as("type_summary"),
-        col("_w.n_purchases").as("n_purchases"),
-        col("_w.purchase_id_sum").as("purchase_id_sum"),
-        col("_w.purchase_cents").as("purchase_cents"))
+    // count, same rationale as qStreamTwsTopk)
+    RankOne(s.read.parquet(sink).drop("batch"), Seq("user_id"),
+        col("n_total").desc)
       .orderBy(col("user_id"))
   }
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.RankOne
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.Ops
@@ -244,16 +245,13 @@ object Graph extends graft.GateFamily {
       .groupBy(col("a"), col("label")).agg(count(lit(1)).as("c"))
 
   /** The round's adoption: per node, the most frequent neighbor label,
-    * smallest label on ties (the determinism pin). Expressed as a
-    * min_by ARGMIN over struct(−c, label) — identical total order to
-    * the old (c DESC, label ASC) rank-1 window, but it partial-
-    * aggregates map-side and skips the per-partition sort (guide §2.3);
-    * the histogram's (a, label) keys make the order total, so ties
-    * cannot occur. Per round this removes one Sort from the loop.
+    * smallest label on ties (the determinism pin) — the rank-1 row under
+    * `(c DESC, label)`, total because the histogram is keyed on
+    * (a, label). A [[RankOne]] fold: no per-round window sort.
     */
   private[queries] def lpaAdopt(freq: DataFrame): DataFrame =
     freq.groupBy(col("a"))
-      .agg(min_by(col("label"), struct((-col("c")).as("nc"), col("label")))
+      .agg(RankOne.of(freq, col("label"), col("c").desc, col("label"))
         .as("label"))
       .select(col("a").as("node"), col("label"))
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.RankOne
 import graft.functions.VectorFunctions
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -212,15 +213,13 @@ object Retrieval extends graft.GateFamily {
       .limit(MaxCentroids)
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"),
         col("norm").as("cnorm"))
-    // nearest centroid as a map-side max_by aggregate (no window over the
-    // corpus): unique (cos, -centroid_id) key == row_number()=1 under
-    // (cos DESC, centroid_id ASC)
-    val assigned = vecs.crossJoin(broadcast(cents))
+    // nearest centroid, no window over the corpus
+    val scored = vecs.crossJoin(broadcast(cents))
       .withColumn("cos",
         VectorFunctions.dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("centroid_id"),
-        struct(col("cos"), (-col("centroid_id")).as("nb"))).as("cluster"),
+    val assigned = scored.groupBy(col("vec_id"))
+      .agg(RankOne.of(scored, col("centroid_id"), col("cos").desc,
+        col("centroid_id")).as("cluster"),
         first(col("v")).as("v"))
     assigned
       .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.RankOne
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -115,23 +116,19 @@ object Similarity extends graft.GateFamily {
       col("label").as("neighbor_label"))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    broadcast(queries).crossJoin(corpus)
+    val votes = broadcast(queries).crossJoin(corpus)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", dotQC / (col("qnorm") * col("cnorm")))
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= KnnK)
       .groupBy(col("query_id"), col("true_label"), col("neighbor_label"))
       .agg(count(lit(1)).as("votes"))
-      // winning label as a min_by ARGMIN over struct(−votes, label) —
-      // the old (votes DESC, label ASC) rank-1 window's exact total
-      // order (label is unique within a query's vote rows), folded
-      // map-side with no sort (guide §2.3)
-      .groupBy(col("query_id"), col("true_label"))
-      .agg(min_by(struct(col("neighbor_label"), col("votes")),
-        struct((-col("votes")).as("nv"), col("neighbor_label"))).as("_w"))
+    // winning label (unique within a query's vote rows)
+    RankOne(votes, Seq("query_id", "true_label"), col("votes").desc,
+        col("neighbor_label"))
       .select(col("query_id"), col("true_label"),
-        col("_w.neighbor_label").as("pred_label"), col("_w.votes").as("votes"),
-        (col("_w.neighbor_label") === col("true_label")).as("correct"))
+        col("neighbor_label").as("pred_label"), col("votes"),
+        (col("neighbor_label") === col("true_label")).as("correct"))
       .orderBy(col("query_id"))
   }
 
@@ -329,15 +326,14 @@ object Similarity extends graft.GateFamily {
   }
 
   /** Nearest-cell reduction of [[assignedPivots]] → (vec_id, cell, v,
-    * norm). Nearest pivot without a corpus-wide window: max_by over
-    * (pcos, -pivot_id) == row_number()=1 under (pcos DESC, pivot_id) —
-    * the tiebreak key is unique, and the aggregate combines map-side.
+    * norm): the rank-1 pivot under `(pcos DESC, pivot_id)`, without a
+    * corpus-wide window.
     */
   private[queries] def nearestCells(assigned: DataFrame): DataFrame =
     assigned.groupBy(col("vec_id"))
       .agg(
-        max_by(col("pivot_id"),
-          struct(col("pcos"), (-col("pivot_id")).as("nb"))).as("cell"),
+        RankOne.of(assigned, col("pivot_id"), col("pcos").desc,
+          col("pivot_id")).as("cell"),
         first(col("v")).as("v"), first(col("norm")).as("norm"))
 
   /** IVF (inverted-file) ANN: assign every vector to its nearest pivot

@@ -6,13 +6,24 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` Column↔Expression conversion, so
   * graft's custom Catalyst expressions (e.g. `graft.functions.DotProduct`)
-  * can be exposed through the public Column API. This is the conventional
-  * pattern for third-party Catalyst extensions; nothing else from the
-  * private surface is touched.
+  * can be exposed through the public Column API, plus the direction and
+  * null placement of a sort-order column (`graft.operators.RankOne`).
+  * This is the conventional pattern for third-party Catalyst extensions;
+  * nothing else from the private surface is touched.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A sort-order column as (key, ascending, nulls first); a bare column
+    * sorts ascending with nulls first, as in `orderBy`.
+    */
+  def sortKey(c: Column): (Column, Boolean, Boolean) = c.node match {
+    case internal.SortOrder(key, dir, nulls, _) =>
+      (new Column(key), dir == internal.SortOrder.Ascending,
+        nulls == internal.SortOrder.NullsFirst)
+    case _ => (c, true, true)
+  }
 
   /** Wrap a (resolved) logical plan as a DataFrame — how the MV gates
     * return the ALREADY-REWRITTEN plan, so `graft.plans.MvRewrite` can

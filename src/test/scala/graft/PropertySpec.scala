@@ -664,6 +664,59 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("property: RankOne ≡ row_number() = 1 under the same ORDER BY, " +
+      "both sides, every null placement") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.RankOne
+    // few distinct values: ties, negatives and NULLs in every key, and a
+    // NULL group; `id` is the unique tiebreak
+    val rowGen = for {
+      g <- Gen.oneOf(None, Some("x"), Some("y"))
+      a <- Gen.option(Gen.chooseNum(-3L, 3L))
+      i <- Gen.option(Gen.chooseNum(-2, 2))
+      str <- Gen.option(Gen.oneOf("a", "b", "c"))
+      t <- Gen.option(Gen.chooseNum(-2L, 2L).map(h => new Timestamp(h * 3600000L)))
+    } yield (g, a, i, str, t)
+    val (a, i, s, t, id) = (col("a"), col("i"), col("s"), col("t"), col("id"))
+    val orders = Seq(
+      Seq(id.desc),
+      Seq(a.asc_nulls_first, id), Seq(a.asc_nulls_last, id.desc),
+      Seq(a.desc_nulls_first, id), Seq(a.desc_nulls_last, id.desc),
+      Seq(s, a.desc_nulls_last, id),
+      Seq(s.desc_nulls_last, a.asc_nulls_last, id),
+      Seq(t.desc, a.asc_nulls_first, id.desc),
+      Seq(t.asc_nulls_last, s.asc_nulls_last, i.desc, id),
+      Seq(s.desc, t.desc_nulls_first, i.asc_nulls_last, id))
+    // eight random frames as the groups of one (sample `k`, `g`), and
+    // every order's winners in one frame, tagged with the order's index
+    val samples = scala.collection.mutable.ArrayBuffer.empty[
+      (Int, Option[String], Option[Long], Option[Int], Option[String],
+        Option[Timestamp], Long)]
+    forSamples(Gen.listOfN(40, rowGen)) { rows =>
+      val (k, n0) = (samples.size / 40, samples.size)
+      samples ++= rows.zipWithIndex.map { case ((g, a, i, s, t), j) =>
+        (k, g, a, i, s, t, (n0 + j).toLong) }
+    }
+    val df = samples.toSeq.toDF("k", "g", "a", "i", "s", "t", "id")
+    def winners(rankOne: Seq[Column] => DataFrame): Set[Seq[Any]] =
+      orders.zipWithIndex
+        .map { case (order, n) => rankOne(order).withColumn("order", lit(n)) }
+        .reduce(_ unionByName _).collect().map(_.toSeq).toSet
+    val got = winners(order => RankOne(df, Seq("k", "g"), order: _*))
+    val want = winners(order => df.withColumn("rn", row_number()
+        .over(Window.partitionBy("k", "g").orderBy(order: _*)))
+      .filter(col("rn") === 1).drop("rn"))
+    assert(got == want, s"orders: ${orders.zipWithIndex.mkString("; ")}")
+    // non-integral keys in opposite directions have no min/max fold
+    val e = intercept[IllegalArgumentException](RankOne(
+      Seq(("x", "a", new Timestamp(0L))).toDF("g", "s", "t"), Seq("g"),
+      s, t.desc))
+    assert(e.getMessage.contains("s ASC, t DESC"), e.getMessage)
+  }
+
   test("property: global rank ≡ sorted-sequence index under any values") {
     import spark.implicits._
     val genV = Gen.choose(-1000L, 1000L)

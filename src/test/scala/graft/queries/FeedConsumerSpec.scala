@@ -27,8 +27,9 @@ import graft.cdc.FeedConsumer
   *  6. RESEED REPLAY — an un-committed reseed batch republishes
   *     byte-identically.
   *  7. STALLED consumer — its un-committed batch listed a generation the
-  *     prune has since swept; the restart must fail loudly and never
-  *     publish a frontier past the swept generation.
+  *     prune has since swept; the restart must fail loudly, in that
+  *     replayed batch, and publish no frontier past or below its first
+  *     run's.
   *
   * The relay chain and the min/max replica (second row): stage 2 equals
   * a recompute of stage 1, relay generations carry watermark rows, the
@@ -162,6 +163,9 @@ class FeedConsumerSpec extends SparkSpec {
       assert(stalled.state.readAt("applied", v).head().getLong(0) < 1L,
         s"the stalled consumer published a frontier past v0 at $v"))
     assert(appliedOf(stalled) < 1L)
+    // the replayed batch failed before publishing: no regressed frontier
+    assert(appliedOf(stalled) == 0L,
+      "the replayed batch must not republish a lower applied frontier")
   }
 
   test("feed chain: stage-2 matches a direct recompute of stage 1, " +
