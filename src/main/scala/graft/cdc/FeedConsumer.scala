@@ -29,8 +29,8 @@ import graft.streaming.Drive
   *    cannot retract a maximum, and the recompute source the threat
   *    path needs lives on the producer's side of the wire, so the
   *    consumer maintains its OWN upstream REPLICA (`up`) from the same
-  *    feed ([[ViewDelta.applyDelta]]), publishes it first and reads the
-  *    just-published parquet back as [[ViewDelta.cascadeAggStats]]'s
+  *    feed ([[ViewDelta.applyDelta]]), writes it first and reads the
+  *    just-written parquet back as [[ViewDelta.cascadeAggStats]]'s
   *    recompute source. The replica is view-sized (group cardinality),
   *    never base-sized — the price any downstream index/cache pays.
   *
@@ -89,12 +89,13 @@ import graft.streaming.Drive
   *    downstream — the next real one would then trip the gap check.
   *    Watermark rows advance the frontier and reach no fold.
   *
-  * State layout (the consumer's OWN [[VersionedState]], anchored on
-  * `down`, versioned by the CONSUMER's batch ids): the fold's non-anchor
-  * kinds first (rollup: the relay `feed`; min/max: the replica `up`),
-  * then `applied` — one row holding the upstream-version frontier and a
-  * provenance marker (`via` = 'feed' | 'reseed') — and the anchoring
-  * `down` last; all reads are bounded (`readLatestBefore(cid)`), so a
+  * State layout (the consumer's OWN [[VersionedState]], versioned by
+  * the CONSUMER's batch ids, each version committed by its manifest
+  * after all of its kinds are written): `applied` — one row holding the
+  * upstream-version frontier and a provenance marker (`via` = 'feed' |
+  * 'reseed') — and `down`, plus the fold's own kinds (rollup: the relay
+  * `feed`; min/max: the replica `up`, which its `down` reads back); all
+  * reads are bounded (`readLatestBefore(cid)`), so a
   * consumer-side checkpoint replay folds into its pre-batch state and
   * republishes byte-identically. (A replayed RESEED batch re-reads the
   * producer's then-latest snapshot: value-correct and convergent, which
@@ -118,11 +119,10 @@ final class FeedConsumer private (
     reseed: Option[() => (Long, DataFrame)],
     fold: FeedConsumer.Fold) {
 
-  /** The consumer's own versioned state (anchor `down`) — readable by
-    * the gate after the stream stops, prunable like any maintained
-    * store.
+  /** The consumer's own versioned state — readable by the gate after
+    * the stream stops, prunable like any maintained store.
     */
-  val state = new VersionedState(spark, store, "down")
+  val state = new VersionedState(spark, store)
 
   /** One AvailableNow drive of the tail: process every feed generation
     * published since the consumer's checkpoint, then stop. Call again
@@ -182,27 +182,22 @@ final class FeedConsumer private (
             s"feed retention outran this consumer: replayed batch $cid " +
               s"would publish applied frontier $frontier below its first " +
               s"run's $was (its feed generations were swept since)"))
-        val (first, down) = fold(batch, fresh, snapshot)
         val s2 = spark
         import s2.implicits._
-        // non-anchor first, anchor last: a crash between publishes
-        // leaves the previous version current
-        first ++ Seq(
-          Drive.Kinds("applied" ->
-            Seq((frontier, if (snapshot.isEmpty) "feed" else "reseed"))
-              .toDF("upstream_version", "via")),
-          down)
+        Drive.Kinds("applied" ->
+          Seq((frontier, if (snapshot.isEmpty) "feed" else "reseed"))
+            .toDF("upstream_version", "via")) +: fold(batch, fresh, snapshot)
       }), checkpoint)
 }
 
 object FeedConsumer {
 
   /** One aggregate's fold over a batch's fresh feed rows (and, after a
-    * reseed, the snapshot it re-bases on): the stages published before
-    * `applied`, and the anchoring `down` stage published after it.
+    * reseed, the snapshot it re-bases on): the stages it publishes,
+    * `down` among them.
     */
-  private type Fold = (Drive.Batch, DataFrame, Option[DataFrame]) =>
-    (Seq[Drive.Stage], Drive.Stage)
+  private type Fold =
+    (Drive.Batch, DataFrame, Option[DataFrame]) => Seq[Drive.Stage]
 
   /** The count/sum rollup consumer: `down` holds `(groupName, n_rows,
     * sum_<v>…)` of the feed's images grouped by `groupOf`. `reseed`
@@ -240,11 +235,10 @@ object FeedConsumer {
                 ViewDelta.diffTouched(was, down,
                   fresh.select(groupOf.as(groupName)).distinct(),
                   Seq(groupName), statCols)
-            Seq(Drive.Kinds("feed" ->
-              f.unionByName(watermarkRow(f))
-                .withColumn("feed_version", lit(batch.id))))
+            Seq("feed" -> f.unionByName(watermarkRow(f))
+              .withColumn("feed_version", lit(batch.id)))
           }
-        (relay, Drive.Kinds("down" -> down))
+        Seq(Drive.Kinds(relay :+ ("down" -> down): _*))
       })
 
   /** The min/max consumer: `down` holds the rollup's columns plus
@@ -273,8 +267,8 @@ object FeedConsumer {
         val latest = RankOne(fresh, upstreamKeys, col("feed_version").desc)
         // replica first, then read the parquet back as the threat
         // path's recompute source (one materialized pass)
-        (Seq(Drive.Kinds("up" ->
-            ViewDelta.applyDelta(up, latest, upstreamKeys, valueCols))),
+        Seq(Drive.Kinds("up" ->
+            ViewDelta.applyDelta(up, latest, upstreamKeys, valueCols)),
           Drive.After("down", () => ViewDelta.cascadeAggStats(down, fresh,
             batch.published("up"), groupOf, groupName, valueCols,
             extremumCol)))

@@ -78,7 +78,7 @@ import org.apache.spark.sql.types.DoubleType
   * true under change streams is what the incremental maintenance
   * operators are for. A [[Freshness]] token turns the contract from
   * assumed into ENFORCED for stores that version their generations: a
-  * registration certified at anchor version N stops routing the moment
+  * registration certified at committed version N stops routing the moment
   * the live frontier moves past N (`q_cdc_mv_fresh` gates both halves —
   * the stale fall-through and the re-certified resume).
   * The gates (`q_cdc_mv_rewrite`, `q_cdc_mv_rollup`,
@@ -122,7 +122,7 @@ object MvRewrite {
     * rail for the "always-fresh rollup" story): the SEMANTICS CONTRACT
     * above puts freshness on the caller, and a registration left
     * installed across an unapplied maintenance delta would silently
-    * serve stale answers. A token pins the maintained store's anchor
+    * serve stale answers. A token pins the maintained store's committed
     * version this registration was CERTIFIED against (`expected`,
     * normally `VersionedState.latestVersion` at registration time,
     * with the `mv` thunk reading exactly that generation); the rule

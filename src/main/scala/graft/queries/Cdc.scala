@@ -1002,9 +1002,9 @@ object Cdc extends graft.GateFamily {
     }
     // generation 1 bootstraps the maintained state; generation 2 lands
     // while the stream is DOWN, and the restarted run must resume from
-    // the checkpoint and APPLY it as one step. The agg kind anchors
-    // version discovery and is published LAST per batch.
-    val drive = Drive.maintain(s, base, "agg",
+    // the checkpoint and APPLY it as one step. Each batch's version
+    // becomes visible only when its manifest commits, after every kind.
+    val drive = Drive.maintain(s, base,
         Seq(Seq(s"$staged/gen1" -> "g1"), Seq(s"$staged/gen2" -> "g2")),
         sideTaggedStream(s)) { batch =>
       val (aDelta, bDelta) = sideDeltas(batch.df)
@@ -1021,9 +1021,7 @@ object Cdc extends graft.GateFamily {
               .bootstrap(aS, bS, "id", "g", "balance")
               .withColumn("via", lit("bootstrap")), aS, bS)
         }
-      // the two side states are mutually independent: concurrent
-      Seq(Drive.Kinds("aState" -> aS, "bState" -> bS),
-        Drive.Kinds("agg" -> agg))
+      Seq(Drive.Kinds("aState" -> aS, "bState" -> bS, "agg" -> agg))
     }
     drive.state.readLatest("agg").get
       .select(col("g"), col("n_members"), col("total").as("total_balance"),
@@ -1077,9 +1075,9 @@ object Cdc extends graft.GateFamily {
     * moves/deletes, gen 3 the B-side balance updates/deletes. Each
     * delta batch runs [[graft.cdc.IncrementalAggView.stepWithTouched]]
     * and publishes `ViewDelta.diffTouched(prev, next, touched)` as its
-    * own `feed` kind — NON-anchor, so the agg-last publish discipline
-    * covers a crash between the feed and its anchoring agg version,
-    * and the bounded `readLatestBefore` fold makes a checkpoint-
+    * own `feed` kind — written with the other kinds before the
+    * version's manifest commits, so a crash between them leaves the
+    * previous version current, and the bounded `readLatestBefore` fold makes a checkpoint-
     * replayed batch's feed byte-identical (proven by re-delivery in
     * `StreamChangefeedSpec`). An in-handler `require` witnesses the
     * PRUNED plan: both diff sides must be semi-joined to the step's
@@ -1091,10 +1089,10 @@ object Cdc extends graft.GateFamily {
     * ([[graft.operators.ViewDelta.cascadeAgg]]) from each batch's feed
     * alone — the full dataflow chain live (stream → view → feed →
     * downstream rollup), every stage under the same bounded-read /
-    * non-anchor-first / replay-idempotent discipline; the bootstrap
+    * manifest-last / replay-idempotent discipline; the bootstrap
     * batch cascades the all-'c' snapshot feed into an empty frame, so
     * one rule (`w += feed`) maintains every batch. The stage reads the
-    * feed back from its OWN just-published parquet (the wire a real
+    * feed back from its OWN just-written parquet (the wire a real
     * consumer tails) rather than re-executing the diff lineage. Gated
     * by [[qCdcStreamCascade]]; the flag keeps each gate priced for its
     * own contract ([[qCdcStreamChangefeed]] doesn't pay the extra
@@ -1165,7 +1163,7 @@ object Cdc extends graft.GateFamily {
     val gens = (Seq("gen1" -> "g1", "gen2" -> "g2", "gen3" -> "g3")
         .map { case (g, p) => s"$staged/$g" -> p } ++
       staged4.map(s4 => s"$s4/gen4" -> "g4")).map(Seq(_))
-    Drive.maintain(s, base, "agg", gens, sideTaggedStream(s),
+    Drive.maintain(s, base, gens, sideTaggedStream(s),
         keepLast = Some(2), afterRun = i => afterRun(i.toLong)) { batch =>
       val id = batch.id
       val (aDelta, bDelta) = sideDeltas(batch.df)
@@ -1203,18 +1201,16 @@ object Cdc extends graft.GateFamily {
               balanceView(boot).filter(lit(false)), balanceView(boot),
               Seq("g"), feedCols))
         }
-      // non-anchor kinds first (feed and cascade included), the
-      // version-anchoring agg LAST. The feed rides its generation id as
+      // every kind is written before the version's manifest commits
+      // (feed and cascade included). The feed rides its generation id as
       // a COLUMN, not just a path segment: a decoupled consumer tailing
       // the published files ([[graft.cdc.FeedConsumer]]) needs it
       // in-band to dedup at-least-once re-deliveries and detect
       // retention gaps.
-      val feedStage = Drive.Kinds("feed" ->
-        feed.withColumn("feed_version", lit(id)))
       // the CASCADE stage (when the caller gates it), maintained IN the
       // loop purely from this batch's feed
       // (graft.operators.ViewDelta.cascadeAgg) — read back from the
-      // feed's OWN just-published parquet, exactly the wire a
+      // feed's OWN just-written parquet, exactly the wire a
       // downstream consumer tails. The bounded read keeps its replay
       // byte-identical exactly like the feed's, and the bootstrap batch
       // cascades the all-'c' snapshot feed into an empty frame, so one
@@ -1225,9 +1221,9 @@ object Cdc extends graft.GateFamily {
         graft.cdc.FeedConsumer.rollupFold(batch.before("down"), published,
           segOf, "seg", feedCols)
       })
-      (feedStage +: (if (cascade) Seq(downStage) else Nil)) ++
-        Seq(Drive.Kinds("aState" -> aS2, "bState" -> bS2),
-          Drive.Kinds("agg" -> agg2))
+      Drive.Kinds("feed" -> feed.withColumn("feed_version", lit(id)),
+        "aState" -> aS2, "bState" -> bS2, "agg" -> agg2) +:
+        (if (cascade) Seq(downStage) else Nil)
     }
   }
 
@@ -1317,7 +1313,7 @@ object Cdc extends graft.GateFamily {
         // the producer's latest retained VIEW generation, read from its
         // published store — the snapshot topic a fallen-behind consumer
         // re-bases on (never the producer's base tables)
-        val ps = new graft.cdc.VersionedState(s, s"$base/store", "agg")
+        val ps = new graft.cdc.VersionedState(s, s"$base/store")
         val v = ps.versions.max
         (v, balanceView(ps.readAt("agg", v)))
       }),
@@ -1832,7 +1828,7 @@ object Cdc extends graft.GateFamily {
     * shape, and a torn or non-idempotent state publish would shift a
     * group. State versions publish through [[graft.cdc.VersionedState]]
     * (Hadoop FileSystem API, batch-id-keyed idempotent overwrites,
-    * version-anchoring agg kind written last).
+    * each version committed by its manifest after every kind).
     *
     * The oracle is IDENTICAL to the batch gate's closed form — the
     * maintained view must not depend on the delivery mode.
@@ -1885,7 +1881,7 @@ object Cdc extends graft.GateFamily {
     // generation 1 bootstraps the maintained state; generation 2 lands
     // while the stream is DOWN and the restarted run must resume from
     // the checkpoint and APPLY it as one step
-    Drive.maintain(s, base, "agg",
+    Drive.maintain(s, base,
         Seq(Seq(s"$staged/gen1" -> "g1"), Seq(s"$staged/gen2" -> "g2")),
         in => s.readStream
           .schema("side STRING, id INT, op STRING, lsn LONG, " +
@@ -1912,8 +1908,7 @@ object Cdc extends graft.GateFamily {
                 "g", "amount")
               .withColumn("via", lit("bootstrap")), fS, dS)
         }
-      Seq(Drive.Kinds("fState" -> fS, "dState" -> dS),
-        Drive.Kinds("agg" -> agg))
+      Seq(Drive.Kinds("fState" -> fS, "dState" -> dS, "agg" -> agg))
     }.state
   }
 
@@ -1966,7 +1961,7 @@ object Cdc extends graft.GateFamily {
       .select(col("d_id"), col("g"))
       .write.mode("overwrite").parquet(dimPath)
     // the registration carries the freshness token (round-12): it is
-    // certified against the drive's CURRENT anchor frontier, so if a
+    // certified against the drive's CURRENT committed version, so if a
     // later maintenance batch published behind this gate's back the
     // rule would fall through to the base instead of serving the
     // now-stale mvPath copy — the q_cdc_mv_fresh rail on the flagship
@@ -2110,7 +2105,7 @@ object Cdc extends graft.GateFamily {
     // would un-route every holder of this registration at once. The
     // rowsHint (footer metadata) feeds the statistics-based choice.
     val store = gateTmpDir("graft_mv_segnation", d) + "/store"
-    val state = new graft.cdc.VersionedState(s, store, "mv")
+    val state = new graft.cdc.VersionedState(s, store)
     if (state.latestVersion.isEmpty)
       state.publish("mv", 0L, s.read.parquet(s"$d/customer.parquet")
         .groupBy(col("c_mktsegment"), col("c_nationkey"))
@@ -2172,7 +2167,7 @@ object Cdc extends graft.GateFamily {
     // versioned + freshness-pinned like every catalog member (round-12
     // verdict item #5)
     val ordStore = gateTmpDir("graft_mv_multi", d) + "/ordmvstore"
-    val ordState = new graft.cdc.VersionedState(s, ordStore, "mv")
+    val ordState = new graft.cdc.VersionedState(s, ordStore)
     if (ordState.latestVersion.isEmpty)
       ordState.publish("mv", 0L, s.read.parquet(ordBase)
         .groupBy(col("o_orderpriority"))
@@ -2248,7 +2243,7 @@ object Cdc extends graft.GateFamily {
     * discipline couldn't exercise.
     *
     * The gate runs the full lifecycle: certify a registration at
-    * anchor version 0 (its `mv` thunk reads exactly v0, its token pins
+    * committed version 0 (its `mv` thunk reads exactly v0, its token pins
     * frontier = 0); apply a maintenance delta — the base parquet moves
     * to generation 2 AND the store publishes v1 — while the v0
     * registration stays installed; query the base. The STALE phase
@@ -2269,7 +2264,7 @@ object Cdc extends graft.GateFamily {
     val base = graft.streaming.Drive.fresh(s,
       gateTmpDir("graft_mv_fresh", d))
     val (basePath, store) = (s"$base/mv_fresh_base", s"$base/store")
-    val state = new graft.cdc.VersionedState(s, store, "mv")
+    val state = new graft.cdc.VersionedState(s, store)
     def members(withDelta: Boolean): DataFrame =
       s.read.parquet(s"$d/customer.parquet").select(
         lower(col("c_mktsegment")).as("g"),
@@ -2351,13 +2346,13 @@ object Cdc extends graft.GateFamily {
     members(withDelta = true).write.mode("overwrite").parquet(basePath)
     // STALE exact-grain member: certified at v0 (pre-delta content),
     // then maintenance publishes v1 while the v0 registration stays
-    val exact = new graft.cdc.VersionedState(s, exactStore, "mv")
+    val exact = new graft.cdc.VersionedState(s, exactStore)
     exact.publish("mv", 0L, members(withDelta = false).groupBy(col("g"))
       .agg(count(lit(1)).as("n"), sum(col("m")).as("sv")))
     exact.publish("mv", 1L, members(withDelta = true).groupBy(col("g"))
       .agg(count(lit(1)).as("n"), sum(col("m")).as("sv")))
     // FRESH finer member: post-delta (g, sub) rollup, frontier = v0
-    val fine = new graft.cdc.VersionedState(s, fineStore, "mv")
+    val fine = new graft.cdc.VersionedState(s, fineStore)
     fine.publish("mv", 0L,
       members(withDelta = true).groupBy(col("g"), col("sub"))
         .agg(count(lit(1)).as("n"), sum(col("m")).as("sv")))
@@ -2548,7 +2543,7 @@ object Cdc extends graft.GateFamily {
     // publish the MAINTAINED rollup — versioned + freshness-pinned
     // (round-12 verdict item #5) — and the post-delta base tables.
     // Version 1 = one maintenance generation past the bootstrap.
-    val mvState = new graft.cdc.VersionedState(s, mvStore, "mv")
+    val mvState = new graft.cdc.VersionedState(s, mvStore)
     mvState.publish("mv", 1L,
       agg2.select(col("g"), col("n_members"), col("total")))
     fS2.select(col("order_id"), col("cust_id"), col("amount"))
@@ -2679,7 +2674,7 @@ object Cdc extends graft.GateFamily {
     // staleness was only conventionally prevented) — and the post-delta
     // base (the live joined state a consumer's base table would hold).
     // Version 2 = two maintenance generations past the bootstrap.
-    val mvState = new graft.cdc.VersionedState(s, mvStore, "mv")
+    val mvState = new graft.cdc.VersionedState(s, mvStore)
     mvState.publish("mv", 2L,
       agg3.select(col("g"), col("n_members"), col("total")))
     IncrementalAggView.contribs(aS3, bS3, "id", "g", "balance")
@@ -2779,7 +2774,7 @@ object Cdc extends graft.GateFamily {
     val agg2 = agg2raw.stage() // MV write + the marker join
     // versioned + freshness-pinned (round-12 verdict item #5); version
     // 1 = one maintenance generation past the bootstrap
-    val mvState = new graft.cdc.VersionedState(s, mvStore, "mv")
+    val mvState = new graft.cdc.VersionedState(s, mvStore)
     mvState.publish("mv", 1L,
       agg2.select(col("g"), col("n_members"), col("total"),
         col("mn"), col("mx")))

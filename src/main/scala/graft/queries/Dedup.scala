@@ -516,7 +516,7 @@ object Dedup extends graft.GateFamily {
     // the checkpoint and APPLY it as one step. The step reads strictly
     // below its batch id (CC re-application happens to be idempotent,
     // but the discipline is uniform across gates).
-    Drive.maintain(s, base, "labels",
+    Drive.maintain(s, base,
         Seq(Seq(s"$base/gen1" -> "g1"), Seq(s"$base/gen2" -> "g2")),
         in => s.readStream.schema("a INT, b INT").parquet(in)) { batch =>
       val next = batch.before("labels") match {
@@ -551,8 +551,8 @@ object Dedup extends graft.GateFamily {
     * and combine markers exactly as the batch gate does ('recomputed'
     * outranks, carried-through-gen-3 clusters keep their gen-2
     * witness). Both label AND edge state version through
-    * [[graft.cdc.VersionedState]] (labels as the version anchor,
-    * written last — a crash between the two publishes leaves the
+    * [[graft.cdc.VersionedState]] (both written before the version's
+    * manifest commits — a crash between the two writes leaves the
     * previous generation current).
     *
     * The oracle is IDENTICAL to the batch tombstone gate's closed
@@ -600,7 +600,7 @@ object Dedup extends graft.GateFamily {
     // append-only (the resumed stream must take the O(Δ) step);
     // generation 3 is the tombstone mid-stream: detect, recompute
     // scoped, combine
-    Drive.maintain(s, base, "labels",
+    Drive.maintain(s, base,
         Seq("gen1" -> "g1", "gen2" -> "g2", "gen3" -> "g3")
           .map { case (g, p) => Seq(s"$base/$g" -> p) },
         in => s.readStream.schema("a INT, b INT, op STRING").parquet(in)) {
@@ -631,8 +631,7 @@ object Dedup extends graft.GateFamily {
               .components(nodes, ins, "node", "a", "b")
               .withColumn("via", lit("bootstrap")), ins)
         }
-      // edge state first, the version-anchoring labels LAST
-      Seq(Drive.Kinds("edges" -> edges), Drive.Kinds("labels" -> labels))
+      Seq(Drive.Kinds("edges" -> edges, "labels" -> labels))
     }.state.readLatest("labels").get
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),

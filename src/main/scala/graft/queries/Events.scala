@@ -1130,7 +1130,7 @@ object Events extends graft.GateFamily {
     // batches 0–1 build the explicit watermark; the stragglers land
     // while the stream is DOWN, and the restarted run must classify them
     // against the CHECKPOINTED watermark state
-    Drive.maintain(s, base, "wm",
+    Drive.maintain(s, base,
         Seq(Seq(0, 1), Seq(2)).map(_.map(i => s"$staged/s$i" -> s"s$i")),
         in => s.readStream
           .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")

@@ -23,7 +23,8 @@ import graft.cdc.VersionedState
   *    in a `foreachBatch` handler: the batch is cached for the step and
   *    released in a `finally`, even when the step throws; the step reads
   *    the state strictly below its batch id and returns the kinds to
-  *    publish, in order, anchor last; the drive publishes.
+  *    publish; the drive writes them and commits the version's
+  *    manifest last.
   *
   * State partitions sized to state volume: every micro-batch of a
   * stateful query commits one delta file PER state partition (a
@@ -96,20 +97,21 @@ object Drive {
       }
       .outputMode(OutputMode.Update)
 
-  /** One stage of a micro-batch's publish. Stages publish in order; the
-    * anchor kind is the last stage, alone, so a crash between stages
+  /** One stage of a micro-batch's publish. Every stage is written
+    * before the version's manifest commits, so a crash between stages
     * leaves the previous version current instead of a torn one.
     */
   sealed trait Stage
 
-  /** Kinds written together: mutually independent non-anchor kinds
-    * publish concurrently ([[VersionedState.publishConcurrently]]).
+  /** Kinds written at once: every [[Kinds]] of a step is written in one
+    * concurrent [[VersionedState.write]], before any [[After]].
     */
   final case class Kinds(kinds: (String, DataFrame)*) extends Stage
 
-  /** A kind built only when its turn comes, so it may read back
-    * ([[Batch.published]]) a kind an earlier stage just published — one
-    * materialized pass instead of re-executing that kind's lineage.
+  /** A kind built only when its turn comes, after the step's [[Kinds]]
+    * and any earlier `After`, so it may read back ([[Batch.published]])
+    * a kind just written — one materialized pass instead of
+    * re-executing that kind's lineage.
     */
   final case class After(kind: String, build: () => DataFrame)
       extends Stage
@@ -125,27 +127,32 @@ object Drive {
     def before(kind: String): Option[DataFrame] =
       state.readLatestBefore(kind, id)
 
-    /** `kind` as this batch published it (for [[After]]). */
-    def published(kind: String): DataFrame = state.readAt(kind, id)
+    /** `kind` as this batch wrote it (for [[After]]). */
+    def published(kind: String): DataFrame = state.publishedAt(kind, id)
+      .getOrElse(sys.error(s"batch $id has not written '$kind'"))
   }
 
   /** The `foreachBatch` handler over `state`: cache the batch, run
-    * `step`, publish its stages in order, then — with `keepLast` — prune
-    * live; the batch is unpersisted in a `finally`, so a failing step
-    * surfaces its own exception and leaves no cached batch behind. A
-    * handler that prunes after its own publish keeps ≥ 2 versions, so a
-    * re-delivered batch still finds the version it folds into.
+    * `step`, write its [[Kinds]] at once and then each [[After]], commit
+    * the version's manifest, then — with `keepLast` — prune live; a step
+    * with no stages commits no version. The batch is unpersisted in a
+    * `finally`, so a failing step surfaces its own exception and leaves
+    * no cached batch behind. A handler that prunes after its own commit
+    * keeps ≥ 2 versions, so a re-delivered batch still finds the version
+    * it folds into.
     */
   def versioned(state: VersionedState, keepLast: Option[Int] = None)(
       step: Batch => Seq[Stage]): (DataFrame, Long) => Unit =
     (batch, id) => {
       val b = batch.cache()
       try {
-        step(new Batch(b, id, state)).foreach {
-          case Kinds(one) => state.publish(one._1, id, one._2)
-          case Kinds(kinds @ _*) => state.publishConcurrently(id, kinds: _*)
-          case After(kind, build) => state.publish(kind, id, build())
+        val (kinds, afters) = step(new Batch(b, id, state)).partitionMap {
+          case Kinds(ks @ _*) => Left(ks)
+          case a: After => Right(a)
         }
+        val written = state.write(id, kinds.flatten: _*) ++
+          afters.flatMap(a => state.write(id, a.kind -> a.build()))
+        if (written.nonEmpty) state.commit(id, written)
         keepLast.foreach(n => state.prune(keepLast = n))
       } finally b.unpersist(): Unit
     }
@@ -159,15 +166,14 @@ object Drive {
   /** The maintained-state drive under `base` (wiped by the caller via
     * [[fresh]]): `source(in)` tails `$base/in`, each generation lands
     * its `(staged dir, prefix)` pairs there and restarts the stream, and
-    * every micro-batch runs [[versioned]] over the `$base/store` state
-    * anchored at `anchor`.
+    * every micro-batch runs [[versioned]] over the `$base/store` state.
     */
-  def maintain(s: SparkSession, base: String, anchor: String,
+  def maintain(s: SparkSession, base: String,
       gens: Seq[Seq[(String, String)]], source: String => DataFrame,
       keepLast: Option[Int] = None, afterRun: Int => Unit = _ => ())(
       step: Batch => Seq[Stage]): Maintained = {
     val (in, ck) = (s"$base/in", s"$base/ck")
-    val state = new VersionedState(s, s"$base/store", anchor)
+    val state = new VersionedState(s, s"$base/store")
     def run(): Unit =
       await(source(in).writeStream
         .foreachBatch(versioned(state, keepLast)(step))

@@ -7,7 +7,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal bridge into `private[sql]` Column↔Expression conversion, so
   * graft's custom Catalyst expressions (e.g. `graft.functions.DotProduct`)
   * can be exposed through the public Column API, plus the direction and
-  * null placement of a sort-order column (`graft.operators.RankOne`).
+  * null placement of a sort-order column (`graft.operators.RankOne`)
+  * and the all-nullable schema a written frame reads back as
+  * (`graft.cdc.VersionedState`).
   * This is the conventional pattern for third-party Catalyst extensions;
   * nothing else from the private surface is touched.
   */
@@ -32,4 +34,9 @@ object GraftSqlBridge {
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `t` with every field nullable, nested ones included — the schema
+    * Spark's file source reports for what was written as `t`.
+    */
+  def nullable(t: types.StructType): types.StructType = t.asNullable
 }

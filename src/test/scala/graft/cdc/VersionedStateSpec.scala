@@ -15,6 +15,25 @@ class MockSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 object MockSchemeFileSystem { val Scheme = "graftmock" }
 
+/** [[MockSchemeFileSystem]]'s twin under its own scheme whose `delete`
+  * throws on the paths ending in [[FaultyDeleteFileSystem.failOn]] — a
+  * store that fails partway through a prune.
+  */
+class FaultyDeleteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(FaultyDeleteFileSystem.Scheme + ":///")
+  override def getScheme: String = FaultyDeleteFileSystem.Scheme
+  override def delete(p: org.apache.hadoop.fs.Path,
+      recursive: Boolean): Boolean =
+    if (FaultyDeleteFileSystem.failOn.exists(p.toUri.getPath.endsWith))
+      throw new java.io.IOException(s"injected delete failure: $p")
+    else super.delete(p, recursive)
+}
+object FaultyDeleteFileSystem {
+  val Scheme = "graftfaulty"
+  @volatile var failOn: Option[String] = None
+}
+
 /** Pins [[VersionedState]]'s cluster portability: version discovery,
   * reads, and idempotent publishes must all resolve through the Hadoop
   * FileSystem API, proven against a non-`file:` scheme where the round-8
@@ -35,7 +54,7 @@ class VersionedStateSpec extends SparkSpec {
   }
 
   test("latestVersion resolves through the Hadoop API on a non-file scheme") {
-    val vs = new VersionedState(spark, store, "agg")
+    val vs = new VersionedState(spark, store)
     assert(vs.latestVersion.isEmpty, "empty store must report no version")
 
     vs.publish("agg", 0L, df(Seq(("a", 1L))))
@@ -53,7 +72,7 @@ class VersionedStateSpec extends SparkSpec {
   }
 
   test("publish is idempotent under batch-id replay") {
-    val vs = new VersionedState(spark, store, "agg")
+    val vs = new VersionedState(spark, store)
     // checkpoint-replayed foreachBatch re-delivers the same batch id:
     // the overwrite must land the replayed content, not fail or append
     vs.publish("agg", 3L, df(Seq(("a", 2L), ("b", 5L))))
@@ -62,17 +81,17 @@ class VersionedStateSpec extends SparkSpec {
   }
 
   test("anchor kind alone drives version discovery") {
-    val vs = new VersionedState(spark, store, "agg")
-    // a newer side-state publish without its anchor (the torn-batch
-    // crash window) must NOT advance the visible version
-    vs.publish("aState", 7L, df(Seq(("x", 9L))))
+    val vs = new VersionedState(spark, store)
+    // a kind written by a batch whose manifest never commits (the
+    // torn-batch crash window) must NOT advance the visible version
+    vs.write(7L, "aState" -> df(Seq(("x", 9L))))
     assert(vs.latestVersion.contains(3L))
     assert(vs.readLatest("agg").get.count() == 2)
   }
 
   test("bounded read excludes the batch's own publish: a replayed " +
     "foreachBatch folds into the PRE-batch state, never its own") {
-    val vs = new VersionedState(spark, store, "agg")
+    val vs = new VersionedState(spark, store)
     // the crash window this guards: batch 3's publish completed but the
     // streaming checkpoint never committed it; on restart batch 3 is
     // re-delivered. An unbounded read returns v3 (the batch's own
@@ -98,14 +117,14 @@ class VersionedStateSpec extends SparkSpec {
     // self-contained store layout (round-11 advisory: the old version
     // of this test depended on the earlier tests' accumulated state, so
     // isolation or reordering broke it): agg v0 (1 row) / v3 (2 rows) /
-    // v5 (1 row), plus a torn side-state publish aState v7 whose anchor
+    // v5 (1 row), plus a torn side-state write aState v7 whose manifest
     // never landed
     val pruneStore = s"$store-prune"
-    val vs = new VersionedState(spark, pruneStore, "agg")
+    val vs = new VersionedState(spark, pruneStore)
     vs.publish("agg", 0L, df(Seq(("a", 1L))))
     vs.publish("agg", 3L, df(Seq(("a", 2L), ("b", 5L))))
     vs.publish("agg", 5L, df(Seq(("c", 1L))))
-    vs.publish("aState", 7L, df(Seq(("x", 9L))))
+    vs.write(7L, "aState" -> df(Seq(("x", 9L))))
     assert(vs.versions == Seq(0L, 3L, 5L))
     vs.prune(keepLast = 2)
     assert(vs.versions == Seq(3L, 5L))
@@ -113,8 +132,8 @@ class VersionedStateSpec extends SparkSpec {
     assert(vs.readLatestBefore("agg", 3L).isEmpty)
     assert(vs.readLatestBefore("agg", 5L).get.count() == 2)
     assert(vs.readLatest("agg").get.count() == 1)
-    // the torn non-anchor version is swept by the SAME retained set
-    // (orphan cleanup — it can never be read through the anchor)
+    // the torn uncommitted version is swept by the SAME retained set
+    // (orphan cleanup — no manifest ever lists it)
     val fs = new org.apache.hadoop.fs.Path(pruneStore)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(
@@ -126,12 +145,36 @@ class VersionedStateSpec extends SparkSpec {
     intercept[IllegalArgumentException](vs.prune(0))
   }
 
+  test("a prune that fails partway leaves every listed version readable " +
+    "(a version is retired by its manifest before its kinds)") {
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${FaultyDeleteFileSystem.Scheme}.impl",
+      classOf[FaultyDeleteFileSystem].getName)
+    val dir = tmpDir("graft-vstate-fault")
+    val vs = new VersionedState(spark,
+      s"${FaultyDeleteFileSystem.Scheme}://$dir/store")
+    val kinds = Seq("aState", "bState", "agg")
+    Seq(0L, 3L, 5L).foreach(v =>
+      vs.commit(v, vs.write(v, kinds.map(k => k -> df(Seq((k, v)))): _*)))
+    // the store dies deleting one kind of the retired version 0
+    FaultyDeleteFileSystem.failOn = Some("/agg/v0")
+    try intercept[java.io.IOException](vs.prune(keepLast = 2))
+    finally FaultyDeleteFileSystem.failOn = None
+    assert(vs.versions.nonEmpty)
+    for (v <- vs.versions; k <- kinds)
+      assert(vs.readAt(k, v).collect().map(_.getLong(1)).toSeq == Seq(v),
+        s"$k at listed version $v")
+    // the next prune finishes the sweep
+    vs.prune(keepLast = 2)
+    assert(vs.versions == Seq(3L, 5L))
+  }
+
   test("a stray non-numeric v* directory is skipped, not thrown on") {
     // a killed writer can leave a temp directory whose name starts with
     // 'v' but isn't a version (e.g. a copy tool's v5.parquet_tmp); reads
     // of the store must keep working rather than die in Long parsing
     val junkStore = s"$store-junk"
-    val vs = new VersionedState(spark, junkStore, "agg")
+    val vs = new VersionedState(spark, junkStore)
     vs.publish("agg", 2L, df(Seq(("a", 1L))))
     val fs = new org.apache.hadoop.fs.Path(junkStore)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -149,7 +192,7 @@ class VersionedStateSpec extends SparkSpec {
   test("prune reclaims AGED unparseable strays but never fresh ones " +
     "(round-12 advisory: skipped strays used to accumulate forever)") {
     val strayStore = s"$store-stray"
-    val vs = new VersionedState(spark, strayStore, "agg")
+    val vs = new VersionedState(spark, strayStore)
     vs.publish("agg", 1L, df(Seq(("a", 1L))))
     val fs = new org.apache.hadoop.fs.Path(strayStore)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -171,24 +214,24 @@ class VersionedStateSpec extends SparkSpec {
       "parallel, the anchor is rejected, and anchor-gated visibility " +
       "is unchanged") {
     val s2 = s"$store-conc"
-    val vs = new VersionedState(spark, s2, "agg")
-    // concurrent non-anchor publishes, anchor strictly after — the
-    // drive handlers' exact shape
-    vs.publishConcurrently(1L,
-      "aState" -> df(Seq(("a", 1L))), "bState" -> df(Seq(("b", 2L))))
-    // before the anchor lands, nothing is visible through versioned reads
+    val vs = new VersionedState(spark, s2)
+    // every kind of the batch written at once, the manifest strictly
+    // after — the drive handlers' exact shape
+    val manifest = vs.write(1L, "aState" -> df(Seq(("a", 1L))),
+      "bState" -> df(Seq(("b", 2L))), "agg" -> df(Seq(("g", 3L))))
+    val fs = new org.apache.hadoop.fs.Path(s2)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(Seq("aState", "bState", "agg").forall(k =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$s2/$k/v1/_SUCCESS"))))
+    // before the manifest lands, nothing is visible through versioned
+    // reads
     assert(vs.latestVersion.isEmpty)
-    vs.publish("agg", 1L, df(Seq(("g", 3L))))
+    vs.commit(1L, manifest)
     assert(vs.versions == Seq(1L))
     assert(vs.readLatest("aState").get.collect().map(_.getLong(1)).toSeq
       == Seq(1L))
     assert(vs.readLatest("bState").get.collect().map(_.getLong(1)).toSeq
       == Seq(2L))
-    // the anchor must never ride the concurrent path (publish-last
-    // discipline is the crash rail)
-    intercept[IllegalArgumentException] {
-      vs.publishConcurrently(2L, "agg" -> df(Seq(("x", 9L))))
-    }
   }
 
   /** A frame whose write job fails at run time with `msg`. */
@@ -204,9 +247,9 @@ class VersionedStateSpec extends SparkSpec {
 
   test("publishConcurrently: when two kinds fail, both errors surface " +
       "(one thrown, the other suppressed on it)") {
-    val vs = new VersionedState(spark, s"$store-conc-fail", "agg")
+    val vs = new VersionedState(spark, s"$store-conc-fail")
     val e = intercept[Throwable] {
-      vs.publishConcurrently(1L, "aState" -> failing("boom-aState"),
+      vs.write(1L, "aState" -> failing("boom-aState"),
         "bState" -> failing("boom-bState"), "cState" -> df(Seq(("c", 1L))))
     }
     def failed(t: Throwable) = Seq("aState", "bState")
@@ -222,10 +265,10 @@ class VersionedStateSpec extends SparkSpec {
   test("publishConcurrently: a caller interrupted while it waits keeps " +
       "its interrupt flag, and every publish is joined before it returns") {
     import org.apache.spark.sql.functions.udf
-    val vs = new VersionedState(spark, s"$store-conc-intr", "agg")
+    val vs = new VersionedState(spark, s"$store-conc-intr")
     val slowOne = udf { () => Thread.sleep(8000); 1L }.asNondeterministic()
     val caller = Thread.currentThread()
-    // interrupt the caller once its own publish is done and it is joining
+    // interrupt the caller once its own write is done and it is joining
     // the other one's thread (an interrupt during a Spark job may be
     // consumed inside Spark or Hadoop, which is not this contract)
     def joiningPublisher: Boolean = {
@@ -242,9 +285,9 @@ class VersionedStateSpec extends SparkSpec {
       caller.interrupt()
     })
     interrupter.start()
-    try vs.publishConcurrently(1L, "aState" -> df(Seq(("a", 1L))),
+    try vs.write(1L, "aState" -> df(Seq(("a", 1L))),
       "bState" -> spark.range(1).select(slowOne().as("x")))
-    catch { case _: Throwable => () } // the interrupted publish may fail
+    catch { case _: Throwable => () } // the interrupted write may fail
     finally {
       interrupter.join()
       assert(Thread.interrupted(), "interrupt flag was swallowed")

@@ -21,7 +21,7 @@ class DriveSpec extends SparkSpec {
     val base = tmpDir("graft-drive-spec")
     s.range(0, 10).toDF("x").write.parquet(s"$base/staged/gen1")
     s.range(10, 20).toDF("x").write.parquet(s"$base/staged/gen2")
-    val state = new VersionedState(s, s"$base/store", "total")
+    val state = new VersionedState(s, s"$base/store")
     val step = Drive.versioned(state) { batch =>
       // an action on the cached batch registers its persistent RDD
       val n = batch.df.count()
