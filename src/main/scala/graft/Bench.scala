@@ -25,8 +25,8 @@ object Bench {
     // micro-batch classes), measured at 1.4–3.4× a streaming gate's warm
     // cost. One trivial AvailableNow drive pays it outside every number.
     locally {
-      val wdir =
-        java.nio.file.Files.createTempDirectory("graft_bench_warm")
+      // per-JVM gate scratch, removed when the JVM exits
+      val wdir = graft.queries.Cdc.gateTmpDir("graft_bench_warm", sfDir)
       spark.range(4).write.mode("overwrite").parquet(s"$wdir/in")
       spark.readStream.schema("id LONG").parquet(s"$wdir/in")
         .writeStream
@@ -34,8 +34,6 @@ object Bench {
         .option("checkpointLocation", s"$wdir/ck")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      // the warmup scratch dir must not leak one temp tree per run
-      org.apache.commons.io.FileUtils.deleteQuietly(wdir.toFile): Unit
     }
     // Queries whose (small: pair-list / top-k / cluster-table) results
     // the eval composites q_dedup_recall / q_dedup_clusters /

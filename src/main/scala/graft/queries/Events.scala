@@ -723,10 +723,7 @@ object Events extends graft.GateFamily {
     val base = Drive.fresh(s, Cdc.gateTmpDir("graft_ss_outer", d))
     val (cDir, pDir, outDir, ck) =
       (s"$base/clicks", s"$base/purch", s"$base/out", s"$base/ck")
-    // _v2 suffix: the sentinel-ts recipe changed after the first staging
-    // (stageOnce trusts same-name trees byte-for-byte, so a recipe change
-    // must land under a fresh prefix — the staged-fixture discipline)
-    val staged = Cdc.stageOnce(s, "graft_ss_outer_staged_v2", d) { st =>
+    val staged = Cdc.stageOnce(s, "graft_ss_outer_staged", d) { st =>
       val ev = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))

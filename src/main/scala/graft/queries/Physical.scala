@@ -190,9 +190,7 @@ object Physical extends graft.GateFamily {
     }
   }
 
-  /** Hive-style partitioned orders, staged once per (version, sf) —
-    * shared across JVMs; deterministic bytes, atomic publish.
-    */
+  /** Hive-style partitioned orders, staged once per (JVM, sf). */
   private def partitionedOrders(s: SparkSession, d: String): String = {
     val staged = Cdc.stageOnce(s, "graft_part_orders", d) { st =>
       Tables.orders(s, d).write.partitionBy("o_orderpriority")

@@ -14,7 +14,7 @@ import graft.cdc.VersionedState
   *  - [[fresh]] wipes the gate's working dir: every invocation replays
   *    from nothing, so a stale checkpoint can never resume into it.
   *  - [[generations]] lands each generation's staged files in the live
-  *    input dirs (`Cdc.copyStaged`, pure file copies — no Spark job)
+  *    input dirs (pure file copies — no Spark job)
   *    while the stream is DOWN, then runs the query to termination: a
   *    full checkpoint restart per generation.
   *  - [[stateConf]] is the one conf window those runs share, restored
@@ -74,12 +74,25 @@ object Drive {
       run: () => Unit): Unit =
     stateConf(s, rocksDb) {
       gens.zipWithIndex.foreach { case (gen, i) =>
-        gen.foreach(l => graft.queries.Cdc.copyStaged(s, l.from, l.to,
-          l.prefix))
+        gen.foreach(land(s, _))
         run()
         afterRun(i)
       }
     }
+
+  /** Land `l` with pure filesystem copies — no Spark job. */
+  private def land(s: SparkSession, l: Land): Unit = {
+    val conf = s.sessionState.newHadoopConf()
+    val (src, dst) = (new Path(l.from), new Path(l.to))
+    val fs = src.getFileSystem(conf)
+    fs.mkdirs(dst)
+    fs.listStatus(src).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .zipWithIndex.foreach { case (p, i) =>
+        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
+          new Path(dst, s"${l.prefix}_${i}_${p.getName}"), false, conf)
+      }
+  }
 
   /** Start `w` on checkpoint `ck` and block until it terminates. */
   def await[T](w: DataStreamWriter[T], ck: String,

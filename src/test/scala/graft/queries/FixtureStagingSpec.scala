@@ -4,10 +4,10 @@ import graft.SparkSpec
 import graft.cdc.MockSchemeFileSystem
 
 /** Pins the gate fixture plumbing's cluster portability (round-9
-  * verdict item #6): `gateTmpDir` / `stageOnce` / `copyStaged` path
+  * verdict item #6): `gateTmpDir` / `stageOnce` / `Drive` landing path
   * handling must resolve through the Hadoop FileSystem API only. The
-  * whole streaming-FK-IVM gate — staged fixture build, atomic-rename
-  * publish, per-generation file copies, streaming source + checkpoint,
+  * whole streaming-FK-IVM gate — per-JVM scratch dir, staged fixture
+  * build, per-generation file copies, streaming source + checkpoint,
   * VersionedState publishes — runs with the fixture root pointed at a
   * registered NON-`file:` scheme, where the former `java.io.File`
   * listing/mtime walk would silently see nothing, and must land on the
@@ -34,9 +34,12 @@ class FixtureStagingSpec extends SparkSpec {
             r.getAs[String]("maintained_via")))).toMap
       val streamed = fold(Cdc.qCdcFkStreamIvm(spark, d))
       // the staged tree really lives under the mock-scheme root (the
-      // scheme is local-disk-backed, so the underlying dir is visible)
-      val staged = Option(new java.io.File(localRoot).list())
-        .getOrElse(Array.empty[String])
+      // scheme is local-disk-backed, so the underlying dir is visible),
+      // in the staged space of this JVM's scratch dir
+      val staged = Option(new java.io.File(localRoot).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .flatMap(j => Option(new java.io.File(j, "staged").list())
+          .getOrElse(Array.empty[String]))
       assert(staged.exists(_.startsWith("graft_fk_stream_ivm")),
         s"fixtures did not stage under the mock root: ${staged.toSeq}")
       val batch = fold(Cdc.qCdcFkAggView(spark, d))
